@@ -8,8 +8,7 @@ both variants sample the same noise distribution.
 
 Usage: ab_probe.py <case> [rounds]
 Cases: dsir (two-DF target vs fused target_pred),
-       overlap (old 3-shuffle self-join vs collect_set rewrite),
-       icedist (iceberg staging: hash repartition vs AQE rebalance).
+       overlap (old 3-shuffle self-join vs collect_set rewrite).
 """
 from __future__ import annotations
 
@@ -20,7 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench as benchmod
-import __spark_entry__ as entrymod
 from pyspark.sql import functions as F
 from wrangle_pypes_spark.session import get_session
 
@@ -98,18 +96,6 @@ def main():
 
         def run_b():
             return source_overlap(d, source_col="source", text_col="text")
-    elif case == "icedist":
-        qs = entrymod.queries()
-
-        def run_a():
-            os.environ["WPS_ICEBERG_WRITE_DIST"] = "hash"
-            try:
-                return qs["iceberg_optimize_orders"](spark, sf_dir)
-            finally:
-                del os.environ["WPS_ICEBERG_WRITE_DIST"]
-
-        def run_b():
-            return qs["iceberg_optimize_orders"](spark, sf_dir)
     else:
         raise SystemExit(f"unknown case {case}")
 

@@ -11,10 +11,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wrangle_pypes_spark import (
+    Attr,
     Cast,
     Create,
     CreateMultiple,
+    Default,
+    Gather,
     Get,
+    GetValues,
     Pipeline,
     SpecError,
     spark_schema_for,
@@ -258,3 +262,115 @@ def test_pipeline_explain_reports_spec_and_plan(spark, tables):
     assert "Pipeline spec for Flat" in text
     assert "key <-" in text
     assert "jvm_only=True" in text and "shuffles=0" in text
+
+
+# --- flat compile -----------------------------------------------------------
+
+def _analyzed_len(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString())
+
+
+def test_flat_compile_plan_grows_linearly(spark):
+    """A spec of n root Gets over n columns compiles to n column
+    references.  Wrapping the row as struct(<every column>) per field
+    made the analysed plan grow as n**2 (5x from n=8 to n=16; larger n
+    hits Spark's 25-field cap on printed structs)."""
+    def plan_len(n):
+        model = type(f"Wide{n}", (), {})
+        df = spark.range(1).select(*[F.lit(i).alias(f"c{i}") for i in range(n)])
+        p = Pipeline({model: {f"f{i}": Get(f"c{i}") for i in range(n)}})
+        return _analyzed_len(p.create_multiple(model, df))
+
+    small, large = plan_len(8), plan_len(16)
+    assert large < 2.5 * small, (small, large)
+
+
+def test_root_names_with_dots_and_backticks(spark):
+    """Root columns are referenced by their literal name: a `.` is not
+    read as struct nesting and a backtick is not read as quoting."""
+    class Odd:
+        pass
+
+    df = spark.createDataFrame([(1, 2, 3)], "`a.b` int, `c``d` int, e int")
+    p = Pipeline({Odd: {
+        "get_dot": Get("a.b"),
+        "get_tick": Get("c`d"),
+        "attr_dot": Attr("a.b"),
+        "attr_tick": Attr("c`d"),
+        "gather": Gather(["a.b", "c`d"]),
+        "values": GetValues(),
+    }})
+    row = p.create_multiple(Odd, df, audit=True).first()
+    assert row.asDict(True) == {
+        "get_dot": 1, "get_tick": 2, "attr_dot": 1, "attr_tick": 2,
+        "gather": {"a.b": 1, "c`d": 2}, "values": [1, 2, 3],
+        "_nulled_fields": []}
+
+
+def test_root_dotted_struct_column_nested_get(spark):
+    class Nested:
+        pass
+
+    df = spark.createDataFrame([((4, 5),)], "`s.t` struct<x: int, `y.z`: int>")
+    p = Pipeline({Nested: {"x": Get("s.t") | Get("x"),
+                           "yz": Get("s.t") | Attr("y.z")}})
+    assert p.create_multiple(Nested, df).first().asDict() == {"x": 4, "yz": 5}
+
+
+# --- compile memo -----------------------------------------------------------
+
+class Flex:
+    pass
+
+
+def test_memo_per_schema(spark):
+    """One Pipeline over two schemas differing in one field's type: the
+    truthiness test of Default is type-dispatched, so reusing one
+    schema's compile for the other would give wrong values."""
+    p = Pipeline({Flex: {"x": Get("x") | Default("-1") | Cast(int)}})
+    as_str = spark.createDataFrame([("0",), ("",)], "x string")
+    as_int = spark.createDataFrame([(0,), (7,)], "x int")
+    for _ in range(2):
+        assert [r.x for r in p.create_multiple(Flex, as_str).collect()] == [0, -1]
+        assert [r.x for r in p.create_multiple(Flex, as_int).collect()] == [-1, 7]
+
+
+def test_memo_reuses_compile_for_same_schema(spark):
+    p = Pipeline({Flex: {"x": Get("x")}})
+    first = p.compile(Flex, spark.createDataFrame([(1,)], "x long"))
+    again = p.compile(Flex, spark.createDataFrame([(2,)], "x long"))
+    assert all(a is b for a, b in zip(first, again))
+
+
+def test_memo_flipping_strict_recompiles(spark):
+    from pyspark.errors import NumberFormatException
+
+    df = spark.createDataFrame([("bad",)], "x string")
+    p = Pipeline({Flex: {"x": Get("x") | Cast(int)}}, strict=False)
+    assert p.create_multiple(Flex, df).first().x is None
+    p.strict = True
+    with pytest.raises(NumberFormatException):
+        p.create_multiple(Flex, df).collect()
+    p.strict = False
+    assert p.create_multiple(Flex, df).first().x is None
+
+
+def test_memo_honours_replaced_chain(spark):
+    """Replacing a field chain after a compile, in the root spec or a
+    child model's spec, takes effect on the next call."""
+    class Child:
+        pass
+
+    df = spark.createDataFrame([(1, 2)], "x long, y long")
+    root = {"v": Get("x"), "c": Create(Child)}
+    child = {"w": Get("x")}
+    p = Pipeline({Flex: root, Child: child})
+    assert p.create_multiple(Flex, df).first().asDict(True) == {
+        "v": 1, "c": {"w": 1}}
+    root["v"] = Get("y")
+    child["w"] = Get("y")
+    assert p.create_multiple(Flex, df).first().asDict(True) == {
+        "v": 2, "c": {"w": 2}}
+    p.transformations[Flex]["v"] = Get("x")
+    built, _ = p.get_or_create(Flex, df, df.select(F.lit(9).alias("v")), ["v"])
+    assert built.first().v == 1

@@ -225,3 +225,31 @@ def test_streaming_rollup_histogram_state_composes(spark, events, tmp_path):
             for r in rollup_build(events, group_cols=["event_type"],
                                   metrics=metrics).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("lo, hi", [(float("-inf"), 1.0), (0.0, float("inf")),
+                                    (float("nan"), 1.0)])
+def test_histogram_non_finite_bounds_raise(spark, lo, hi):
+    df = spark.createDataFrame([("g", 1.0)], "grp string, v double")
+    with pytest.raises(ValueError, match="finite"):
+        rollup_build(df, group_cols=["grp"],
+                     metrics={"h": ("histogram", "v", lo, hi, 4)})
+
+
+def test_histogram_column_names_read_like_f_col(spark):
+    """A dotted histogram column is a struct field, per segment, as in
+    F.col and the other metric kinds; a backticked name is literal."""
+    df = spark.createDataFrame(
+        [("g", (1.0,), 0.5), ("g", (3.0,), 2.5)],
+        "grp string, s struct<v: double>, `s.v` double")
+    rows = rollup_build(df, group_cols=["grp"], metrics={
+        "nested": ("histogram", "s.v", 0.0, 4.0, 4),
+        "flat": ("histogram", "`s.v`", 0.0, 4.0, 4),
+        "mx": ("max", "s.v"),
+    }).collect()
+    assert rows[0].nested == [0, 1, 0, 1]
+    assert rows[0].flat == [1, 0, 1, 0]
+    assert rows[0].mx == 3.0
+    with pytest.raises(ValueError, match="column name syntax"):
+        rollup_build(df, group_cols=["grp"],
+                     metrics={"h": ("histogram", "s`v", 0.0, 4.0, 4)})

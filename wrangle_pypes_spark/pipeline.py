@@ -2,11 +2,20 @@
 
 Parity target: reference ``wrangle_pypes/pipeline.py``.  The reference
 interprets the spec dict record-at-a-time (``pipeline.py:35-51``); here
-the same spec compiles ONCE into a list of Column expressions, and
-``create_multiple(model, df)`` is ``df.select(*exprs)`` — columnar,
-whole-stage-codegen'd, lazily executed, Catalyst-optimized (projection
-pushdown into the Parquet scan comes for free because every field chain
-is a native expression over the source columns).
+the same spec compiles into a flat list of Column expressions, one per
+model field, and ``create_multiple(model, df)`` is ``df.select(*exprs)``
+— columnar, whole-stage-codegen'd, lazily executed, Catalyst-optimized
+(projection pushdown into the Parquet scan comes for free because every
+field chain is a native expression over the source columns).
+
+The select list grows linearly with the spec: a field read off the
+input row is a plain column reference, and only ``Create`` /
+``CreateMultiple`` build a struct.  A ``Pipeline`` memoizes the list per
+(model, input schema, ``strict``, session), so a second call over a
+DataFrame of the same schema — the next micro-batch, the next pass,
+``get_or_create`` after ``create_multiple`` — reuses it instead of
+compiling and re-walking the spec.  The memo is checked against the
+spec's field chains on every call, so replacing a chain recompiles.
 
 Scale notes: a compiled pipeline carries no per-record Python; the only
 data movement is whatever the enclosing plan needs.  ``get_or_create``
@@ -21,7 +30,7 @@ from __future__ import annotations
 
 import dataclasses
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Mapping, Optional, Sequence
+from typing import Any, Mapping, NamedTuple, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
@@ -29,7 +38,7 @@ from pyspark.sql import types as T
 
 from .errors import SpecError, TransformationError
 from .models import spark_schema_for
-from .transformations import Chain, CompileContext, Transformation
+from .transformations import CompileContext, Transformation, quoted_col
 
 __all__ = ("Pipeline", "to_instances")
 
@@ -37,6 +46,20 @@ __all__ = ("Pipeline", "to_instances")
 # get_or_create.  (AQE would usually pick this up too; the hint makes the
 # plan deterministic for the common "small dim table" case.)
 _BROADCAST_ROW_THRESHOLD = 10_000_000 // 100  # ~100k rows, conservative
+
+# Compiled select lists a Pipeline keeps; past this many (model, schema,
+# strict, session) keys the memo starts over rather than grow unbounded.
+_MEMO_MAX = 32
+
+
+class _Compiled(NamedTuple):
+    """One memoized compile: the spec entries ``(model, field, chain)``
+    it was compiled from, the select list, and the ``_nulled_fields``
+    audit column over the select list's output names."""
+
+    spec: tuple
+    exprs: list[Column]
+    nulled: Column
 
 
 @dataclass
@@ -56,12 +79,10 @@ class Pipeline:
 
     transformations: Mapping[type, Mapping[str, Transformation]]
     strict: bool = True
+    _memo: dict = dc_field(default_factory=dict, init=False, repr=False,
+                           compare=False)
 
     # -- compilation -------------------------------------------------------
-
-    def _ctx(self, model: type | None = None) -> CompileContext:
-        return CompileContext(pipeline=self, strict=self.strict,
-                              model=model.__name__ if model else None)
 
     def _spec_for(self, model: type) -> Mapping[str, Transformation]:
         try:
@@ -70,21 +91,22 @@ class Pipeline:
             raise SpecError(f"no spec registered for model {model.__name__!r}")
 
     def _compile_model(self, ctx: CompileContext, model: type, col: Column,
-                       dtype: T.DataType | None) -> tuple[Column, T.StructType]:
-        """Compile a model's spec against the value `col` — used by the
-        root compile and recursively by Create/CreateMultiple."""
+                       dtype: T.DataType | None
+                       ) -> tuple[list[Column], T.StructType]:
+        """Compile a model's spec against the value `col` into one aliased
+        Column per field — the root select list, and the struct members
+        of Create/CreateMultiple."""
         if model in ctx.stack:
             cycle = " -> ".join(m.__name__ for m in ctx.stack + (model,))
             raise SpecError(f"model spec cycle: {cycle}")
         spec = self._spec_for(model)
-        declared = (spark_schema_for(model)
-                    if dataclasses.is_dataclass(model) else None)
+        declared = ({f.name: f.dataType for f in spark_schema_for(model).fields}
+                    if dataclasses.is_dataclass(model) else {})
         exprs: list[Column] = []
         out_fields: list[T.StructField] = []
         for name, chain in spec.items():
-            sub = CompileContext(pipeline=self, strict=ctx.strict,
-                                 model=model.__name__, field=name,
-                                 stack=ctx.stack + (model,))
+            sub = dataclasses.replace(ctx, model=model.__name__, field=name,
+                                      stack=ctx.stack + (model,))
             try:
                 expr, out_t = chain.compile(sub, col, dtype)
             except (TransformationError, SpecError):
@@ -95,25 +117,58 @@ class Pipeline:
                                           field=name, op=type(chain).__name__)
             # If the model declares a type for this field, cast to it so the
             # output schema is exactly the model schema.
-            if declared is not None:
-                dt = dict((f.name, f.dataType) for f in declared.fields).get(name)
-                if dt is not None and not isinstance(dt, T.NullType):
-                    if out_t is None or out_t.simpleString() != dt.simpleString():
-                        expr = expr.cast(dt) if ctx.strict else expr.try_cast(dt)
-                    out_t = dt
+            dt = declared.get(name)
+            if dt is not None and not isinstance(dt, T.NullType):
+                if out_t is None or out_t.simpleString() != dt.simpleString():
+                    expr = expr.cast(dt) if ctx.strict else expr.try_cast(dt)
+                out_t = dt
             exprs.append(expr.alias(name))
             out_fields.append(T.StructField(name, out_t or T.NullType(), True))
-        return F.struct(*exprs), T.StructType(out_fields)
+        return exprs, T.StructType(out_fields)
+
+    def _compiled(self, model: type, df: DataFrame) -> _Compiled:
+        """The memoized compile of `model` against `df`'s schema.
+
+        Keyed on (model, schema, strict, session); a hit is used only if
+        every spec entry is still the same chain object, so a chain
+        replaced in ``transformations`` after a compile is honoured.
+        Threads racing on one key may each compile; either result is
+        correct."""
+        spec = tuple((m, name, chain)
+                     for m, fields in self.transformations.items()
+                     for name, chain in fields.items())
+        schema = df.schema
+        key = (model, schema, self.strict, df.sparkSession)
+        hit = self._memo.get(key)
+        if hit is not None and len(hit.spec) == len(spec) and all(
+                m is m2 and name == name2 and chain is chain2
+                for (m, name, chain), (m2, name2, chain2)
+                in zip(hit.spec, spec)):
+            return hit
+        root = F.struct(*[quoted_col(c) for c in schema.names])
+        ctx = CompileContext(pipeline=self, strict=self.strict,
+                             model=model.__name__, root=root)
+        exprs, out_t = self._compile_model(ctx, model, root, schema)
+        nulled = F.filter(
+            F.array(*[F.when(quoted_col(n).isNull(), F.lit(n))
+                      for n in out_t.names]),
+            lambda x: x.isNotNull())
+        if len(self._memo) >= _MEMO_MAX:
+            self._memo.clear()
+        self._memo[key] = entry = _Compiled(spec, exprs, nulled)
+        return entry
 
     def compile(self, model: type, df: DataFrame) -> list[Column]:
         """Compile the spec for `model` against `df`'s schema into one
-        aliased Column per model field (the select-list)."""
-        root_col = F.struct(*[F.col(c) for c in df.columns])
-        root_t = T.StructType(df.schema.fields)
-        struct_col, struct_t = self._compile_model(self._ctx(model), model,
-                                                   root_col, root_t)
-        # unwrap the struct into top-level output columns
-        return [struct_col.getField(f.name).alias(f.name) for f in struct_t.fields]
+        aliased Column per model field (the select list).
+
+        The list is flat: a field read off the input row is a column
+        reference, so its size is linear in the spec.  It is memoized
+        per (model, input schema, strict, session) and reused by every
+        later call — ``create_multiple``, ``get_or_create``, ``explain``
+        — over a DataFrame of the same schema, until a field chain in
+        ``transformations`` is replaced."""
+        return list(self._compiled(model, df).exprs)
 
     # -- entry points (reference pipeline.py:35-51) ------------------------
 
@@ -121,14 +176,10 @@ class Pipeline:
                         audit: bool = False) -> DataFrame:
         """The core table-in/table-out op: one typed output row per input
         row (reference ``create_multiple``, ``pipeline.py:43-51``)."""
-        exprs = self.compile(model, df)
-        out = df.select(*exprs)
+        compiled = self._compiled(model, df)
+        out = df.select(*compiled.exprs)
         if audit:
-            names = [f.name for f in out.schema.fields]
-            nulled = F.filter(
-                F.array(*[F.when(F.col(n).isNull(), F.lit(n)) for n in names]),
-                lambda x: x.isNotNull())
-            out = out.withColumn("_nulled_fields", nulled)
+            out = out.withColumn("_nulled_fields", compiled.nulled)
         return out
 
     def explain(self, model: type, df: DataFrame) -> str:
@@ -137,6 +188,9 @@ class Pipeline:
         resulting select (``plans.audit``) — the debugging surface the
         reference's record-at-a-time interpreter never needed but a
         plan-compiled engine owes its users.  Plan-build only, no job.
+        The expressions shown are the memoized select list
+        :meth:`compile` returns: flat column references for fields read
+        off the input row, structs only where ``Create`` builds them.
         """
         from .plans import audit as plan_audit
 

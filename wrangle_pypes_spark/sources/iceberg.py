@@ -1948,17 +1948,9 @@ def _stage_data_entries(df: DataFrame, table: str, spec_cols: list,
         # AQE rebalance clusters by the tuple, COALESCES small values
         # into one task, and SPLITS values above the advisory size
         # into several tasks/files — Iceberg's write.distribution-mode
-        # = hash + target-file-size behavior.  Parameterized like
-        # Iceberg's write.distribution-mode (env, default rebalance):
-        # "hash" = the r14 hard repartition, "none" = no pre-write
-        # exchange (tasks×values files — only for A/B diagnostics).
-        mode = os.environ.get("WPS_ICEBERG_WRITE_DIST", "rebalance")
-        if mode == "rebalance":
-            staged = staged.hint(
-                "rebalance", *[F.col(fname) for fname, *_ in spec_cols])
-        elif mode == "hash":
-            staged = staged.repartition(
-                *[F.col(fname) for fname, *_ in spec_cols])
+        # = hash + target-file-size behavior.
+        staged = staged.hint(
+            "rebalance", *[F.col(fname) for fname, *_ in spec_cols])
     w = staged.write.mode("overwrite")
     if spec_cols:
         w = w.partitionBy(*[fname for fname, *_ in spec_cols])

@@ -96,7 +96,11 @@ class CompileContext:
 
     ``pipeline`` gives ``Create``/``CreateMultiple`` access to child-model
     specs; ``stack`` detects spec cycles; ``strict`` toggles ANSI-style
-    fail-fast vs null-out (``try_cast`` et al.) semantics.
+    fail-fast vs null-out (``try_cast`` et al.) semantics.  ``root`` is
+    the input row as one struct Column, built once per compile: a field
+    read off exactly this object becomes a top-level column reference
+    (:func:`_get_field`); nodes that consume the whole row (``Expr``,
+    ``Id``, ...) get the struct itself.
     """
 
     pipeline: Any  # wrangle_pypes_spark.pipeline.Pipeline (circular import)
@@ -104,9 +108,24 @@ class CompileContext:
     model: str | None = None
     field: str | None = None
     stack: tuple = ()
+    root: Column | None = None
 
     def err(self, op: str, message: str) -> TransformationError:
         return TransformationError(message, model=self.model, field=self.field, op=op)
+
+
+def quoted_col(name: str) -> Column:
+    """Top-level column ``name`` taken literally: backtick-quoted, so a
+    ``.`` or a backtick in the name is not read as nesting or quoting."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _get_field(ctx: CompileContext, col: Column, name: str) -> Column:
+    """Field ``name`` of the struct value ``col``.  On the root row this
+    is a plain column reference rather than ``struct(<every
+    column>).getField(name)``, which would put a copy of the whole row
+    into every output column's expression tree."""
+    return quoted_col(name) if col is ctx.root else col.getField(name)
 
 
 def _lit_type(value: Any) -> T.DataType | None:
@@ -387,7 +406,7 @@ class Get(Transformation):
                     return F.lit(self.default), _lit_type(self.default)
                 raise ctx.err("Get", f"key {self.key!r} not in struct fields "
                                      f"{[f.name for f in dtype.fields]}")
-            return col.getField(self.key), ft
+            return _get_field(ctx, col, self.key), ft
         # --- map input ----------------------------------------------------
         if isinstance(dtype, T.MapType):
             if has_default:
@@ -438,7 +457,7 @@ class Attr(Transformation):
             if ft is None:
                 raise ctx.err("Attr", f"attribute {self.attr!r} not in struct "
                                       f"fields {[f.name for f in dtype.fields]}")
-            return col.getField(self.attr), ft
+            return _get_field(ctx, col, self.attr), ft
         return col.getItem(self.attr), None
 
 
@@ -462,7 +481,7 @@ class Gather(Transformation):
             missing = [k for k in self.keys if _struct_field_type(dtype, k) is None]
             if missing:
                 raise ctx.err("Gather", f"keys {missing!r} not in struct")
-            out = F.struct(*[col.getField(k).alias(k) for k in self.keys])
+            out = F.struct(*[_get_field(ctx, col, k).alias(k) for k in self.keys])
             out_t = T.StructType([T.StructField(k, _struct_field_type(dtype, k), True)
                                   for k in self.keys])
             return out, out_t
@@ -590,7 +609,7 @@ class FoldInKeys(Transformation):
                     raise ctx.err("FoldInKeys", f"value at {f.name!r} is not a struct")
                 rows.append(F.struct(
                     F.lit(f.name).alias(self.name),
-                    *[col.getField(f.name).getField(g.name).alias(g.name)
+                    *[_get_field(ctx, col, f.name).getField(g.name).alias(g.name)
                       for g in f.dataType.fields]))
                 fields_t = f.dataType
             out_t = T.ArrayType(T.StructType(
@@ -645,7 +664,7 @@ class GetValues(Transformation):
     def compile(self, ctx, col, dtype):
         if isinstance(dtype, T.StructType):
             # heterogeneous struct values only form an array if types unify
-            vals = [col.getField(f.name) for f in dtype.fields]
+            vals = [_get_field(ctx, col, f.name) for f in dtype.fields]
             ts = {f.dataType.simpleString() for f in dtype.fields}
             if len(ts) > 1:
                 vals = [v.cast("string") for v in vals]
@@ -671,7 +690,8 @@ class Create(Transformation):
     model: type
 
     def compile(self, ctx, col, dtype):
-        return ctx.pipeline._compile_model(ctx, self.model, col, dtype)
+        exprs, out_t = ctx.pipeline._compile_model(ctx, self.model, col, dtype)
+        return F.struct(*exprs), out_t
 
 
 @dataclass(frozen=True)
@@ -686,9 +706,9 @@ class CreateMultiple(Transformation):
         out_t: list = [None]
 
         def body(x: Column) -> Column:
-            out, ot = ctx.pipeline._compile_model(ctx, self.model, x, elem_t)
-            out_t[0] = ot
-            return out
+            exprs, out_t[0] = ctx.pipeline._compile_model(ctx, self.model, x,
+                                                           elem_t)
+            return F.struct(*exprs)
 
         out = F.transform(col, body)
         return out, (T.ArrayType(out_t[0]) if out_t[0] is not None else None)
