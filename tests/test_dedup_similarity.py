@@ -865,6 +865,29 @@ def test_random_projection_empty_vector_is_zeros(spark):
     assert r.rp == [0.0, 0.0, 0.0, 0.0]
 
 
+def test_random_projection_literal_signs_read_dotted_names(spark):
+    """The dim= path reads ``vec_col`` as ``F.col`` does: an unquoted
+    dot steps into a struct field, a backticked name is literal."""
+    from pyspark.sql import functions as F
+    from wrangle_pypes_spark.operators.similarity import random_projection
+    flat = spark.createDataFrame(
+        [(1, [1.0, -2.0, 0.5]), (2, [0.0, 3.0, None])],
+        "id bigint, v array<double>")
+    want = {r.id: r.rp for r in random_projection(
+        flat, "v", out_dim=3, out_col="rp", hash_scheme="md5",
+        dim=3).collect()}
+    nested = flat.select("id", F.struct("v").alias("s"))
+    got = {r.id: r.rp for r in random_projection(
+        nested, "s.v", out_dim=3, out_col="rp", hash_scheme="md5",
+        dim=3).collect()}
+    assert got == want
+    dotted = flat.withColumnRenamed("v", "a.b")
+    got = {r.id: r.rp for r in random_projection(
+        dotted, "`a.b`", out_dim=3, out_col="rp", hash_scheme="md5",
+        dim=3).collect()}
+    assert got == want
+
+
 def test_random_projection_literal_signs_equal_hash_path(spark, sf_dir):
     """dim= pre-folds md5 signs into plan literals; results must be
     bit-identical to the per-row-hash path, including NULL-element,

@@ -25,11 +25,12 @@ the sketch of the union) — pinned in tests/test_rollup.py.
 from __future__ import annotations
 
 import math
-import re
 from typing import Mapping, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..transformations import sql_ref
 
 __all__ = ("rollup_build", "rollup_merge", "rollup_finalize",
            "rollup_percentile", "time_bucket")
@@ -46,32 +47,6 @@ _KINDS = {
 }
 
 
-# one segment of a column name as ``F.col`` reads it: backticked (a
-# doubled backtick escapes one) or a run without dots and backticks
-_NAME_SEGMENT = re.compile(r"`((?:[^`]|``)*)`|([^.`]+)")
-
-
-def _sql_ref(col: str) -> str:
-    """``col`` as a SQL column reference with ``F.col``'s reading of it:
-    an unquoted dot steps into a struct field (``"s.v"`` is field ``v``
-    of ``s``), a backticked segment is taken literally.  Each segment is
-    re-quoted on its own, so no name can break out of the SQL text."""
-    parts, pos = [], 0
-    while True:
-        m = _NAME_SEGMENT.match(col, pos)
-        if m is None:
-            raise ValueError(f"invalid column name syntax: {col!r}")
-        quoted, plain = m.groups()
-        parts.append(plain if quoted is None else quoted.replace("``", "`"))
-        pos = m.end()
-        if pos == len(col):
-            break
-        if col[pos] != ".":
-            raise ValueError(f"invalid column name syntax: {col!r}")
-        pos += 1
-    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
-
-
 def _hist_build(col: str, lo: float, hi: float, bins: int) -> Column:
     """Fixed-bin count vector as ``array<long>`` — the mergeable
     quantile state (merge = element-wise add).  Values clamp into the
@@ -86,7 +61,7 @@ def _hist_build(col: str, lo: float, hi: float, bins: int) -> Column:
     ``D`` suffix keeps the literals DOUBLE (a bare ``0.1`` parses as
     DECIMAL in Spark SQL, which would change the arithmetic)."""
     width = (hi - lo) / bins
-    q = _sql_ref(col)
+    q = sql_ref(col)
     # explicit NULL guard: greatest()/least() IGNORE null operands, so
     # without it a NULL value would silently clamp into bin 0
     idx = (f"CASE WHEN {q} IS NOT NULL THEN "

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..transformations import sql_ref
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -736,8 +738,7 @@ def random_projection(df: DataFrame, vec_col: str, *, out_dim: int,
         # documented ignore-beyond-dim rule for overlong rows.  The D
         # suffix keeps literals DOUBLE (bare decimals parse as DECIMAL
         # in Spark SQL).
-        q = "`" + vec_col.replace("`", "``") + "`"
-        v_sql = (f"transform({q}, x -> coalesce(nanvl("
+        v_sql = (f"transform({sql_ref(vec_col)}, x -> coalesce(nanvl("
                  f"CAST(x AS DOUBLE), 0.0D), 0.0D))")
         for j in range(out_dim):
             signs = ",".join(

@@ -43,12 +43,17 @@ table, never blocked by the writer.
 
 Scale notes: the manifest is ~``n_buckets`` lines of JSON on the
 driver — size it like a partition count (64–4096), not like the data.
-Touched-bucket discovery is a ``distinct().collect()`` bounded by
-``n_buckets``.  Each bucket rewrite re-compacts that bucket (one job,
-``repartition(touched, bucket)``), so file counts stay bounded at
-~1 file per bucket instead of accreting per commit.  Skewed keys skew
-buckets; xxhash64 spreads keys uniformly, and a hot single KEY is a
-store-design problem no format solves — pre-aggregate upstream.
+Touched-bucket discovery hashes keys that already sit in driver memory
+(a small local relation, e.g. ``local_df`` output) in Python
+(:mod:`.xxhash64`), with no Spark job; any other key set pays one
+``distinct().collect()`` bounded by ``n_buckets``.  Small lookups of
+driver-resident keys read their buckets with pyarrow on the driver
+(``manifest_lookup`` states when).  Each bucket rewrite re-compacts
+that bucket (one job, ``repartition(touched, bucket)``), so file
+counts stay bounded at ~1 file per bucket instead of accreting per
+commit.  Skewed keys skew buckets; xxhash64 spreads keys uniformly,
+and a hot single KEY is a store-design problem no format solves —
+pre-aggregate upstream.
 
 Single-writer by contract (streaming ``foreachBatch`` guarantees one
 instance per sink).  Control files go through ``fsutil``: atomic rename
@@ -63,20 +68,40 @@ contract a 100 TB incremental pipeline needs under crash recovery.
 from __future__ import annotations
 
 import json
+import os
 import re
 from typing import Callable, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import fsutil
 from ..localdf import local_df
+from . import xxhash64
 
 _PTR = "_ptr.json"
 _BKT = "bkt"  # partition dir prefix; NOT underscore-led (Spark hides those)
 _MANIFEST_RE = re.compile(r"^_m(\d{6})\.json$")
 _DATA_V_RE = re.compile(r"^v(\d{6})$")
 _HASH = "xxhash64"  # recorded in the manifest; immutable per store
+# Keys that sit in driver memory are routed to buckets in Python up to
+# this many rows.  Hashing costs ~3 us per long key and ~15-18 us per
+# 48-byte string; the discovery job it replaces costs >= ~100 ms, so
+# even 4096 string keys stay under one job.
+_DRIVER_KEYS_MAX = 4096
+# column types the driver read serves (pyarrow reads them exactly as
+# Spark's parquet reader does); anything nested takes the Spark path
+_FLAT_TYPES = (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+               T.LongType, T.FloatType, T.DoubleType, T.StringType,
+               T.BinaryType, T.DateType, T.DecimalType)
+# A lookup is served on the driver when its touched files total at most
+# this many bytes.  pyarrow reads the whole buckets into driver memory
+# (~50 ms plus ~4.5 ms per MB on a 4-core host); the Spark path costs
+# ~250-300 ms and 3x the CPU, and its parallel scan caught up in wall
+# time only at ~55 MB (64 probes over 16 buckets).  Half of that keeps
+# the margin on hosts with more cores and bounds the driver's memory.
+_DRIVER_READ_MAX_BYTES = 32 << 20
 
 
 def _join(path: str, rel: str) -> str:
@@ -90,6 +115,42 @@ def _manifest_name(version: int) -> str:
 def _bucket_col(key_cols: Sequence[str], n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]),
                   F.lit(n_buckets)).cast("int")
+
+
+def _driver_keys(df: DataFrame, cols: Sequence[str]) -> Optional[set]:
+    """The distinct key tuples of ``df`` when ``df.select(cols)``
+    optimizes to a ``LocalRelation`` of at most ``_DRIVER_KEYS_MAX``
+    rows — ``local_df`` output and filters or projections over it —
+    whose ``collect()`` runs no Spark job; None otherwise."""
+    sel = df.select(*cols)
+    qe = sel._jdf.queryExecution()
+    # only a plan over local rows alone can fold to them; checking the
+    # (already analysed) leaves first spares other plans an optimizer
+    # pass of ~20-30 ms
+    leaves = qe.analyzed().collectLeaves()
+    if any(leaves.apply(i).getClass().getSimpleName() != "LocalRelation"
+           for i in range(leaves.size())):
+        return None
+    plan = qe.optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation" \
+            or plan.data().size() > _DRIVER_KEYS_MAX:
+        return None
+    # a binary value collects as bytearray (unhashable) when
+    # spark.sql.execution.pyspark.binaryAsBytes is off
+    return {tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in sel.collect()}
+
+
+def _driver_buckets(rows, types: Sequence[T.DataType],
+                    n_buckets: int) -> Optional[list[int]]:
+    """Sorted bucket ids of key tuples ``rows`` of Spark ``types`` —
+    exactly ``_bucket_col`` — or None when a type has no Python
+    hasher."""
+    hashers = [xxhash64.hasher(t) for t in types]
+    if None in hashers:
+        return None
+    return sorted({xxhash64.xxhash64(r, hashers) % n_buckets
+                   for r in rows})
 
 
 def manifest_current(path: str, spark=None) -> Optional[Tuple[int, int]]:
@@ -180,8 +241,6 @@ def _read_buckets(spark: SparkSession, path: str, man: dict,
     rewritten since carry the new columns in their files — the
     explicit schema makes the parquet reader null-fill them everywhere
     else, without a footer-merging pass."""
-    from pyspark.sql import types as T
-
     if bucket_ids is None:
         rels = list(man["buckets"].values())
     else:
@@ -293,7 +352,10 @@ def manifest_merge(updates: DataFrame, path: str,
     foreachBatch maintainers pass an already-materialized micro-batch,
     so this is free there; a direct caller whose ``updates`` is an
     expensive plan should ``updates.localCheckpoint(eager=True)``
-    first to avoid recomputing it.
+    first to avoid recomputing it.  Updates whose key columns fold to
+    a small local relation (``local_df`` output and projections or
+    filters over it) are routed to buckets in Python instead, with no
+    discovery job.
     """
     if mode not in ("upsert", "additive"):
         raise ValueError(f"unknown mode {mode!r} "
@@ -347,10 +409,14 @@ def manifest_merge(updates: DataFrame, path: str,
                     "loudly by default; pass evolve_schema=True for "
                     "additive widening")
 
-    bcol = _bucket_col(keys, n_buckets)
-    touched = sorted(
-        r[0] for r in updates.select(bcol.alias(_BKT)).distinct()
-        .collect())
+    rows = _driver_keys(updates, keys)
+    touched = None if rows is None else _driver_buckets(
+        rows, [updates.schema[k].dataType for k in keys], n_buckets)
+    if touched is None:
+        bcol = _bucket_col(keys, n_buckets)
+        touched = sorted(
+            r[0] for r in updates.select(bcol.alias(_BKT)).distinct()
+            .collect())
 
     stored = None
     if man is not None and touched:
@@ -571,6 +637,81 @@ def manifest_stats(spark: SparkSession, path: str) -> Optional[DataFrame]:
                      "rows bigint, files int, bytes bigint")
 
 
+def _probe_types(kcols: Sequence[str], got: Sequence[T.DataType],
+                 schema: Optional[T.StructType]) -> list:
+    """The types probes of types ``got`` are routed and matched under:
+    the store's recorded key types, to which numeric probe keys
+    convert (the probe's own types on a store without a recorded
+    schema).  Any other mismatch raises ValueError."""
+    if schema is None:
+        return got
+    want = [schema[k].dataType for k in kcols]
+    for k, g, w in zip(kcols, got, want):
+        if g != w and not (isinstance(g, T.NumericType)
+                           and isinstance(w, T.NumericType)):
+            raise ValueError(
+                f"probe key {k!r} is {g.simpleString()} but the store "
+                f"keys it as {w.simpleString()}")
+    return want
+
+
+def _as_type(k: str, dt: T.DataType) -> Column:
+    """Probe column ``k`` converted to ``dt``; null where the value
+    does not fit (such a key can never have been stored)."""
+    c = F.col(k)
+    v = c.try_cast(dt)
+    return F.when(v == c, v).alias(k)
+
+
+def _driver_read(spark: SparkSession, path: str, man: dict,
+                 schema: T.StructType, bucket_ids: Sequence[int],
+                 kcols: Sequence[str], probes: set
+                 ) -> Optional[DataFrame]:
+    """The stored rows whose keys are in ``probes`` (tuples under the
+    store's key types), read from the buckets' files with pyarrow on
+    the driver and returned as a local relation.  None when the store
+    is remote, a recorded column is not flat, or the files total more
+    than ``_DRIVER_READ_MAX_BYTES``."""
+    if not fsutil.is_local(path) or not all(
+            isinstance(f.dataType, _FLAT_TYPES) for f in schema.fields):
+        return None
+    files = []
+    for b in bucket_ids:
+        rel = man["buckets"].get(str(b))
+        if rel is not None:
+            # the files Spark's reader would list: hidden names skipped
+            d = fsutil._strip_file_scheme(_join(path, rel))
+            files += [os.path.join(d, n) for n in os.listdir(d)
+                      if not n.startswith(("_", "."))]
+    if sum(map(os.path.getsize, files)) > _DRIVER_READ_MAX_BYTES:
+        return None
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # nullable like the schema Spark's file reader reports
+    schema = T.StructType([T.StructField(f.name, f.dataType)
+                           for f in schema.fields])
+    target = to_arrow_schema(schema)
+    parts = [target.empty_table()]
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            t = pf.read()
+        # align to the recorded schema: columns added by a later
+        # evolve_schema commit are null in buckets not rewritten since
+        parts.append(pa.table(
+            [t[a.name].cast(a.type) if a.name in t.column_names
+             else pa.nulls(t.num_rows, a.type) for a in target],
+            schema=target))
+    want = pa.table([pa.array([p[i] for p in probes], target.field(k).type)
+                     for i, k in enumerate(kcols)], names=list(kcols))
+    return spark.createDataFrame(
+        pa.concat_tables(parts).join(want, list(kcols),
+                                     join_type="left semi"),
+        schema)
+
+
 def manifest_lookup(spark: SparkSession, path: str,
                     keys: DataFrame, *,
                     version: Optional[int] = None) -> Optional[DataFrame]:
@@ -584,13 +725,28 @@ def manifest_lookup(spark: SparkSession, path: str,
 
     ``keys`` must carry exactly the store's key columns (extra
     columns are ignored); matching is by equality on all of them.
+    Numeric probe keys are converted to the store's key types first,
+    so an ``int`` probe finds the rows of a ``bigint`` store; a value
+    the store's type cannot hold matches nothing.  Any other type
+    mismatch raises ValueError.
     ``version=`` time-travels the lookup like :func:`manifest_read`.
     Returns None only when nothing was ever committed; a committed
     store whose buckets hold none of the probed keys returns an
     EMPTY DataFrame under the store's recorded schema (so callers
-    can filter/select it without a None branch).  Cost: one tiny job
-    to hash the keys (collect bounded by ``n_buckets``), one pruned
-    scan, one broadcast semi-join.
+    can filter/select it without a None branch).
+
+    Cost: keys already in driver memory (``keys`` folds to a local
+    relation of at most ``_DRIVER_KEYS_MAX`` rows, as ``local_df``
+    output and filters or projections over it do) are routed to their
+    buckets in Python.  When, in addition, the store is local, every
+    recorded column is flat (no struct, array or map) and the touched
+    files total at most ``_DRIVER_READ_MAX_BYTES`` (32 MB), the
+    lookup is served on the driver: pyarrow reads those files and the
+    result is a local relation, so neither the lookup nor the
+    caller's ``collect()`` runs a Spark job.  Otherwise it takes the
+    Spark path: one tiny job hashes the keys (skipped for
+    driver-resident keys), then one pruned scan and one broadcast
+    semi-join.
     """
     cur = manifest_current(path, spark=spark)
     if cur is None:
@@ -607,21 +763,37 @@ def manifest_lookup(spark: SparkSession, path: str,
     if missing:
         raise ValueError(
             f"keys lack the store's key columns {missing}")
-    want = keys.select(*kcols).distinct()
-    bcol = _bucket_col(kcols, int(man["n_buckets"]))
-    touched = sorted(r[0] for r in
-                     want.select(bcol.alias(_BKT)).distinct().collect())
+    schema = T.StructType.fromJson(man["schema"]) \
+        if man.get("schema") is not None else None
+    got = [keys.schema[k].dataType for k in kcols]
+    ktypes = _probe_types(kcols, got, schema)
+    n_buckets = int(man["n_buckets"])
+    touched = None
+    want = keys.select(*[k if g == t else _as_type(k, t)
+                         for k, g, t in zip(kcols, got, ktypes)])
+    rows = _driver_keys(want, kcols)
+    if rows is not None:
+        # a null (or non-fitting) key matches nothing
+        probes = {r for r in rows if None not in r}
+        touched = _driver_buckets(probes, ktypes, n_buckets)
+        if touched is not None and schema is not None:
+            out = _driver_read(spark, path, man, schema, touched, kcols,
+                               probes)
+            if out is not None:
+                return out
+    want = want.distinct()
+    if touched is None:
+        bcol = _bucket_col(kcols, n_buckets)
+        touched = sorted(r[0] for r in
+                         want.select(bcol.alias(_BKT)).distinct().collect())
     stored = _read_buckets(spark, path, man, bucket_ids=touched)
     if stored is None:
         # committed store, but every probed bucket is empty: an empty
         # result under the recorded schema, not None — callers chain
         # filters/selects without a None branch
-        from pyspark.sql import types as T
-
-        if man.get("schema") is None:
+        if schema is None:
             return None  # pre-schema legacy manifest: shape unknown
-        return local_df(
-            spark, [], T.StructType.fromJson(man["schema"]))
+        return local_df(spark, [], schema)
     return stored.join(F.broadcast(want), kcols, "left_semi")
 
 
@@ -687,8 +859,6 @@ def manifest_merge_into(source: DataFrame, path: str, *,
     non-null; source must carry every store column when inserting
     (unmatched rows have no stored half to fall back on).
     """
-    from pyspark.sql import types as T
-
     if when_matched_update is None and when_matched_delete is None \
             and not when_not_matched_insert:
         raise ValueError("no clauses: nothing to do")
@@ -822,8 +992,6 @@ def manifest_changes(spark: SparkSession, path: str, *,
     with no rewritten buckets between them return an EMPTY feed under
     the store's schema.
     """
-    from pyspark.sql import types as T
-
     cur = manifest_current(path, spark=spark)
     if cur is None:
         raise ValueError(f"nothing committed at {path!r}")

@@ -820,9 +820,10 @@ def pmanifest_lookup(spark: SparkSession, path: str, keys: DataFrame,
     pcol = _recorded_pcol(path, spark=spark)
     frames = []
     if pcol is not None and pcol in keys.columns:
-        pvals = [r[0] for r in
-                 keys.select(pcol).distinct().collect()]
-        for pval in pvals:
+        pvals = _m._driver_keys(keys, [pcol])
+        if pvals is None:
+            pvals = keys.select(pcol).distinct().collect()
+        for (pval,) in pvals:
             if pval is None:
                 continue
             token = _encode_pval(pval)

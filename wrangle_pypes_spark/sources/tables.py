@@ -51,15 +51,14 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     # that runs many short streaming queries degrades every later job.
     # Runtime-settable, so bare driver sessions get the fix too (see
     # session.get_session for the measurement).  Trade-off (ADVICE r14):
-    # checksums add checkpoint-corruption DETECTION — a caller who has
-    # explicitly enabled them keeps their choice; only the unset
-    # default is flipped until the upstream pool-shutdown fix lands.
+    # checksums add checkpoint-corruption DETECTION, and they stay off
+    # until the upstream pool-shutdown fix lands.  An explicit "true"
+    # is NOT preserved: it is the Spark default, indistinguishable from
+    # unset at runtime, so it is flipped too.  A caller who wants
+    # checksums sets "true" again after this call, which
+    # ``load_table`` and ``stream_table`` repeat on every use.
     _CKSUM = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     if spark.conf.get(_CKSUM, None) in (None, "true"):
-        # "true" is the Spark default, indistinguishable from unset at
-        # runtime; a user opting IN should set it via get_session's
-        # builder (session.py leaves user-set values alone) or after
-        # this call.
         spark.conf.set(_CKSUM, "false")
     return spark
 

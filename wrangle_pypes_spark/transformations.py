@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal
+import re
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Callable, Optional, Sequence
 
@@ -118,6 +119,32 @@ def quoted_col(name: str) -> Column:
     """Top-level column ``name`` taken literally: backtick-quoted, so a
     ``.`` or a backtick in the name is not read as nesting or quoting."""
     return F.col("`" + name.replace("`", "``") + "`")
+
+
+# one segment of a column name as ``F.col`` reads it: backticked (a
+# doubled backtick escapes one) or a run without dots and backticks
+_NAME_SEGMENT = re.compile(r"`((?:[^`]|``)*)`|([^.`]+)")
+
+
+def sql_ref(col: str) -> str:
+    """``col`` as a SQL column reference with ``F.col``'s reading of it:
+    an unquoted dot steps into a struct field (``"s.v"`` is field ``v``
+    of ``s``), a backticked segment is taken literally.  Each segment is
+    re-quoted on its own, so no name can break out of the SQL text."""
+    parts, pos = [], 0
+    while True:
+        m = _NAME_SEGMENT.match(col, pos)
+        if m is None:
+            raise ValueError(f"invalid column name syntax: {col!r}")
+        quoted, plain = m.groups()
+        parts.append(plain if quoted is None else quoted.replace("``", "`"))
+        pos = m.end()
+        if pos == len(col):
+            break
+        if col[pos] != ".":
+            raise ValueError(f"invalid column name syntax: {col!r}")
+        pos += 1
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
 def _get_field(ctx: CompileContext, col: Column, name: str) -> Column:
