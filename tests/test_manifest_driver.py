@@ -4,7 +4,10 @@ Spark's ``pmod(xxhash64(keys), n)``, and a probe served on the driver
 of the Spark path (a probe Spark must evaluate)."""
 
 import datetime
+import decimal
 import itertools
+import json
+import os
 import uuid
 
 import pytest
@@ -14,8 +17,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wrangle_pypes_spark.localdf import local_df
-from wrangle_pypes_spark.sources import (manifest_lookup, manifest_merge,
-                                         manifest_read,
+from wrangle_pypes_spark.sources import (manifest_changes, manifest_current,
+                                         manifest_history, manifest_lookup,
+                                         manifest_merge, manifest_read,
                                          pmanifest_lookup, pmanifest_merge)
 from wrangle_pypes_spark.sources import manifest, xxhash64
 from wrangle_pypes_spark.sources.manifest import (_bucket_col,
@@ -198,7 +202,6 @@ def test_driver_and_spark_lookups_agree(spark, store):
 
 
 def test_driver_read_covers_every_flat_type(spark, tmp_path):
-    import decimal
     path = str(tmp_path / "flat_types")
     schema = ("k tinyint, s smallint, f float, d1 decimal(9, 2), "
               "d2 decimal(30, 6), b binary, t boolean, u string")
@@ -335,7 +338,10 @@ def test_lookup_routes_probes_under_store_key_types(spark, tmp_path):
                         spark.createDataFrame([("1",)], "k string"))
 
 
-def test_local_merge_skips_the_discovery_job(spark, tmp_path):
+def test_local_merge_skips_the_discovery_job(spark, tmp_path, monkeypatch):
+    """With the driver writer ruled out (cap below the files), a merge
+    of driver-resident keys still skips the discovery job."""
+    monkeypatch.setattr(manifest, "_DRIVER_READ_MAX_BYTES", 0)
     schema = "k int, val string"
     rows = [(i, f"v{i}") for i in range(40)]
     upd = [(i, "u") for i in range(0, 40, 7)]
@@ -376,3 +382,267 @@ def test_pmanifest_lookup_driver_and_spark_agree(spark, tmp_path):
     without_p = _both(spark, look, [(1,), (2,), (44,), (99,)], "k bigint",
                       max_jobs=1)
     assert sorted(r[0] for r in without_p) == [1, 2, 44]
+
+
+def _man(path, version=None):
+    version = version or manifest_current(path)[0]
+    with open(os.path.join(path, f"_m{version:06d}.json")) as f:
+        return json.load(f)
+
+
+def _sorted(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _commit_both(spark, tmp_path, boot, batches, schema, keys, probes,
+                 **kw):
+    """Bootstrap two stores alike, then commit each batch to one as
+    ``local_df`` output (the driver writer: no Spark job) and to the
+    other as a pickled-RDD frame (the Spark writer).  Reads, lookups,
+    change feeds and manifests must agree; the manifests differ only
+    in which writer their summary names and the bytes it wrote.
+    Returns the driver-written store's path."""
+    paths = {}
+    for side in ("driver", "spark"):
+        paths[side] = path = str(tmp_path / side)
+        manifest_merge(spark.createDataFrame(boot, schema), path, keys,
+                       n_buckets=8, **kw)
+    fields = T._parse_datatype_string(schema)
+    kschema = T.StructType([fields[k] for k in keys])
+    for rows, bschema in batches:
+        _, jobs = _jobs(spark, lambda: manifest_merge(
+            local_df(spark, rows, bschema), paths["driver"], keys,
+            n_buckets=8, **kw))
+        assert jobs == 0
+        manifest_merge(spark.createDataFrame(rows, bschema), paths["spark"],
+                       keys, n_buckets=8, **kw)
+        mans = {side: _man(p) for side, p in paths.items()}
+        for side, m in mans.items():
+            assert m["summary"].pop("writer") == side
+            assert m["summary"].pop("bytes_added") > 0 \
+                or not m["summary"]["files_added"]
+        assert mans["driver"] == mans["spark"]
+    for fn in (lambda p: manifest_read(spark, p),
+               lambda p: manifest_lookup(spark, p,
+                                         local_df(spark, probes, kschema)),
+               lambda p: manifest_changes(spark, p, from_version=1)):
+        a, b = (fn(paths[side]) for side in ("driver", "spark"))
+        assert a.columns == b.columns
+        assert _sorted(a) == _sorted(b)
+    return paths["driver"]
+
+
+def test_driver_commit_agrees_with_spark_composite_keys(spark, tmp_path):
+    """Upserts, a tombstone batch that empties a bucket, and a batch
+    whose keys all land in empty buckets."""
+    schema = "k int, g string, v bigint, dead boolean"
+    types = [T.IntegerType(), T.StringType()]
+    boot = [(i, f"g{i % 3}", i, False) for i in range(0, 40, 2)]
+    by_bucket = {}
+    for r in boot:
+        by_bucket.setdefault(_driver_buckets([r[:2]], types, 8)[0],
+                             []).append(r)
+    victim = min(by_bucket, key=lambda b: len(by_bucket[b]))
+    upsert = [(2, "g2", -2, False), (3, "g0", -3, False),
+              (4, "g1", None, True), (41, "g2", 41, None)]
+    # keys whose buckets no earlier batch wrote: the victim bucket,
+    # emptied by the tombstone batch, and any bucket never used
+    used = set(_driver_buckets([r[:2] for r in boot + upsert], types, 8))
+    empty = [k for k in [(i, "h") for i in range(100, 400)]
+             if _driver_buckets([k], types, 8)[0] not in used - {victim}]
+    empty = empty[:3]
+    assert len(empty) == 3
+    tomb = [r[:2] + (None, True) for r in by_bucket[victim]]
+    into_empty = [k + (7, False) for k in empty]
+    path = _commit_both(
+        spark, tmp_path, boot,
+        [(upsert, schema), (tomb, schema), (into_empty, schema)], schema,
+        ["k", "g"], [(2, "g2"), (4, "g1"), (41, "g2"), empty[0],
+                     by_bucket[victim][0][:2], (5, "g2")],
+        tombstone_col="dead")
+    # the tombstones emptied the victim bucket, and the last batch's
+    # keys landed only in buckets that were empty before it
+    emptied = _man(path, 3)["buckets"]
+    assert str(victim) not in emptied
+    assert not {str(b) for b in _driver_buckets(empty, types, 8)} & \
+        set(emptied)
+    got = {r[:2]: r[2] for r in _sorted(manifest_read(spark, path))}
+    assert got[(2, "g2")] == -2 and (4, "g1") not in got
+    assert all(got[k] == 7 for k in empty)
+    hist = {r.version: r for r in manifest_history(spark, path).collect()}
+    assert [hist[v].writer for v in sorted(hist)] == \
+        ["spark", "driver", "driver", "driver"]
+    tomb_commit = hist[3]
+    assert tomb_commit.buckets_touched == 1 and tomb_commit.files_added == 0
+
+
+@pytest.mark.parametrize("as_bytes", ["true", "false"])
+def test_driver_commit_agrees_with_spark_every_flat_type(spark, tmp_path,
+                                                         as_bytes):
+    """Every flat column type, keyed by a composite of every hashable
+    key type; binary values collect as bytearray when binaryAsBytes is
+    off."""
+    schema = ("kb boolean, kt tinyint, ks smallint, ki int, kl bigint, "
+              "kd date, kx string, ky binary, f float, d double, "
+              "d1 decimal(9, 2), d2 decimal(30, 6), b binary, u string")
+
+    def row(i, v):
+        return (i % 2 == 0, i - 20, i * 300, -i, 2 ** 40 + i,
+                datetime.date(2024, 1, 1 + i % 28), f"x{i}", bytes([i, 1]),
+                v / 4, v / 3, decimal.Decimal(v) / 4,
+                decimal.Decimal(10) ** 20 + v, bytes([v % 256]), "ü" * i)
+
+    keys = ["kb", "kt", "ks", "ki", "kl", "kd", "kx", "ky"]
+    conf = "spark.sql.execution.pyspark.binaryAsBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, as_bytes)
+    try:
+        _commit_both(
+            spark, tmp_path, [row(i, i) for i in range(30)],
+            [([row(i, -i) for i in (1, 2, 33)], schema)], schema, keys,
+            [row(i, 0)[:8] for i in (1, 3, 33, 50)])
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_driver_commit_agrees_with_spark_on_schema_widening(spark,
+                                                            tmp_path):
+    schema = "k bigint, v string"
+    wide = "k bigint, v string, x int"
+    path = _commit_both(
+        spark, tmp_path, [(i, f"v{i}") for i in range(30)],
+        [([(1, "a", 10), (40, "b", 11)], wide), ([(2, "c")], schema)],
+        schema, ["k"], [(1,), (2,), (3,), (40,)], evolve_schema=True)
+    assert [f["name"] for f in _man(path)["schema"]["fields"]] == \
+        ["k", "v", "x"]
+    got = {r.k: (r.v, r.x) for r in manifest_read(spark, path).collect()}
+    assert got[1] == ("a", 10) and got[2] == ("c", None)
+
+
+def test_driver_commit_falls_back_to_spark(spark, tmp_path, monkeypatch):
+    """Each case the driver writer does not serve commits through the
+    Spark writer, with the same result."""
+    def commit(name, rows, schema, keys=("k",), **kw):
+        path = str(tmp_path / name)
+        manifest_merge(spark.createDataFrame(rows, schema), path,
+                       list(keys), n_buckets=4, **kw)
+        manifest_merge(local_df(spark, rows[:3], schema), path,
+                       list(keys), n_buckets=4, **kw)
+        return path, _man(path)["summary"]["writer"]
+
+    rows = [(i, i) for i in range(10)]
+    path, writer = commit("additive", rows, "k int, v bigint",
+                          mode="additive", value_cols=["v"])
+    assert writer == "spark"
+    assert {r.k: r.v for r in manifest_read(spark, path).collect()} == \
+        {i: 2 * i if i < 3 else i for i in range(10)}
+
+    def keep_new(stored, updates):
+        return updates if stored is None else stored.join(
+            updates, ["k"], "left_anti").unionByName(updates)
+
+    assert commit("merge_fn", rows, "k int, v bigint",
+                  merge_fn=keep_new)[1] == "spark"
+    path, writer = commit("nested", [(i, [i]) for i in range(10)],
+                          "k int, xs array<int>")
+    assert writer == "spark" and manifest_read(spark, path).count() == 10
+    assert commit("double", [(i / 2, i) for i in range(10)],
+                  "k double, v int")[1] == "spark"
+    assert commit("flat", rows, "k int, v bigint")[1] == "driver"
+    monkeypatch.setattr(manifest, "_DRIVER_READ_MAX_BYTES", 10)
+    path, writer = commit("capped", rows, "k int, v bigint")
+    assert writer == "spark" and manifest_read(spark, path).count() == 10
+
+
+@pytest.mark.parametrize("frame", ["local", "rdd"])
+def test_merge_routes_batch_keys_under_store_key_types(spark, tmp_path,
+                                                       frame):
+    """An int batch against a bigint store used to hash its touched
+    buckets as int while the write hashed the bigint union, so the
+    merge raised the stray-bucket error instead of committing."""
+    make = {"local": lambda r, s: local_df(spark, r, s),
+            "rdd": spark.createDataFrame}[frame]
+    path = str(tmp_path / "big")
+    manifest_merge(spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")),
+        path, ["k"], n_buckets=16)
+    manifest_merge(make([(i, -i) for i in range(0, 30, 3)], "k int, v bigint"),
+                   path, ["k"], n_buckets=16)
+    got = {r.k: r.v for r in manifest_read(spark, path).collect()}
+    assert got == {i: -i if i < 30 and i % 3 == 0 else 2 * i
+                   for i in range(100)}
+    assert manifest_read(spark, path).schema["k"].dataType == T.LongType()
+    assert _man(path)["summary"]["writer"] == \
+        ("driver" if frame == "local" else "spark")
+    small = str(tmp_path / "small")
+    manifest_merge(spark.createDataFrame([(1, 1)], "k int, v int"), small,
+                   ["k"], n_buckets=4)
+    head = manifest_current(small)
+    with pytest.raises(Exception, match="cannot hold"):
+        manifest_merge(make([(2 ** 40, 1)], "k bigint, v int"), small, ["k"],
+                       n_buckets=4)
+    assert manifest_current(small) == head
+    with pytest.raises(ValueError, match="batch key 'k' is string"):
+        manifest_merge(make([("1", 1)], "k string, v int"), small, ["k"],
+                       n_buckets=4)
+
+
+def test_driver_commit_crash_before_pointer_replays_once(spark, tmp_path,
+                                                         monkeypatch):
+    """A driver commit that dies after writing its data and manifest but
+    before the pointer leaves the store as it was; the version number
+    is never reused and the replayed batch merges exactly once."""
+    path = str(tmp_path / "s")
+    schema = "k bigint, v bigint, dead boolean"
+    manifest_merge(spark.createDataFrame(
+        [(i, i, False) for i in range(40)], schema), path, ["k"],
+        epoch_id=0, n_buckets=8, tombstone_col="dead")
+    before = _sorted(manifest_read(spark, path))
+    batch = [(1, 100, False), (2, None, True), (50, 50, False)]
+    real = manifest.fsutil.write_text_atomic
+
+    def crash_at_pointer(p, text, spark=None):
+        if p.endswith("_ptr.json"):
+            raise OSError("crash before the pointer")
+        real(p, text, spark=spark)
+
+    monkeypatch.setattr(manifest.fsutil, "write_text_atomic",
+                        crash_at_pointer)
+    with pytest.raises(OSError, match="crash before the pointer"):
+        manifest_merge(local_df(spark, batch, schema), path, ["k"],
+                       epoch_id=1, n_buckets=8, tombstone_col="dead")
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(path, "_m000002.json"))
+    assert os.listdir(os.path.join(path, "data", "v000002"))
+    assert manifest_current(path) == (1, 0)
+    assert _sorted(manifest_read(spark, path)) == before
+    # the epoch did not advance, so the batch replays
+    assert manifest_merge(local_df(spark, batch, schema), path, ["k"],
+                          epoch_id=1, n_buckets=8,
+                          tombstone_col="dead") == 3
+    assert manifest_current(path) == (3, 1)
+    assert _man(path)["summary"]["writer"] == "driver"
+    want = {i: i for i in range(40)}
+    want.update({1: 100, 50: 50})
+    del want[2]
+    assert {r.k: r.v for r in manifest_read(spark, path).collect()} == want
+    manifest.manifest_vacuum(path, keep=1)
+    assert not os.path.exists(os.path.join(path, "data", "v000002"))
+    assert {r.k: r.v for r in manifest_read(spark, path).collect()} == want
+
+
+def test_history_summary_is_null_for_older_manifests(spark, tmp_path):
+    path = str(tmp_path / "s")
+    for e in range(2):
+        manifest_merge(local_df(spark, [(e, e)], "k int, v int"), path,
+                       ["k"], epoch_id=e, n_buckets=4)
+    m1 = os.path.join(path, "_m000001.json")
+    with open(m1) as f:
+        doc = json.load(f)
+    del doc["summary"]
+    with open(m1, "w") as f:
+        json.dump(doc, f)
+    rows = sorted(manifest_history(spark, path).collect())
+    assert rows[0][5:] == (None, None, None, None)
+    assert rows[1][5:] == ("driver", 1, 1, rows[1].bytes_added)
+    assert rows[1].bytes_added > 0

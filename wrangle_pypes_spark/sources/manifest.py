@@ -48,12 +48,20 @@ Touched-bucket discovery hashes keys that already sit in driver memory
 (:mod:`.xxhash64`), with no Spark job; any other key set pays one
 ``distinct().collect()`` bounded by ``n_buckets``.  Small lookups of
 driver-resident keys read their buckets with pyarrow on the driver
-(``manifest_lookup`` states when).  Each bucket rewrite re-compacts
-that bucket (one job, ``repartition(touched, bucket)``), so file
-counts stay bounded at ~1 file per bucket instead of accreting per
-commit.  Skewed keys skew buckets; xxhash64 spreads keys uniformly,
-and a hot single KEY is a store-design problem no format solves —
-pre-aggregate upstream.
+(``manifest_lookup`` states when).  A commit rewrites each touched
+bucket as ~one file, so file counts stay bounded instead of accreting
+per commit.  A small driver-resident upsert batch on a local, flat
+store whose touched files fit ``_DRIVER_READ_MAX_BYTES`` is committed
+on the driver: pyarrow reads the touched buckets, drops the batch's
+keys, appends the batch's rows and writes one file per bucket, with
+no Spark job (``manifest_merge`` states when).  Every other commit
+runs one Spark job, ``repartition(touched, bucket)``, over the merge
+plan.  Both writers publish through the same manifest-then-pointer
+tail, and each manifest records a ``summary`` of its commit (which
+writer, buckets touched, files and bytes added; ``manifest_history``
+lists them).  Skewed keys skew buckets; xxhash64 spreads keys
+uniformly, and a hot single KEY is a store-design problem no format
+solves — pre-aggregate upstream.
 
 Single-writer by contract (streaming ``foreachBatch`` guarantees one
 instance per sink).  Control files go through ``fsutil``: atomic rename
@@ -102,6 +110,10 @@ _FLAT_TYPES = (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
 # time only at ~55 MB (64 probes over 16 buckets).  Half of that keeps
 # the margin on hosts with more cores and bounds the driver's memory.
 _DRIVER_READ_MAX_BYTES = 32 << 20
+# Spark's parquet codec names the driver writer can honour with pyarrow;
+# any other codec keeps the commit on the Spark path
+_ARROW_CODECS = {"none": "none", "uncompressed": "none",
+                 "snappy": "snappy", "gzip": "gzip", "zstd": "zstd"}
 
 
 def _join(path: str, rel: str) -> str:
@@ -117,13 +129,12 @@ def _bucket_col(key_cols: Sequence[str], n_buckets: int) -> Column:
                   F.lit(n_buckets)).cast("int")
 
 
-def _driver_keys(df: DataFrame, cols: Sequence[str]) -> Optional[set]:
-    """The distinct key tuples of ``df`` when ``df.select(cols)``
-    optimizes to a ``LocalRelation`` of at most ``_DRIVER_KEYS_MAX``
-    rows — ``local_df`` output and filters or projections over it —
-    whose ``collect()`` runs no Spark job; None otherwise."""
-    sel = df.select(*cols)
-    qe = sel._jdf.queryExecution()
+def _driver_rows(df: DataFrame) -> Optional[list[tuple]]:
+    """The rows of ``df`` as tuples when it optimizes to a
+    ``LocalRelation`` of at most ``_DRIVER_KEYS_MAX`` rows —
+    ``local_df`` output and filters or projections over it — whose
+    ``collect()`` runs no Spark job; None otherwise."""
+    qe = df._jdf.queryExecution()
     # only a plan over local rows alone can fold to them; checking the
     # (already analysed) leaves first spares other plans an optimizer
     # pass of ~20-30 ms
@@ -137,20 +148,36 @@ def _driver_keys(df: DataFrame, cols: Sequence[str]) -> Optional[set]:
         return None
     # a binary value collects as bytearray (unhashable) when
     # spark.sql.execution.pyspark.binaryAsBytes is off
-    return {tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
-            for r in sel.collect()}
+    return [tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in df.collect()]
 
 
-def _driver_buckets(rows, types: Sequence[T.DataType],
-                    n_buckets: int) -> Optional[list[int]]:
-    """Sorted bucket ids of key tuples ``rows`` of Spark ``types`` —
+def _row_buckets(rows, types: Sequence[T.DataType],
+                 n_buckets: int) -> Optional[list[int]]:
+    """The bucket of each key tuple in ``rows`` (of Spark ``types``) —
     exactly ``_bucket_col`` — or None when a type has no Python
     hasher."""
     hashers = [xxhash64.hasher(t) for t in types]
     if None in hashers:
         return None
-    return sorted({xxhash64.xxhash64(r, hashers) % n_buckets
-                   for r in rows})
+    return [xxhash64.xxhash64(r, hashers) % n_buckets for r in rows]
+
+
+def _driver_buckets(rows, types: Sequence[T.DataType],
+                    n_buckets: int) -> Optional[list[int]]:
+    """Sorted distinct buckets of the key tuples ``rows``, or None
+    when a type has no Python hasher."""
+    buckets = _row_buckets(rows, types, n_buckets)
+    return None if buckets is None else sorted(set(buckets))
+
+
+def _data_files(spark, d: str) -> list[tuple[str, int]]:
+    """(path, bytes) of each data file in directory ``d``: the files
+    Spark's reader lists, so hidden names (``_``, ``.``) are
+    skipped."""
+    return [(_join(d, name), size)
+            for name, is_dir, size, _ in fsutil.list_status(d, spark=spark)
+            if not is_dir and not name.startswith(("_", "."))]
 
 
 def manifest_current(path: str, spark=None) -> Optional[Tuple[int, int]]:
@@ -347,15 +374,37 @@ def manifest_merge(updates: DataFrame, path: str,
     here): the equi-joins of the built-in modes drop null keys, so a
     null-keyed row could never be updated or deleted once written.
 
+    Where the commit runs: when ``updates`` folds to a local relation
+    of at most ``_DRIVER_KEYS_MAX`` (4096) rows — ``local_df`` output
+    and projections or filters over it, such as
+    ``Pipeline.create_multiple`` over ``local_df`` — its rows are
+    collected with no job and routed to buckets in Python.  If, in
+    addition, the mode is upsert without a ``merge_fn``, the store is
+    local, every column is flat (no struct, array or map), every key
+    type has a Python hasher (not floating point, decimal or
+    timestamp), column types agree between the batch and the store,
+    ``compression`` is one pyarrow writes, and the touched bucket
+    files total at most ``_DRIVER_READ_MAX_BYTES`` (32 MB), the
+    commit runs on the driver with pyarrow and no Spark job: stored
+    rows whose keys the batch carries are dropped, the batch's live
+    rows are appended to the buckets they hash to, and each non-empty
+    touched bucket is written as one parquet file.  It records the
+    same schema as the Spark path, which the merge plan's analysis
+    gives both.
+
+    Otherwise the commit is one Spark job over the merge plan, and
     ``updates`` is evaluated TWICE — once for touched-bucket discovery
-    (a distinct on the bucket hash) and once inside the merge write.
-    foreachBatch maintainers pass an already-materialized micro-batch,
-    so this is free there; a direct caller whose ``updates`` is an
-    expensive plan should ``updates.localCheckpoint(eager=True)``
-    first to avoid recomputing it.  Updates whose key columns fold to
-    a small local relation (``local_df`` output and projections or
-    filters over it) are routed to buckets in Python instead, with no
-    discovery job.
+    (a distinct on the bucket hash; skipped for driver-resident
+    updates) and once inside the merge write.  foreachBatch
+    maintainers pass an already-materialized micro-batch, so this is
+    free there; a direct caller whose ``updates`` is an expensive plan
+    should ``updates.localCheckpoint(eager=True)`` first to avoid
+    recomputing it.
+
+    Numeric batch keys convert to the store's recorded key types
+    first (an ``int`` batch merges into a ``bigint`` store); a value
+    the store's type cannot hold raises, and any other key type
+    mismatch raises ValueError.
     """
     if mode not in ("upsert", "additive"):
         raise ValueError(f"unknown mode {mode!r} "
@@ -409,10 +458,27 @@ def manifest_merge(updates: DataFrame, path: str,
                     "loudly by default; pass evolve_schema=True for "
                     "additive widening")
 
-    rows = _driver_keys(updates, keys)
-    touched = None if rows is None else _driver_buckets(
-        rows, [updates.schema[k].dataType for k in keys], n_buckets)
-    if touched is None:
+    # route and match under the store's key types: hashing an int
+    # batch key where the store keys by bigint picks other buckets
+    schema = T.StructType.fromJson(man["schema"]) \
+        if man is not None and man.get("schema") else None
+    got = [updates.schema[k].dataType for k in keys]
+    ktypes = _key_types(keys, got, schema, "batch")
+    conv = {k: _as_type(k, t, strict=True)
+            for k, g, t in zip(keys, got, ktypes) if g != t}
+    if conv:
+        updates = updates.withColumns(conv)
+
+    rows = _driver_rows(updates)
+    if rows is None:
+        buckets = None
+    else:
+        at = [updates.columns.index(k) for k in keys]
+        buckets = _row_buckets([tuple(r[i] for i in at) for r in rows],
+                               ktypes, n_buckets)
+    if buckets is not None:
+        touched = sorted(set(buckets))
+    else:
         bcol = _bucket_col(keys, n_buckets)
         touched = sorted(
             r[0] for r in updates.select(bcol.alias(_BKT)).distinct()
@@ -456,21 +522,122 @@ def manifest_merge(updates: DataFrame, path: str,
     else:  # nothing written: the store (and its schema) are unchanged
         schema_json = man.get("schema") if man is not None \
             else out.schema.jsonValue()
-    return _commit_version(
-        spark, path, out, keys, n_buckets, version,
+    staging = _join(path, f"data/v{version:06d}")
+    written, writer = None, "driver"
+    if mode == "upsert" and merge_fn is None and buckets is not None:
+        written = _driver_write(path, staging, man, schema, out.schema,
+                                updates.schema, rows, buckets, touched,
+                                keys, tombstone_col, compression)
+    if written is None:
+        written, writer = _spark_write(spark, staging, out, keys,
+                                       n_buckets, touched,
+                                       compression), "spark"
+    return _publish(
+        spark, path, version, written, writer=writer,
         base_buckets=dict(man["buckets"]) if man is not None else {},
-        touched=touched, epoch_id=epoch_id, schema_json=schema_json,
-        compression=compression,
+        touched=touched, keys=keys, n_buckets=n_buckets,
+        epoch_id=epoch_id, schema_json=schema_json,
         expected_version=cur[0] if cur is not None else None)
 
 
-def _commit_version(spark, path: str, out: Optional[DataFrame],
-                    keys: Sequence[str], n_buckets: int, version: int,
-                    *, base_buckets: dict, touched: Sequence[int],
-                    epoch_id: int, schema_json, compression: str,
-                    expected_version: Optional[int] = None) -> int:
-    """Write the touched buckets under ``data/vN``, then publish the
-    manifest and pointer — the shared tail of merge and rebucket.
+def _spark_write(spark, staging: str, out: DataFrame,
+                 keys: Sequence[str], n_buckets: int,
+                 touched: Sequence[int],
+                 compression: str) -> dict[int, list[int]]:
+    """Write ``out``'s rows under ``staging/bkt=b/`` with one Spark
+    job; returns {bucket: [bytes of each file written]}."""
+    if not touched:
+        return {}
+    # one job rewrites (and re-compacts) every touched bucket:
+    # repartition by the bucket column so each bucket lands in ~one
+    # task -> ~one file, bounding file counts across commits
+    (out.withColumn(_BKT, _bucket_col(keys, n_buckets))
+        .repartition(len(touched), F.col(_BKT))
+        .write.mode("errorifexists")
+        .option("compression", compression)
+        .partitionBy(_BKT).parquet(staging))
+    return {int(name.split("=", 1)[1]):
+            [n for _, n in _data_files(spark, _join(staging, name))]
+            for name in fsutil.list_dir(staging, spark=spark)
+            if name.startswith(_BKT + "=")}
+
+
+def _driver_write(path: str, staging: str, man: Optional[dict],
+                  schema: Optional[T.StructType], out: T.StructType,
+                  batch: T.StructType, rows: list, buckets: list,
+                  touched: Sequence[int], keys: Sequence[str],
+                  tombstone_col: Optional[str],
+                  compression: str) -> Optional[dict[int, list[int]]]:
+    """The upsert of the batch ``rows`` (of schema ``batch``; bucket
+    ``buckets[i]`` for row i) written on the driver with pyarrow, one
+    parquet file per non-empty touched bucket under ``staging``;
+    returns {bucket: [bytes of its file]}.  Each touched bucket's
+    stored rows lose the keys the batch carries (left anti-join) and
+    keep their bucket; the batch's non-tombstone rows append to the
+    buckets they hash to.  ``out`` is the schema of the Spark path's
+    merge plan, which the files take.  None — nothing written — when
+    the store is remote or lacks a recorded schema, the codec has no
+    pyarrow equivalent, a column is not flat, a column's type differs
+    between ``out``, the batch and the store, or the touched files
+    exceed ``_DRIVER_READ_MAX_BYTES``."""
+    codec = _ARROW_CODECS.get(compression.lower())
+    if codec is None or (man is not None and schema is None) \
+            or any(f.name in s.names and s[f.name].dataType != f.dataType
+                   for s in (batch, schema) if s is not None
+                   for f in out.fields):
+        return None
+    stored = _stored_table(path, man["buckets"] if man else {}, out,
+                           touched)
+    if stored is None:
+        return None
+
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    at = {c: i for i, c in enumerate(batch.names)}
+    dead = at.get(tombstone_col)
+    alive = [i for i, r in enumerate(rows) if dead is None or not r[dead]]
+    new = pa.table(
+        [pa.array([rows[i][at[f.name]] for i in alive], f.type)
+         if f.name in at else pa.nulls(len(alive), f.type)
+         for f in stored.schema if f.name != _BKT]
+        + [pa.array([buckets[i] for i in alive], pa.int32())],
+        schema=stored.schema)
+    batch_keys = pa.table(
+        [pa.array([r[at[k]] for r in rows], stored.schema.field(k).type)
+         for k in keys], names=list(keys))
+    merged = pa.concat_tables([
+        stored.join(batch_keys, list(keys), join_type="left anti"), new])
+    written = {}
+    if touched:
+        os.makedirs(fsutil._strip_file_scheme(staging))  # never reused
+    for b in touched:
+        part = merged.filter(pc.equal(merged[_BKT], b)) \
+            .drop_columns([_BKT])
+        if part.num_rows:
+            d = fsutil._strip_file_scheme(_join(staging, f"{_BKT}={b}"))
+            os.makedirs(d)
+            f = os.path.join(d, f"part-00000-{uuid.uuid4()}.parquet")
+            # dictionary pages only bloat ~KB bucket files of mostly
+            # distinct values; Spark's writer falls back to plain there
+            pq.write_table(part, f, compression=codec,
+                           use_dictionary=False, store_schema=False)
+            written[b] = [os.path.getsize(f)]
+    return written
+
+
+def _publish(spark, path: str, version: int,
+             written: dict[int, list[int]], *, writer: str,
+             base_buckets: dict, touched: Sequence[int],
+             keys: Sequence[str], n_buckets: int, epoch_id: int,
+             schema_json, expected_version: Optional[int]) -> int:
+    """Publish version ``version`` whose touched buckets were written
+    under ``data/vN`` (``written``: bucket -> bytes of each file): the
+    manifest, then the pointer — the shared tail of both writers and
+    of rebucket.
 
     ``expected_version`` is the committed version the caller's merge
     was BASED on: re-checked immediately before the pointer publish
@@ -482,34 +649,20 @@ def _commit_version(spark, path: str, out: Optional[DataFrame],
     millisecond race can still slip through), but it converts every
     practical double-writer mistake into a loud abort with only
     orphan files on disk."""
-    staging = _join(path, f"data/v{version:06d}")
-    written = set()
-    if touched:
-        # one job rewrites (and re-compacts) every touched bucket:
-        # repartition by the bucket column so each bucket lands in ~one
-        # task -> ~one file, bounding file counts across commits
-        (out.withColumn(_BKT, _bucket_col(keys, n_buckets))
-            .repartition(len(touched), F.col(_BKT))
-            .write.mode("errorifexists")
-            .option("compression", compression)
-            .partitionBy(_BKT).parquet(staging))
-        for name in fsutil.list_dir(staging, spark=spark):
-            if name.startswith(_BKT + "="):
-                written.add(int(name.split("=", 1)[1]))
-        stray = written - set(touched)
-        if stray:
-            # only the TOUCHED buckets enter the new manifest below, so
-            # rows hashing elsewhere would be silently unreferenced —
-            # turn the documented merge_fn contract (return rows for
-            # the touched buckets only) into a checked invariant.  The
-            # staging dir is left as an orphan; vacuum reclaims it
-            # after the next successful commit.
-            raise ValueError(
-                f"merge result contains keys outside the touched "
-                f"bucket set (buckets {sorted(stray)} vs touched "
-                f"{sorted(touched)}): a merge_fn must only return "
-                "rows for the buckets the batch's updates hash into "
-                "— no commit was published")
+    stray = set(written) - set(touched)
+    if stray:
+        # only the TOUCHED buckets enter the new manifest below, so
+        # rows hashing elsewhere would be silently unreferenced —
+        # turn the documented merge_fn contract (return rows for
+        # the touched buckets only) into a checked invariant.  The
+        # staging dir is left as an orphan; vacuum reclaims it
+        # after the next successful commit.
+        raise ValueError(
+            f"merge result contains keys outside the touched "
+            f"bucket set (buckets {sorted(stray)} vs touched "
+            f"{sorted(touched)}): a merge_fn must only return "
+            "rows for the buckets the batch's updates hash into "
+            "— no commit was published")
 
     buckets = dict(base_buckets)
     for b in touched:
@@ -539,12 +692,15 @@ def _commit_version(spark, path: str, out: Optional[DataFrame],
     # pointer writes still need it (found by the property test: an
     # empty first batch must still commit its epoch)
     fsutil.ensure_dir(path, spark=spark)
+    summary = {"writer": writer, "buckets_touched": len(touched),
+               "files_added": sum(map(len, written.values())),
+               "bytes_added": sum(map(sum, written.values()))}
     fsutil.write_text_atomic(
         _join(path, _manifest_name(version)),
         json.dumps({"version": version, "epoch": int(epoch_id),
-                    "n_buckets": int(n_buckets), "key_cols": keys,
+                    "n_buckets": int(n_buckets), "key_cols": list(keys),
                     "hash": _HASH, "schema": schema_json,
-                    "buckets": buckets},
+                    "buckets": buckets, "summary": summary},
                    sort_keys=True),
         spark=spark)
     fsutil.write_text_atomic(
@@ -575,16 +731,15 @@ def manifest_rebucket(spark: SparkSession, path: str,
     used = _used_versions(path, spark=spark)
     version = (used[-1] + 1) if used else 1
     if df is None:  # empty store: just flip the recorded layout
-        return _commit_version(
-            spark, path, None, keys, n_buckets, version,
-            base_buckets={}, touched=(), epoch_id=cur[1],
-            schema_json=man.get("schema"), compression=compression,
-            expected_version=cur[0])
-    return _commit_version(
-        spark, path, df, keys, n_buckets, version,
-        base_buckets={}, touched=list(range(n_buckets)),
-        epoch_id=cur[1], schema_json=df.schema.jsonValue(),
-        compression=compression, expected_version=cur[0])
+        touched, schema_json = [], man.get("schema")
+    else:
+        touched, schema_json = list(range(n_buckets)), df.schema.jsonValue()
+    written = _spark_write(spark, _join(path, f"data/v{version:06d}"), df,
+                           keys, n_buckets, touched, compression)
+    return _publish(spark, path, version, written, writer="spark",
+                    base_buckets={}, touched=touched, keys=keys,
+                    n_buckets=n_buckets, epoch_id=cur[1],
+                    schema_json=schema_json, expected_version=cur[0])
 
 
 def manifest_stats(spark: SparkSession, path: str) -> Optional[DataFrame]:
@@ -617,32 +772,22 @@ def manifest_stats(spark: SparkSession, path: str) -> Optional[DataFrame]:
         .count().collect())
     rows = []
     for b, rel in sorted(man["buckets"].items(), key=lambda kv: int(kv[0])):
-        full = _join(path, rel)
-        files = [n for n in fsutil.list_dir(full, spark=spark)
-                 if n.endswith(".parquet")]
-        if fsutil.is_local(full):
-            import os as _os
-            d = full[len("file:"):] if full.startswith("file:") else full
-            nbytes = sum(_os.path.getsize(_os.path.join(d, n))
-                         for n in files)
-        else:
-            fs, jpath, _ = fsutil._hadoop(spark, full)
-            nbytes = sum(st.getLen() for st in fs.listStatus(jpath)
-                         if st.getPath().getName().endswith(".parquet"))
+        sizes = [n for _, n in _data_files(spark, _join(path, rel))]
         version = int(rel.split("/")[1][1:])
         rows.append((int(b), rel, version, int(per_dir.get(rel, 0)),
-                     len(files), nbytes))
+                     len(sizes), sum(sizes)))
     return local_df(
         spark, rows, "bucket int, dir string, written_version int, "
                      "rows bigint, files int, bytes bigint")
 
 
-def _probe_types(kcols: Sequence[str], got: Sequence[T.DataType],
-                 schema: Optional[T.StructType]) -> list:
-    """The types probes of types ``got`` are routed and matched under:
-    the store's recorded key types, to which numeric probe keys
-    convert (the probe's own types on a store without a recorded
-    schema).  Any other mismatch raises ValueError."""
+def _key_types(kcols: Sequence[str], got: Sequence[T.DataType],
+               schema: Optional[T.StructType], role: str) -> list:
+    """The types keys of types ``got`` (a lookup's probes or a merge's
+    batch: ``role``) are routed and matched under: the store's
+    recorded key types, to which numeric keys convert (their own
+    types on a store without a recorded schema).  Any other mismatch
+    raises ValueError."""
     if schema is None:
         return got
     want = [schema[k].dataType for k in kcols]
@@ -650,17 +795,66 @@ def _probe_types(kcols: Sequence[str], got: Sequence[T.DataType],
         if g != w and not (isinstance(g, T.NumericType)
                            and isinstance(w, T.NumericType)):
             raise ValueError(
-                f"probe key {k!r} is {g.simpleString()} but the store "
+                f"{role} key {k!r} is {g.simpleString()} but the store "
                 f"keys it as {w.simpleString()}")
     return want
 
 
-def _as_type(k: str, dt: T.DataType) -> Column:
-    """Probe column ``k`` converted to ``dt``; null where the value
-    does not fit (such a key can never have been stored)."""
+def _as_type(k: str, dt: T.DataType, strict: bool = False) -> Column:
+    """Key column ``k`` converted to ``dt``.  A value that does not
+    fit is null (a probe that can never match), or with ``strict`` (a
+    key about to be stored) raises when the plan is evaluated."""
     c = F.col(k)
     v = c.try_cast(dt)
-    return F.when(v == c, v).alias(k)
+    if not strict:
+        return F.when(v == c, v).alias(k)
+    return F.when(c.isNull() | (v == c), v).otherwise(F.raise_error(F.lit(
+        f"key column {k!r} holds a value the store's "
+        f"{dt.simpleString()} key cannot hold"))).alias(k)
+
+
+def _arrow_schema(schema: T.StructType):
+    """``schema`` in Arrow, every field nullable: Spark's file reader
+    reports stored columns nullable, and its writer stores them so."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return to_arrow_schema(T.StructType(
+        [T.StructField(f.name, f.dataType) for f in schema.fields]))
+
+
+def _stored_table(path: str, buckets: dict, schema: T.StructType,
+                  bucket_ids: Sequence[int]):
+    """The stored rows of the buckets ``bucket_ids`` (those present in
+    the manifest's ``buckets`` map) read on the driver with pyarrow:
+    one table under ``schema`` plus an int32 ``bkt`` column holding
+    each row's bucket.  None when the store is remote, a column of
+    ``schema`` is not flat, or the files total more than
+    ``_DRIVER_READ_MAX_BYTES``."""
+    if not fsutil.is_local(path) or not all(
+            isinstance(f.dataType, _FLAT_TYPES) for f in schema.fields):
+        return None
+    files = [(b, f, n) for b in bucket_ids if str(b) in buckets
+             for f, n in _data_files(None, fsutil._strip_file_scheme(
+                 _join(path, buckets[str(b)])))]
+    if sum(n for _, _, n in files) > _DRIVER_READ_MAX_BYTES:
+        return None
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = _arrow_schema(schema)
+    target = cols.append(pa.field(_BKT, pa.int32()))
+    parts = [target.empty_table()]
+    for b, f, _ in files:
+        with pq.ParquetFile(f) as pf:
+            t = pf.read()
+        # align to the schema: columns added by a later evolve_schema
+        # commit are null in buckets not rewritten since
+        parts.append(pa.table(
+            [t[a.name].cast(a.type) if a.name in t.column_names
+             else pa.nulls(t.num_rows, a.type) for a in cols]
+            + [pa.repeat(pa.scalar(b, pa.int32()), t.num_rows)],
+            schema=target))
+    return pa.concat_tables(parts)
 
 
 def _driver_read(spark: SparkSession, path: str, man: dict,
@@ -668,48 +862,24 @@ def _driver_read(spark: SparkSession, path: str, man: dict,
                  kcols: Sequence[str], probes: set
                  ) -> Optional[DataFrame]:
     """The stored rows whose keys are in ``probes`` (tuples under the
-    store's key types), read from the buckets' files with pyarrow on
-    the driver and returned as a local relation.  None when the store
-    is remote, a recorded column is not flat, or the files total more
-    than ``_DRIVER_READ_MAX_BYTES``."""
-    if not fsutil.is_local(path) or not all(
-            isinstance(f.dataType, _FLAT_TYPES) for f in schema.fields):
-        return None
-    files = []
-    for b in bucket_ids:
-        rel = man["buckets"].get(str(b))
-        if rel is not None:
-            # the files Spark's reader would list: hidden names skipped
-            d = fsutil._strip_file_scheme(_join(path, rel))
-            files += [os.path.join(d, n) for n in os.listdir(d)
-                      if not n.startswith(("_", "."))]
-    if sum(map(os.path.getsize, files)) > _DRIVER_READ_MAX_BYTES:
+    store's key types), read with pyarrow on the driver
+    (``_stored_table``) and returned as a local relation; None where
+    ``_stored_table`` is."""
+    stored = _stored_table(path, man["buckets"], schema, bucket_ids)
+    if stored is None:
         return None
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    # nullable like the schema Spark's file reader reports
-    schema = T.StructType([T.StructField(f.name, f.dataType)
-                           for f in schema.fields])
-    target = to_arrow_schema(schema)
-    parts = [target.empty_table()]
-    for f in files:
-        with pq.ParquetFile(f) as pf:
-            t = pf.read()
-        # align to the recorded schema: columns added by a later
-        # evolve_schema commit are null in buckets not rewritten since
-        parts.append(pa.table(
-            [t[a.name].cast(a.type) if a.name in t.column_names
-             else pa.nulls(t.num_rows, a.type) for a in target],
-            schema=target))
-    want = pa.table([pa.array([p[i] for p in probes], target.field(k).type)
+    want = pa.table([pa.array([p[i] for p in probes],
+                              stored.schema.field(k).type)
                      for i, k in enumerate(kcols)], names=list(kcols))
+    # nullable like the schema Spark's file reader reports
     return spark.createDataFrame(
-        pa.concat_tables(parts).join(want, list(kcols),
-                                     join_type="left semi"),
-        schema)
+        stored.join(want, list(kcols), join_type="left semi")
+        .drop_columns([_BKT]),
+        T.StructType([T.StructField(f.name, f.dataType)
+                      for f in schema.fields]))
 
 
 def manifest_lookup(spark: SparkSession, path: str,
@@ -766,12 +936,12 @@ def manifest_lookup(spark: SparkSession, path: str,
     schema = T.StructType.fromJson(man["schema"]) \
         if man.get("schema") is not None else None
     got = [keys.schema[k].dataType for k in kcols]
-    ktypes = _probe_types(kcols, got, schema)
+    ktypes = _key_types(kcols, got, schema, "probe")
     n_buckets = int(man["n_buckets"])
     touched = None
     want = keys.select(*[k if g == t else _as_type(k, t)
                          for k, g, t in zip(kcols, got, ktypes)])
-    rows = _driver_keys(want, kcols)
+    rows = _driver_rows(want)
     if rows is not None:
         # a null (or non-fitting) key matches nothing
         probes = {r for r in rows if None not in r}
@@ -803,9 +973,12 @@ def manifest_history(spark: SparkSession, path: str) -> Optional[DataFrame]:
     i.e. exactly the versions ``manifest_read(version=)`` can still
     serve (committed, at or below the pointer, manifest file present;
     staged/orphaned versions above the pointer are not commits and
-    are excluded).  ``None`` when nothing was ever committed.  Driver
-    cost: one tiny JSON read per retained version, bounded by the
-    vacuum keep-window."""
+    are excluded).  Trailing columns carry each commit's recorded
+    summary: ``writer`` (``"driver"`` or ``"spark"``),
+    ``buckets_touched``, ``files_added`` and ``bytes_added`` — null
+    for manifests written before commits recorded one.  ``None`` when
+    nothing was ever committed.  Driver cost: one tiny JSON read per
+    retained version, bounded by the vacuum keep-window."""
     cur = manifest_current(path, spark=spark)
     if cur is None:
         return None
@@ -818,12 +991,16 @@ def manifest_history(spark: SparkSession, path: str) -> Optional[DataFrame]:
         if txt is None:
             continue  # vacuumed or data-dir-only orphan
         man = json.loads(txt)
+        s = man.get("summary", {})
         rows.append((int(man["version"]), int(man["epoch"]),
                      int(man["n_buckets"]), len(man["buckets"]),
-                     v == cur[0]))
+                     v == cur[0], s.get("writer"), s.get("buckets_touched"),
+                     s.get("files_added"), s.get("bytes_added")))
     return local_df(
         spark, rows, "version int, epoch int, n_buckets int, "
-                     "n_nonempty_buckets int, is_head boolean")
+                     "n_nonempty_buckets int, is_head boolean, "
+                     "writer string, buckets_touched int, "
+                     "files_added int, bytes_added bigint")
 
 
 def manifest_merge_into(source: DataFrame, path: str, *,

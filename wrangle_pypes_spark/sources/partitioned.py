@@ -820,10 +820,10 @@ def pmanifest_lookup(spark: SparkSession, path: str, keys: DataFrame,
     pcol = _recorded_pcol(path, spark=spark)
     frames = []
     if pcol is not None and pcol in keys.columns:
-        pvals = _m._driver_keys(keys, [pcol])
+        pvals = _m._driver_rows(keys.select(pcol))
         if pvals is None:
             pvals = keys.select(pcol).distinct().collect()
-        for (pval,) in pvals:
+        for (pval,) in set(pvals):
             if pval is None:
                 continue
             token = _encode_pval(pval)
