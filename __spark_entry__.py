@@ -4693,14 +4693,15 @@ FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
 def q_stream_rollup_events(spark, sf_dir):
     """Durable streaming continuous aggregate (streaming/windows.py
     ``foreach_batch_rollup_upsert``): each micro-batch rolls up to
-    mergeable state and MERGES into a parquet store keyed by (hour,
-    event_type); only touched groups rewrite.  After the drain the
+    mergeable state and MERGES into a manifest store keyed by (hour,
+    event_type); only touched buckets rewrite.  After the drain the
     store's exact metrics equal a batch rollup of all rows — the SQL
     recompute is the oracle (the HLL users sketch is finalized but
     excluded from the oracle projection; sketch merge accuracy is
     pinned in tests/test_rollup.py)."""
     import tempfile
 
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import foreach_batch_rollup_upsert
 
     metrics = {"n": ("count", "*"), "sum_value": ("sum", "value"),
@@ -4713,7 +4714,7 @@ def q_stream_rollup_events(spark, sf_dir):
                                     group_cols=["hour", "event_type"],
                                     metrics=metrics)
     q.awaitTermination()
-    return (spark.read.parquet(store)
+    return (manifest_read(spark, store)
             .select(F.col("hour").cast("timestamp_ntz").alias("hour"),
                     "event_type", "n",
                     F.round("sum_value", 4).alias("sum_value"),
@@ -4732,19 +4733,18 @@ FROM events GROUP BY 1, 2
 
 
 def q_stream_rollup_acid_store(spark, sf_dir):
-    """NEW r6: the same durable streaming rollup on the
-    versioned-snapshot ACID store (sources/acid.py via
-    ``store_format="acid"``): each micro-batch commits a full snapshot
-    whose atomic pointer write carries the epoch WITH the data —
-    closing the swap store's one-batch double-merge crash window
-    natively (the seam a Delta/Iceberg MERGE would fill; no such jars
-    in this environment).  The drained store must equal the batch
-    rollup — same oracle as ``stream_rollup_events``; the
-    crash-injection and exactly-once proofs live in
-    tests/test_acid.py."""
+    """NEW r6: the same durable streaming rollup on a ONE-bucket
+    manifest store (``store_buckets=1``): every micro-batch rewrites
+    the whole store as one file, and the atomic pointer write carries
+    the epoch WITH the data — the full-snapshot shape of compact
+    streaming state, which the Bloom and count-min maintainers use.
+    The drained store must equal the batch rollup — same oracle as
+    ``stream_rollup_events``; the crash-injection and exactly-once
+    proofs live in tests/test_manifest.py."""
     import tempfile
 
-    from wrangle_pypes_spark.sources.acid import acid_read, acid_vacuum
+    from wrangle_pypes_spark.sources.manifest import (manifest_read,
+                                                      manifest_vacuum)
     from wrangle_pypes_spark.streaming import foreach_batch_rollup_upsert
 
     metrics = {"n": ("count", "*"), "sum_value": ("sum", "value"),
@@ -4755,10 +4755,10 @@ def q_stream_rollup_acid_store(spark, sf_dir):
         "event_type", "value")
     q = foreach_batch_rollup_upsert(ev, store,
                                     group_cols=["hour", "event_type"],
-                                    metrics=metrics, store_format="acid")
+                                    metrics=metrics, store_buckets=1)
     q.awaitTermination()
-    acid_vacuum(store, keep=1)  # drop superseded snapshots, keep head
-    return (acid_read(spark, store)
+    manifest_vacuum(store, keep=1)  # drop superseded rewrites, keep head
+    return (manifest_read(spark, store)
             .select(F.col("hour").cast("timestamp_ntz").alias("hour"),
                     "event_type", "n",
                     F.round("sum_value", 4).alias("sum_value"),
@@ -5324,8 +5324,9 @@ FROM m ORDER BY vec_id
 def q_stream_bloom_dedup_docs(spark, sf_dir):
     """NEW r7: memory-bounded streaming ingest dedup
     (streaming/windows.py ``foreach_batch_bloom_dedup``): seen-key
-    state is a Bloom bitmap in the acid store — O(n_bits), not
-    O(keys) — and each batch appends only provably-unseen rows.
+    state is a Bloom bitmap in a one-bucket manifest store —
+    O(n_bits), not O(keys) — and each batch appends only
+    provably-unseen rows.
     Two deterministic batches (even doc_ids then odd); accepted set =
     first-batch-wins keep-longest per fingerprint, which the oracle
     expresses directly (the well-sized filter is deterministic and
@@ -5380,10 +5381,10 @@ ORDER BY doc_id
 
 def q_stream_rollup_manifest_store(spark, sf_dir):
     """NEW r7: the durable streaming rollup on the bucketed
-    copy-on-write MANIFEST store (sources/manifest.py via
-    ``store_format="manifest"``): same atomic pointer commit as the
-    acid store — data, manifest, epoch publish together — but the
-    store is hash-bucketed by the group keys, so each micro-batch
+    copy-on-write MANIFEST store (sources/manifest.py) with 32
+    buckets: data, manifest and epoch publish together in one atomic
+    pointer commit, and the store is hash-bucketed by the group keys,
+    so each micro-batch
     rewrites only the buckets its groups hash into and every other
     bucket's files carry over by reference.  Per-batch write cost is
     O(touched buckets), not O(store) — the file-level-delta behaviour
@@ -5406,7 +5407,6 @@ def q_stream_rollup_manifest_store(spark, sf_dir):
     q = foreach_batch_rollup_upsert(ev, store,
                                     group_cols=["hour", "event_type"],
                                     metrics=metrics,
-                                    store_format="manifest",
                                     store_buckets=32)
     q.awaitTermination()
     manifest_vacuum(store, keep=1)  # drop superseded bucket rewrites
@@ -5762,10 +5762,9 @@ ORDER BY o_year, o_orderpriority
 
 def q_stream_rollup_pmanifest_store(spark, sf_dir):
     """NEW r8: the durable streaming rollup on the PARTITIONED
-    manifest store (``store_format="manifest"`` +
-    ``store_partition_by=["week"]``): the store lays out as one
-    manifest sub-store per ISO week, each hash-bucketed by the
-    remaining group identity.  Every micro-batch merges per touched
+    manifest store (``store_partition_by=["week"]``): the store lays
+    out as one manifest sub-store per ISO week, each hash-bucketed by
+    the remaining group identity.  Every micro-batch merges per touched
     partition (per-partition atomic pointer commits carrying the
     epoch — exactly-once per partition under replay, the mid-batch-
     crash convergence proof lives in tests/test_partitioned.py), and
@@ -5787,7 +5786,6 @@ def q_stream_rollup_pmanifest_store(spark, sf_dir):
     q = foreach_batch_rollup_upsert(ev, store,
                                     group_cols=["week", "event_type"],
                                     metrics=metrics,
-                                    store_format="manifest",
                                     store_partition_by=["week"],
                                     store_buckets=4)
     q.awaitTermination()
@@ -5844,9 +5842,9 @@ ORDER BY o_custkey
 def q_stream_cms_user_hitters(spark, sf_dir):
     """NEW r8: the streaming count-min maintainer
     (streaming/windows.py ``foreach_batch_cms``): the sketch is
-    merged additively per micro-batch into an acid store (cell-wise
-    integer addition is exactly associative, so the drained store
-    CELL-EXACTLY equals the one-shot sketch — pinned in
+    merged additively per micro-batch into a one-bucket manifest
+    store (cell-wise integer addition is exactly associative, so the
+    drained store CELL-EXACTLY equals the one-shot sketch — pinned in
     tests/test_sketches.py), with the epoch in the pointer making the
     additive merge exactly-once under replay.  Heavy hitters are then
     answered sketch-first off the STORE with an exact verify pass —
@@ -9533,6 +9531,7 @@ def q_stream_drift_hourly(spark, sf_dir):
     import tempfile
 
     from wrangle_pypes_spark.operators import distribution_drift
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import foreach_batch_rollup_upsert
 
     store = tempfile.mkdtemp(prefix="wps_drift_store_") + "/state"
@@ -9542,7 +9541,7 @@ def q_stream_drift_hourly(spark, sf_dir):
                                     group_cols=["hour", "event_type"],
                                     metrics={"n": ("count", "*")})
     q.awaitTermination()
-    counts = spark.read.parquet(store).select(
+    counts = manifest_read(spark, store).select(
         F.col("hour").cast("timestamp_ntz").alias("hour"),
         "event_type", "n")
     ref = (_t(spark, sf_dir, "events")
@@ -10966,7 +10965,8 @@ _ORACLES: dict[str, str] = {
     "stream_dedup_events": SQL_STREAM_DEDUP,
     "stream_static_enrich": SQL_STREAM_ENRICH,
     "stream_rollup_events": SQL_STREAM_ROLLUP,
-    # the acid-store twin drains the same rows into the same metrics
+    # the one-bucket-store twin drains the same rows into the same
+    # metrics
     "stream_rollup_acid_store": SQL_STREAM_ROLLUP,
     # the manifest store drains the same stream to the same state
     "stream_rollup_manifest_store": SQL_STREAM_ROLLUP,

@@ -1,10 +1,9 @@
 """Store catalog (sources/catalog.py): layout detection + the uniform
-metadata row, for all four layouts, without any data scan."""
+metadata row, for every layout, without any data scan."""
 
 from pyspark.sql import functions as F
 
 from wrangle_pypes_spark.sources import describe_store, store_kind
-from wrangle_pypes_spark.sources.acid import acid_commit
 from wrangle_pypes_spark.sources.manifest import manifest_merge
 from wrangle_pypes_spark.sources.partitioned import pmanifest_merge
 from wrangle_pypes_spark.sources.zonemap import zonemap_write
@@ -15,8 +14,6 @@ def test_detect_and_describe_all_layouts(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") % 3).alias("part"),
         (F.col("id") * 2).alias("val"))
 
-    acid = str(tmp_path / "acid")
-    acid_commit(df, acid, epoch_id=7)
     man = str(tmp_path / "man")
     manifest_merge(df.drop("part"), man, ["k"], epoch_id=3,
                    n_buckets=8)
@@ -28,15 +25,11 @@ def test_detect_and_describe_all_layouts(spark, tmp_path):
     zm = str(tmp_path / "zm")
     zonemap_write(df, zm, cluster_by=["k"], target_files=4)
 
-    assert store_kind(acid) == "acid"
     assert store_kind(man) == "manifest"
     assert store_kind(pman) == "pmanifest"
     assert store_kind(zm) == "zonemap"
     assert store_kind(str(tmp_path / "nothing")) is None
     assert describe_store(spark, str(tmp_path / "nothing")) is None
-
-    a = describe_store(spark, acid).collect()[0]
-    assert (a.kind, a.version, a.epoch) == ("acid", 1, 7)
 
     m = describe_store(spark, man).collect()[0]
     assert (m.kind, m.version, m.epoch, m.n_buckets) == \
@@ -65,7 +58,7 @@ def test_describe_surfaces_sidecars_and_streamed_epoch(spark, tmp_path):
     from wrangle_pypes_spark.sources.zonemap import zonemap_append
     from wrangle_pypes_spark.streaming.windows import foreach_batch_cms
 
-    # CMS store: acid kind, sidecar surfaced in detail
+    # CMS store: a one-bucket manifest, sidecar surfaced in detail
     src = str(tmp_path / "feed")
     spark.range(100).select((F.col("id") % 9).alias("k")) \
         .coalesce(1).write.parquet(src)
@@ -76,7 +69,22 @@ def test_describe_surfaces_sidecars_and_streamed_epoch(spark, tmp_path):
         checkpoint=str(tmp_path / "ck"))
     q.awaitTermination()
     row = describe_store(spark, store).collect()[0]
-    assert row.kind == "acid" and "_cms.json" in row.detail
+    assert row.kind == "manifest" and row.n_buckets == 1
+    assert row.detail == "keys=d,pos|_cms.json"
+
+    # Bloom store: the same, with its own sidecar
+    from wrangle_pypes_spark.streaming.windows import (
+        foreach_batch_bloom_dedup)
+    bstore = str(tmp_path / "bloom")
+    q = foreach_batch_bloom_dedup(
+        spark.readStream.schema("k bigint").parquet(src), bstore,
+        key_col="k", accepted_path=str(tmp_path / "acc"),
+        order_cols=[F.col("k")], n_bits=1 << 10,
+        checkpoint=str(tmp_path / "bck"))
+    q.awaitTermination()
+    row = describe_store(spark, bstore).collect()[0]
+    assert row.kind == "manifest" and row.n_buckets == 1
+    assert row.detail == "keys=word|_bloom.json"
 
     # streamed zonemap: the sidecar epoch surfaces
     zm = str(tmp_path / "zm")

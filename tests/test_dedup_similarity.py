@@ -1277,7 +1277,7 @@ def test_streaming_bloom_dedup_equals_first_seen_and_replays(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from wrangle_pypes_spark.sources.acid import acid_read
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import foreach_batch_bloom_dedup
 
     batch_a = spark.createDataFrame(
@@ -1314,7 +1314,7 @@ def test_streaming_bloom_dedup_equals_first_seen_and_replays(spark, tmp_path):
     # in batch A (doc 2) — batch B's higher-score u2 is a DUP, dropped
     assert got == {"u1": 1, "u2": 2, "u3": 5, "u4": 6}
     # seen-state is a bitmap table, bounded by n_bits/64 rows
-    bm = acid_read(spark, store)
+    bm = manifest_read(spark, store)
     assert set(bm.columns) == {"word", "bits"}
     assert bm.count() <= (1 << 12) // 64
 
@@ -1342,7 +1342,7 @@ def test_streaming_bloom_dedup_crash_between_append_and_commit(
     Nothing double-ingests, nothing is lost."""
     from pyspark.sql import functions as F
 
-    from wrangle_pypes_spark.sources.acid import acid_current
+    from wrangle_pypes_spark.sources.manifest import manifest_current
     from wrangle_pypes_spark.streaming import foreach_batch_bloom_dedup
 
     feed = spark.createDataFrame(
@@ -1357,11 +1357,11 @@ def test_streaming_bloom_dedup_crash_between_append_and_commit(
     checkpoint = str(tmp_path / "ck")
     from wrangle_pypes_spark.operators.dedup import dedup_keep_best
     from wrangle_pypes_spark.streaming.windows import (
-        _store_run_tag, _write_epoch_partition)
+        _store_run_tag, _write_batch_partition)
     tag_run = _store_run_tag(checkpoint)
     best = dedup_keep_best(feed, ["k"], [F.col("s"), F.col("doc")])
-    _write_epoch_partition(best, accepted, f"{tag_run}-0")
-    assert acid_current(store) is None  # pointer never published
+    _write_batch_partition(best, accepted, f"{tag_run}-0")
+    assert manifest_current(store) is None  # pointer never published
 
     # recovery: the real maintainer drains the same source with the
     # same checkpoint-derived tag
@@ -1374,7 +1374,7 @@ def test_streaming_bloom_dedup_crash_between_append_and_commit(
     q.awaitTermination()
     rows = {(r.k, r.doc) for r in spark.read.parquet(accepted).collect()}
     assert rows == {("k1", 1), ("k2", 2)}  # exactly once
-    assert acid_current(store) is not None
+    assert manifest_current(store) is not None
 
 
 def test_bloom_dedup_against_null_keys_pass_through(spark):
@@ -1550,7 +1550,7 @@ def test_bloom_resize_crash_window_refused_and_healed(
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from wrangle_pypes_spark.sources import acid as acid_mod
+    from wrangle_pypes_spark.sources import manifest
     from wrangle_pypes_spark.streaming import (bloom_resize_store,
                                                bloom_store_occupancy,
                                                foreach_batch_bloom_dedup)
@@ -1572,17 +1572,20 @@ def test_bloom_resize_crash_window_refused_and_healed(
         q.awaitTermination()
 
     drain(1 << 10)
-    # crash INSIDE the resize, after the .next stage, before commit
-    real_commit = acid_mod.acid_commit
+    # crash INSIDE the resize, after the .next stage, before the
+    # manifest pointer publish
+    real_write = manifest.fsutil.write_text_atomic
 
-    def _boom(*a, **kw):
-        raise RuntimeError("injected crash mid-resize")
+    def _boom(p, text, spark=None):
+        if p.endswith("_ptr.json"):
+            raise RuntimeError("injected crash mid-resize")
+        real_write(p, text, spark=spark)
 
-    monkeypatch.setattr(acid_mod, "acid_commit", _boom)
+    monkeypatch.setattr(manifest.fsutil, "write_text_atomic", _boom)
     with _pytest.raises(RuntimeError, match="injected"):
         bloom_resize_store(spark, store, accepted, key_col="k",
                            n_bits=1 << 12, n_hashes=5)
-    monkeypatch.setattr(acid_mod, "acid_commit", real_commit)
+    monkeypatch.undo()
     # the staged marker survives the crash -> every reader refuses
     with _pytest.raises(RuntimeError, match="_bloom.json.next"):
         bloom_store_occupancy(spark, store)
@@ -1601,7 +1604,7 @@ def test_bloom_resize_crash_window_refused_and_healed(
 def test_bloom_sidecar_pinned_before_first_commit(
         spark, tmp_path, monkeypatch):
     """ADVICE r8 twin of the cms finding: the _bloom.json sidecar is
-    written BEFORE the first acid commit, so a crash in the first
+    written BEFORE the first manifest commit, so a crash in the first
     batch can never leave committed bits whose hash family a later
     resume cannot validate."""
     import os
@@ -1609,7 +1612,7 @@ def test_bloom_sidecar_pinned_before_first_commit(
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from wrangle_pypes_spark.sources import acid as acid_mod
+    from wrangle_pypes_spark.sources import manifest
     from wrangle_pypes_spark.streaming import foreach_batch_bloom_dedup
 
     store = str(tmp_path / "store")
@@ -1628,23 +1631,26 @@ def test_bloom_sidecar_pinned_before_first_commit(
             checkpoint=str(tmp_path / f"ck{n_bits}"))
         q.awaitTermination()
 
-    def _boom(*a, **kw):
-        raise RuntimeError("injected crash before first commit")
+    real_write = manifest.fsutil.write_text_atomic
 
-    real_commit = acid_mod.acid_commit
-    monkeypatch.setattr(acid_mod, "acid_commit", _boom)
+    def _boom(p, text, spark=None):
+        if p.endswith("_ptr.json"):  # the manifest pointer publish
+            raise RuntimeError("injected crash before first commit")
+        real_write(p, text, spark=spark)
+
+    monkeypatch.setattr(manifest.fsutil, "write_text_atomic", _boom)
     with _pytest.raises(Exception, match="injected"):
         drain(1 << 10)
     # crash landed between sidecar and commit: params pinned, no bits
     assert os.path.exists(os.path.join(store, "_bloom.json"))
-    assert acid_mod.acid_current(store) is None
+    assert manifest.manifest_current(store) is None
     # a resume with DIFFERENT params now fails validation instead of
     # silently building a store the sidecar misdescribes
-    monkeypatch.setattr(acid_mod, "acid_commit", real_commit)
+    monkeypatch.undo()
     with _pytest.raises(ValueError, match="immutable"):
         drain(1 << 11)
     drain(1 << 10)  # original params replay cleanly
-    assert acid_mod.acid_current(store) is not None
+    assert manifest.manifest_current(store) is not None
 
 
 def test_lsh_hot_bucket_skew_guard(spark):

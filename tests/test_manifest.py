@@ -1,6 +1,6 @@
 """Bucketed copy-on-write manifest store: file-level delta commits
 with an atomic pointer (sources/manifest.py) — O(touched buckets) per
-merge instead of the acid store's O(store) full snapshot."""
+merge instead of an O(store) full rewrite."""
 
 import json
 import os
@@ -127,7 +127,7 @@ def test_torn_pointer_reads_as_uncommitted(spark, tmp_path):
 
 
 def test_vacuum_keeps_referenced_old_version_dirs(spark, tmp_path):
-    """The difference from the acid store's vacuum: an OLD version's
+    """The difference from a full-snapshot vacuum: an OLD version's
     bucket directory stays alive as long as the committed manifest
     still references it — only unreferenced directories go."""
     store = str(tmp_path / "man")
@@ -357,7 +357,7 @@ def test_streaming_rollup_manifest_store_equals_batch_and_survives_crash(
     store = str(tmp_path / "rollup_man")
     q = foreach_batch_rollup_upsert(
         stream, store, group_cols=["bucket", "event_type"],
-        metrics=METRICS, store_format="manifest", store_buckets=16)
+        metrics=METRICS, store_buckets=16)
     q.awaitTermination()
 
     want = {(r.bucket, r.event_type): (r.n, round(r.total, 9))
@@ -370,7 +370,7 @@ def test_streaming_rollup_manifest_store_equals_batch_and_survives_crash(
     with pytest.warns(UserWarning, match="WITHOUT a checkpoint"):
         q2 = foreach_batch_rollup_upsert(
             stream, store, group_cols=["bucket", "event_type"],
-            metrics=METRICS, store_format="manifest", store_buckets=16)
+            metrics=METRICS, store_buckets=16)
     q2.awaitTermination()
     assert _state(spark, store) == want
 
@@ -386,7 +386,7 @@ def test_streaming_rollup_manifest_store_equals_batch_and_survives_crash(
     with pytest.warns(UserWarning, match="WITHOUT a checkpoint"):
         q3 = foreach_batch_rollup_upsert(
             stream, store, group_cols=["bucket", "event_type"],
-            metrics=METRICS, store_format="manifest", store_buckets=16)
+            metrics=METRICS, store_buckets=16)
     q3.awaitTermination()
     assert _state(spark, store) == want
     manifest_vacuum(store, keep=1)
@@ -584,8 +584,8 @@ def test_cdc_store_format_validation(spark, tmp_path):
 
 def test_rollup_manifest_partition_by_routes_to_pmanifest(
         spark, events, tmp_path):
-    """store_format='manifest' + store_partition_by no longer rejects
-    (r8): it routes to the PARTITIONED manifest store — one sub-store
+    """store_partition_by routes the rollup to the PARTITIONED
+    manifest store — one sub-store
     per grain value.  The layout proves the routing; equivalence and
     guard semantics are pinned in tests/test_partitioned.py."""
     import os
@@ -600,7 +600,7 @@ def test_rollup_manifest_partition_by_routes_to_pmanifest(
     store = str(tmp_path / "proll")
     q = foreach_batch_rollup_upsert(
         stream, store, group_cols=["bucket", "event_type"],
-        metrics=METRICS, store_format="manifest",
+        metrics=METRICS,
         store_partition_by=["bucket"], store_buckets=4)
     q.awaitTermination()
     parts = [p for p in os.listdir(store) if p.startswith("p=")]
@@ -687,7 +687,7 @@ def test_vacuum_never_touches_versions_above_pointer(spark, tmp_path):
 
 
 def test_vacuum_concurrent_reader_soak(spark, tmp_path):
-    """Manifest twin of the acid store's soak test: a maintainer loop
+    """Vacuum soak: a maintainer loop
     committing many epochs with a vacuum cadence keeps manifests
     bounded by keep, never breaks a current reader, and a reader
     pinned to an OLD version keeps working exactly until the keep

@@ -319,7 +319,7 @@ def test_property_partitioned_upsert_matches_dict_model(
 
 def test_streaming_rollup_partitioned_manifest_equals_batch(
         spark, tables, tmp_path):
-    """foreach_batch_rollup_upsert with store_format='manifest' +
+    """foreach_batch_rollup_upsert with
     store_partition_by=[time grain] lays the store out as value
     partitions over hash-bucketed sub-stores: the drained store must
     equal the one-shot rollup, a partition-range read must equal the
@@ -352,7 +352,7 @@ def test_streaming_rollup_partitioned_manifest_equals_batch(
     store = str(tmp_path / "prollup")
     q = foreach_batch_rollup_upsert(
         stream, store, group_cols=["day", "event_type"],
-        metrics=metrics, store_format="manifest",
+        metrics=metrics,
         store_partition_by=["day"], store_buckets=4)
     q.awaitTermination()
 
@@ -379,7 +379,7 @@ def test_streaming_rollup_partitioned_manifest_equals_batch(
     with pytest.warns(UserWarning, match="WITHOUT a checkpoint"):
         q2 = foreach_batch_rollup_upsert(
             stream, store, group_cols=["day", "event_type"],
-            metrics=metrics, store_format="manifest",
+            metrics=metrics,
             store_partition_by=["day"], store_buckets=4)
     q2.awaitTermination()
     assert _rows(pmanifest_read(spark, store)) == _rows(want)
@@ -578,12 +578,12 @@ def test_rollup_partition_col_must_be_group_col(spark, tables, tmp_path):
     with pytest.raises(ValueError, match="must be one of the group"):
         foreach_batch_rollup_upsert(
             stream, str(tmp_path / "s"), group_cols=["event_type"],
-            metrics={"n": ("count", "*")}, store_format="manifest",
+            metrics={"n": ("count", "*")},
             store_partition_by=["day"])
     with pytest.raises(ValueError, match="exactly one partition"):
         foreach_batch_rollup_upsert(
             stream, str(tmp_path / "s"), group_cols=["a", "b"],
-            metrics={"n": ("count", "*")}, store_format="manifest",
+            metrics={"n": ("count", "*")},
             store_partition_by=["a", "b"])
 
 

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from wrangle_pypes_spark.operators import (rollup_build, rollup_finalize,
                                            rollup_merge, time_bucket)
+from wrangle_pypes_spark.sources.manifest import manifest_read
 
 METRICS = {
     "n": ("count", "*"),
@@ -123,7 +124,7 @@ def test_streaming_rollup_upsert_equals_batch(spark, events, tmp_path):
         metrics=METRICS)
     q.awaitTermination()
 
-    got_state = spark.read.parquet(store)
+    got_state = manifest_read(spark, store)
     want_state = rollup_build(events, group_cols=["bucket", "event_type"],
                               metrics=METRICS)
     _assert_rollups_equal(_scalar_rows(got_state), _scalar_rows(want_state))
@@ -138,7 +139,7 @@ def test_streaming_rollup_upsert_equals_batch(spark, events, tmp_path):
         assert got_users[k] == pytest.approx(u, rel=0.1)
 
     # redelivery protection: draining the same files again re-delivers
-    # epochs <= the store's epoch marker — they must be SKIPPED, not
+    # epochs <= the store's committed epoch — they must be SKIPPED, not
     # double-merged (rollup merge is additive).  Resuming an existing
     # store without a checkpoint is only sound for exactly this
     # byte-identical re-drain, so the maintainer must WARN about it.
@@ -147,7 +148,7 @@ def test_streaming_rollup_upsert_equals_batch(spark, events, tmp_path):
             stream, store, group_cols=["bucket", "event_type"],
             metrics=METRICS)
     q2.awaitTermination()
-    again = _scalar_rows(spark.read.parquet(store))
+    again = _scalar_rows(manifest_read(spark, store))
     assert again == _scalar_rows(got_state)
 
 
@@ -220,7 +221,7 @@ def test_streaming_rollup_histogram_state_composes(spark, events, tmp_path):
     q.awaitTermination()
 
     got = {r.event_type: (r.n, r.hist)
-           for r in spark.read.parquet(store).collect()}
+           for r in manifest_read(spark, store).collect()}
     want = {r.event_type: (r.n, r.hist)
             for r in rollup_build(events, group_cols=["event_type"],
                                   metrics=metrics).collect()}

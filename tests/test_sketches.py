@@ -211,7 +211,7 @@ def test_cms_sidecar_pinned_before_first_commit(
 
     import pytest as _pytest
 
-    from wrangle_pypes_spark.sources import acid as acid_mod
+    from wrangle_pypes_spark.sources import manifest
     from wrangle_pypes_spark.streaming import foreach_batch_cms
 
     events = tables["events"].select("user_id")
@@ -227,24 +227,27 @@ def test_cms_sidecar_pinned_before_first_commit(
                               checkpoint=str(tmp_path / ck))
         q.awaitTermination()
 
-    def _boom(*a, **kw):
-        raise RuntimeError("injected crash before first commit")
+    real_write = manifest.fsutil.write_text_atomic
 
-    real_commit = acid_mod.acid_commit
-    monkeypatch.setattr(acid_mod, "acid_commit", _boom)
+    def _boom(p, text, spark=None):
+        if p.endswith("_ptr.json"):  # the manifest pointer publish
+            raise RuntimeError("injected crash before first commit")
+        real_write(p, text, spark=spark)
+
+    monkeypatch.setattr(manifest.fsutil, "write_text_atomic", _boom)
     with _pytest.raises(Exception, match="injected"):
         _drain(512, "ck1")
     # crash landed between sidecar write and commit: params pinned,
     # zero counters committed
     assert os.path.exists(os.path.join(store, "_cms.json"))
-    assert acid_mod.acid_current(store) is None
-    monkeypatch.setattr(acid_mod, "acid_commit", real_commit)
+    assert manifest.manifest_current(store) is None
+    monkeypatch.undo()
     # a resume with a DIFFERENT family now fails validation instead
     # of silently mixing hash families
     with _pytest.raises(ValueError, match="immutable"):
         _drain(1024, "ck2")
     _drain(512, "ck3")  # original params replay cleanly
-    assert acid_mod.acid_current(store) is not None
+    assert manifest.manifest_current(store) is not None
 
 
 # ---------------------------------------------------------------- BKS

@@ -1,11 +1,12 @@
 """Driver-side control-file I/O that works beyond the local disk.
 
-The durable maintainers keep tiny control files NEXT TO their stores —
-the epoch marker of ``foreach_batch_rollup_upsert`` and the
-``._upsert_bak`` swap directory of ``upsert_parquet``.  Plain
-``open()`` / ``os.rename`` only address the driver's local filesystem;
-on a real cluster the store lives on HDFS/S3/GCS, where those calls
-silently target the wrong filesystem.  Everything here dispatches on
+The durable stores keep tiny control files in or NEXT TO their data —
+the manifest store's ``_ptr.json`` pointer and ``_mN.json``
+manifests, the streaming maintainers' ``_bloom.json``/``_cms.json``
+sidecars, and the ``._upsert_bak`` swap directory of
+``upsert_parquet``.  Plain ``open()`` / ``os.rename`` only address
+the driver's local filesystem; on a real cluster the store lives on
+HDFS/S3/GCS, where those calls silently target the wrong filesystem.  Everything here dispatches on
 the path's scheme:
 
 * **local** (no scheme, or ``file:``) — POSIX fast path, no JVM

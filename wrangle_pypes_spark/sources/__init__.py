@@ -7,7 +7,6 @@ engine's conventions (explicit schemas, star-schema loading, JSON-string
 payload parsing for dynamic columns).
 """
 
-from .acid import (acid_commit, acid_current, acid_read, acid_vacuum)
 from .avro_table import read_avro, write_avro
 from .datasource import (DeltaJarlessDataSource,
                          IcebergJarlessDataSource)
@@ -52,8 +51,7 @@ from .tables import (TABLES, ensure_session_confs, infer_json_schema,
                      read_binary_files, read_csv, read_jsonl, read_text)
 
 __all__ = ("DeltaJarlessDataSource", "IcebergJarlessDataSource",
-           "TABLES", "acid_commit", "acid_current", "acid_read",
-           "acid_vacuum", "convert_to_delta", "convert_to_iceberg",
+           "TABLES", "convert_to_delta", "convert_to_iceberg",
            "delta_changes", "delta_checkpoint", "delta_clone",
            "delta_optimize", "iceberg_changes", "iceberg_delete_where",
            "delta_delete_where", "delta_log_cleanup",

@@ -1,18 +1,18 @@
-"""Store catalog: one ops surface over the engine's four storage
-layouts.
+"""Store catalog: one ops surface over the engine's storage layouts.
 
-The engine grew four on-disk layouts, each the right answer to a
-different access pattern — acid (compact full-snapshot state),
-manifest (hash-bucketed keyed data, file-level deltas), pmanifest
-(value partitions over manifest sub-stores), zonemap (range/Z-order
-clustered write-once tables).  An operator staring at a path should
-not need to know which one it is to ask "what is this, how current is
-it, how big is its layout": :func:`store_kind` detects the layout
-from its control files, and :func:`describe_store` returns one
-uniform metadata row per store — driver-side JSON/listing reads only,
-NO data scan (per-layout deep health lives in the layout's own stats
-function: ``manifest_stats`` / ``pmanifest_stats`` / ``zonemap_stats``
-/ ``audit_parquet_layout``).
+Three native layouts, each the right answer to a different access
+pattern — manifest (hash-bucketed keyed data with file-level deltas;
+also the one-bucket home of the streaming Bloom and count-min state),
+pmanifest (value partitions over manifest sub-stores) and zonemap
+(range/Z-order clustered write-once tables) — plus the manifest-backed
+vector and text indexes and the foreign Delta and Iceberg tables.  An
+operator staring at a path should not need to know which one it is to
+ask "what is this, how current is it, how big is its layout":
+:func:`store_kind` detects the layout from its control files, and
+:func:`describe_store` returns one uniform metadata row per store —
+driver-side JSON/listing reads only, NO data scan (per-layout deep
+health lives in the layout's own stats function: ``manifest_stats`` /
+``pmanifest_stats`` / ``zonemap_stats`` / ``audit_parquet_layout``).
 
 Reference analog: none — the reference (pipeline.py:33) has no
 storage; this is the operability layer a multi-layout 100 TB
@@ -31,20 +31,17 @@ from .. import fsutil
 from ..localdf import local_df
 
 _MANIFEST_RE = re.compile(r"^_m(\d{6})\.json$")
-_ACID_V_RE = re.compile(r"^_v(\d{6})$")
 
-KINDS = ("pmanifest", "vectorindex", "textindex", "manifest", "acid",
+KINDS = ("pmanifest", "vectorindex", "textindex", "manifest",
          "zonemap", "delta", "iceberg")
 
 
 def store_kind(path: str, spark=None) -> Optional[str]:
-    """Which layout lives at ``path``: ``'acid'``, ``'manifest'``,
-    ``'pmanifest'``, ``'zonemap'``, or None when no layout's control
-    files are present.  Detection order matters where markers
-    coexist: a pmanifest parent holds ``_pstore.json`` (its
-    sub-stores are manifests); acid and manifest stores both publish
-    ``_ptr.json`` and are told apart by their version artifacts
-    (``_mNNNNNN.json`` manifests vs ``_vNNNNNN`` snapshot dirs)."""
+    """Which layout lives at ``path`` — one of :data:`KINDS` — or None
+    when no layout's control files are present.  Detection order
+    matters where markers coexist: a pmanifest parent holds
+    ``_pstore.json`` (its sub-stores are manifests), and the vector
+    and text indexes are manifest stores with their own sidecar."""
     if not fsutil.dir_exists(path, spark=spark):
         return None
     names = set(fsutil.list_dir(path, spark=spark))
@@ -74,10 +71,6 @@ def store_kind(path: str, spark=None) -> Optional[str]:
         return "textindex"
     if any(_MANIFEST_RE.match(n) for n in names):
         return "manifest"
-    if "_ptr.json" in names and (any(_ACID_V_RE.match(n)
-                                     for n in names)
-                                 or len(names) == 1):
-        return "acid"
     return None
 
 
@@ -126,18 +119,6 @@ def describe_store(spark: SparkSession, path: str) -> Optional[DataFrame]:
         detail = ("partition_by="
                   + ",".join(snap.logical_partition_columns
                              or ["<none>"]))
-    elif kind == "acid":
-        from .acid import _existing_versions, acid_current
-
-        cur = acid_current(path, spark=spark)
-        if cur is not None:
-            version, epoch = cur
-        n_kept = len(_existing_versions(path, spark=spark))
-        detail = "full-snapshot-per-commit"
-        side = [n for n in fsutil.list_dir(path, spark=spark)
-                if n in ("_cms.json", "_bloom.json")]
-        if side:
-            detail += "|" + ",".join(sorted(side))
     elif kind in ("manifest", "vectorindex", "textindex"):
         from .manifest import (_load_manifest, _used_versions,
                                manifest_current)
@@ -149,6 +130,9 @@ def describe_store(spark: SparkSession, path: str) -> Optional[DataFrame]:
             n_buckets = int(man["n_buckets"])
             n_files = len(man["buckets"])
             detail = "keys=" + ",".join(man["key_cols"])
+        side = [n for n in fsutil.list_dir(path, spark=spark)
+                if n in ("_bloom.json", "_cms.json")]
+        detail = "|".join(d for d in (detail, *side) if d)
         if kind == "vectorindex":
             side = json.loads(fsutil.read_text(
                 path.rstrip("/") + "/_vindex.json", spark=spark))

@@ -76,7 +76,7 @@ list they operate on — inherent to their contract and documented on
 each.
 
 Reference parity: the reference engine (wrangle_pypes) has no table
-format; this is [EXT] north-star surface alongside sources/acid.py
+format; this is [EXT] north-star surface alongside sources/manifest.py
 (whose docstring names Delta as the real-world answer).
 """
 

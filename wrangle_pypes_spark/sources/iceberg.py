@@ -2904,6 +2904,12 @@ def iceberg_rewrite_data_files(spark: SparkSession, table: str, *,
     source skip replace snapshots, exactly like Delta's
     ``dataChange=false``.
 
+    ``target_file_bytes`` also sizes the OUTPUT files of an
+    unpartitioned table.  A partitioned table's victims are staged by
+    a rebalance on the partition tuple, which splits at Spark's
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` instead, so
+    there it only picks which files are rewritten.
+
     STATS PRESERVATION (the reason a naive rewrite was refused in
     earlier rounds): a manifest that keeps all its files is carried
     BY REFERENCE — its manifest-list entry keeps the original path,

@@ -1,12 +1,14 @@
 """Bucketed copy-on-write keyed store with file-level delta commits —
-the O(changed-data) companion to :mod:`wrangle_pypes_spark.sources.acid`.
+the commit protocol of the engine's keyed and additive streaming
+state.
 
-The acid store's pointer commit closes the data-vs-epoch crash window,
-but every commit rewrites a FULL snapshot — the right trade for compact
-state, the wrong one for a data-sized keyed store.  Table formats
-(Delta/Iceberg) solve this with a transaction log that commits
-file-level deltas; none of their jars exist in this environment, so
-this module implements that essential idea directly on parquet + JSON:
+A keyed store has to publish its data and the stream epoch that
+produced it as ONE atomic step, or a crash between the two re-merges a
+batch on recovery (harmless for idempotent upserts, corrupting for
+additive merges).  Table formats (Delta/Iceberg) solve this with a
+transaction log that commits file-level deltas; none of their jars
+exist in this environment, so this module implements that essential
+idea directly on parquet + JSON:
 
 ```
 store/
@@ -27,14 +29,16 @@ the new manifest simply repeats their entries.  Write cost per commit
 is therefore O(touched buckets) ~ O(batch * store/n_buckets), not
 O(store) — with enough buckets, a small batch against a huge store
 rewrites a small fraction of it, which is exactly the file-level-delta
-behaviour a Delta/Iceberg MERGE gives.
+behaviour a Delta/Iceberg MERGE gives.  Compact state that every
+batch touches almost whole (the streaming Bloom bitmap and count-min
+sketch) uses ``n_buckets=1``: each commit is then a one-file rewrite.
 
-Commit protocol (the correctness argument, same shape as the acid
-store's): (1) the touched buckets' new directories are written
-completely under ``data/vN/`` (N = one past the highest version ever
-used, committed or orphaned), (2) the new manifest ``_mN.json`` is
-written — still invisible, (3) ``_ptr.json`` is renamed into place with
-``{version: N, epoch: E}``.  Step 3 is the only visible state change
+Commit protocol (the correctness argument): (1) the touched
+buckets' new directories are written completely under ``data/vN/``
+(N = one past the highest version ever used, committed or orphaned),
+(2) the new manifest ``_mN.json`` is written — still invisible,
+(3) ``_ptr.json`` is renamed into place with ``{version: N, epoch:
+E}``.  Step 3 is the only visible state change
 and it carries the epoch WITH the data mapping, so a crash anywhere
 earlier leaves orphan files and the OLD store: the replayed batch
 merges exactly once.  Readers resolve the pointer, load one immutable

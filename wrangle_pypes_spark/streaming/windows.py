@@ -204,27 +204,58 @@ def stream_static_enrich(stream: DataFrame, dim: DataFrame,
                        how=how)
 
 
-def _epoch_marker_path(store_path: str) -> str:
-    return store_path.rstrip("/") + "._epoch"
+def _refuse_retired_layout(store_path: str, who: str, *, spark) -> None:
+    """Refuse a store path that holds a layout the rollup, Bloom and
+    CMS maintainers no longer write: a swap store (an
+    ``upsert_parquet`` table, with parquet files or Spark's
+    ``_SUCCESS`` at its top level, or a ``<store>._epoch`` marker
+    beside it) or a full-snapshot store (``_ptr.json`` with
+    ``_vNNNNNN`` snapshot directories).  These maintainers commit
+    through the manifest store only; resuming on either layout would
+    start a fresh manifest store beside the old state and silently
+    drop it.  A crashed first manifest commit (``data/`` orphans, no
+    ``_ptr.json``) is a manifest store and resumes."""
+    import re
 
-
-def _read_epoch(store_path: str, spark=None) -> int:
     from .. import fsutil
 
-    txt = fsutil.read_text(_epoch_marker_path(store_path), spark=spark)
-    try:
-        return int(txt.strip())
-    except (AttributeError, ValueError):
-        return -1
+    names = fsutil.list_dir(store_path, spark=spark)
+    if (fsutil.read_text(store_path.rstrip("/") + "._epoch",
+                         spark=spark) is not None
+            or any(n.endswith(".parquet") or n == "_SUCCESS"
+                   for n in names)):
+        layout = "a swap store (upsert_parquet table + ._epoch marker)"
+    elif "_ptr.json" in names and any(re.fullmatch(r"_v\d{6}", n)
+                                      for n in names):
+        layout = "a full-snapshot store (_ptr.json + _vNNNNNN dirs)"
+    else:
+        return
+    raise ValueError(
+        f"{who}: {store_path!r} holds {layout}, a layout this "
+        "maintainer no longer writes — it commits to a manifest store "
+        "(sources.manifest) only, and resuming here would start a new "
+        "store beside the old state and silently drop it. Rebuild the "
+        "state into a manifest store at a fresh path (or delete the "
+        "old one) before resuming.")
 
 
-def _write_epoch(store_path: str, epoch_id: int, spark=None) -> None:
-    from .. import fsutil
+def _read_state(spark, store_path: str) -> Optional[DataFrame]:
+    """The committed content of a manifest-backed maintainer store.
+    None only when nothing was ever committed: a store whose commits
+    all carried empty batches has no bucket files, so it reads as an
+    empty frame of its recorded schema."""
+    from ..sources.manifest import (_load_manifest, manifest_current,
+                                    manifest_read)
 
-    # tmp-then-rename via fsutil: atomic on POSIX/HDFS, works against
-    # any Hadoop-addressable store (see fsutil for the S3 caveat)
-    fsutil.write_text_atomic(_epoch_marker_path(store_path),
-                             str(epoch_id), spark=spark)
+    cur = manifest_current(store_path, spark=spark)
+    if cur is None:
+        return None
+    df = manifest_read(spark, store_path)
+    if df is None:
+        man = _load_manifest(store_path, cur[0], spark=spark)
+        df = spark.createDataFrame(
+            [], T.StructType.fromJson(man["schema"]))
+    return df
 
 
 def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
@@ -232,51 +263,39 @@ def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
                                 metrics,
                                 checkpoint: Optional[str] = None,
                                 store_partition_by: Sequence[str] = (),
-                                store_format: str = "swap",
                                 store_buckets: int = 64):
     """Durable continuous-aggregate maintenance: every micro-batch is
     rolled up to mergeable state (``operators.rollup.rollup_build``) and
-    MERGED into a parquet rollup store keyed by the group columns.
+    MERGED into a manifest store keyed by the group columns.
 
     This is the streaming twin of the batch ``rollup_merge`` proof:
     state is count/sum/min/max scalars + HLL sketches, all mergeable,
     so the store after N batches equals the one-shot rollup of all N
     batches' rows (pinned in tests/test_rollup.py).
 
-    Only touched groups are READ and MERGED (semi-join against the
-    batch's keys).  The storage REWRITE is touched-partitions-only when
-    ``store_partition_by`` gives the store a partition layout (e.g. a
-    coarse time bucket); without one, parquet's immutability means the
-    table-level swap rewrites the whole store per batch — fine for a
-    compact rollup, wrong for a huge one, so partition big stores.  In
-    production the store is a Delta/Iceberg MERGE target; the topology
-    is identical.
+    The store (``sources.manifest``) hash-buckets the state by the
+    group columns into ``store_buckets`` buckets: each batch reads and
+    rewrites only the buckets its groups hash into, merges the touched
+    groups and carries the rest of those buckets verbatim; untouched
+    buckets' files carry over by reference.  Read it with
+    ``manifest_read``.  ``store_partition_by`` names ONE group column
+    (the time grain) and routes to the partitioned manifest store
+    (``sources.partitioned``, read with ``pmanifest_read``): one
+    hash-bucketed sub-store per grain value, so a range read prunes
+    whole partitions.
 
     Rollup merge is ADDITIVE, so foreachBatch's at-least-once
-    redelivery would double-merge a replayed batch; an epoch marker
-    beside the store skips epochs already merged.  With the default
-    ``store_format="swap"`` the marker commits after the store swap —
-    a crash exactly between the two leaves ONE batch that will
-    double-merge on recovery.  ``store_format="acid"`` closes that
-    window natively: the store becomes a versioned-snapshot table
-    (``sources.acid``) whose atomic pointer commit carries the epoch
-    WITH the data, so data and epoch can never disagree — a crash
-    before the pointer leaves an orphan snapshot and the replay merges
-    onto the old version exactly once.  (This is the transactional
-    seam a Delta/Iceberg MERGE would fill; the acid store implements
-    the needed part without their jars.)  The acid snapshot is still a
-    FULL rewrite per commit — right for compact state, wrong for a
-    data-sized store — so ``store_format="manifest"`` keeps the atomic
-    pointer commit but hash-buckets the store by the group columns
-    (``sources.manifest``): each batch rewrites only the buckets its
-    groups hash into, untouched buckets' files carry over by reference,
-    and the per-batch write cost drops to O(touched buckets) — the
-    file-level-delta behaviour of a real table format's MERGE.
+    redelivery would double-merge a replayed batch.  The store's
+    atomic pointer commit carries the epoch WITH the data, and batches
+    at or below the committed epoch are skipped: a crash before the
+    pointer publish leaves only orphan files and the old store, so the
+    replay merges exactly once.  A path holding a swap or full-snapshot
+    store from an older layout raises ValueError instead of resuming.
 
     The epoch guard is only sound when epoch ids are MONOTONIC across
     runs, which requires a ``checkpoint`` location: without one, batch
     ids restart at 0 every run, so re-draining a source that has GROWN
-    since the last drain both skips batches (epoch <= marker) and
+    since the last drain both skips batches (epoch <= committed) and
     double-merges old rows that shift into later batches.  Incremental
     production use therefore REQUIRES ``checkpoint``; the only safe
     no-checkpoint replay is re-draining a byte-identical source (the
@@ -286,17 +305,11 @@ def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
     import warnings
 
     from ..operators.rollup import rollup_build, rollup_merge
-    from ..sources.acid import acid_commit, acid_current, acid_read
-    from ..sources.manifest import (manifest_current, manifest_merge,
-                                    manifest_read)
-    from ..sources.sinks import recover_upsert_backup, upsert_parquet
+    from ..sources.manifest import manifest_current, manifest_merge
 
-    if store_format not in ("swap", "acid", "manifest"):
-        raise ValueError(f"unknown store_format {store_format!r} "
-                         "(expected 'swap', 'acid' or 'manifest')")
     keys = list(group_cols)
     pcol = None
-    if store_format == "manifest" and store_partition_by:
+    if store_partition_by:
         # partitioned manifest store (sources/partitioned.py): value
         # partitioning by ONE group column (the time grain) over
         # per-partition hash-bucketed sub-stores — reads of a
@@ -305,8 +318,8 @@ def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
         # time-partitioned continuous aggregate
         if len(store_partition_by) != 1:
             raise ValueError(
-                "store_format='manifest' supports exactly one "
-                f"partition column, got {list(store_partition_by)}")
+                "the rollup store supports exactly one partition "
+                f"column, got {list(store_partition_by)}")
         pcol = store_partition_by[0]
         if pcol not in keys:
             raise ValueError(
@@ -315,35 +328,31 @@ def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
                 "columns, so partitioning on anything else would "
                 "split a group across partitions")
     session = stream_df.sparkSession
+    _refuse_retired_layout(store_path, "foreach_batch_rollup_upsert",
+                           spark=session)
 
     def _committed_epoch(spark) -> int:
-        if store_format == "acid":
-            cur = acid_current(store_path, spark=spark)
-            return cur[1] if cur is not None else -1
-        if store_format == "manifest":
-            if pcol is not None:
-                # partitioned: a batch is fully applied only when EVERY
-                # sub-store has it, so the whole-store floor is the MIN
-                # committed epoch; stragglers (a crash mid-batch) fall
-                # to pmanifest_merge's per-partition guard
-                from ..sources.partitioned import _list_tokens, _sub
-                epochs = []
-                for t in _list_tokens(store_path, spark=spark):
-                    cur = manifest_current(_sub(store_path, t),
-                                           spark=spark)
-                    if cur is not None:
-                        epochs.append(cur[1])
-                return min(epochs) if epochs else -1
-            cur = manifest_current(store_path, spark=spark)
-            return cur[1] if cur is not None else -1
-        return _read_epoch(store_path, spark=spark)
+        if pcol is not None:
+            # partitioned: a batch is fully applied only when EVERY
+            # sub-store has it, so the whole-store floor is the MIN
+            # committed epoch; stragglers (a crash mid-batch) fall
+            # to pmanifest_merge's per-partition guard
+            from ..sources.partitioned import _list_tokens, _sub
+            epochs = []
+            for t in _list_tokens(store_path, spark=spark):
+                cur = manifest_current(_sub(store_path, t), spark=spark)
+                if cur is not None:
+                    epochs.append(cur[1])
+            return min(epochs) if epochs else -1
+        cur = manifest_current(store_path, spark=spark)
+        return cur[1] if cur is not None else -1
 
     if (checkpoint is None
             and _committed_epoch(session) >= 0):
         warnings.warn(
             "foreach_batch_rollup_upsert: resuming an existing rollup "
             f"store ({store_path!r}) WITHOUT a checkpoint location — "
-            "batch ids restart at 0 each run, so the epoch marker can "
+            "batch ids restart at 0 each run, so the epoch guard can "
             "only deduplicate a byte-identical re-drain. If the source "
             "has grown since the last run, state WILL corrupt (skipped "
             "and double-merged batches). Pass checkpoint= for "
@@ -356,78 +365,37 @@ def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
         batch_state = rollup_build(batch_df, group_cols=keys,
                                    metrics=metrics)
 
-        def _align(stored: DataFrame) -> DataFrame:
-            # with store_partition_by set, the snapshot read-back gets
-            # its partition columns from DIRECTORY-value type inference
-            # and reordered to the end — a group column whose type
-            # round-trips differently (e.g. a truncated-timestamp
-            # bucket read back as string/date) would silently mismatch
-            # batch_state in the semi/anti joins and rollup_merge's
-            # unionByName; pin the store to batch_state's exact schema
-            return stored.select(*[
+        def _merge(stored: Optional[DataFrame],
+                   batch: DataFrame) -> DataFrame:
+            # ``stored`` is every row of the TOUCHED buckets —
+            # including same-bucket groups this batch didn't see;
+            # merge the touched groups, carry the rest verbatim
+            # (the merge_fn return value replaces those buckets)
+            if stored is None:
+                return batch
+            # pin the stored rows to batch_state's exact column order
+            # and types for the semi/anti joins and rollup_merge's
+            # unionByName
+            aligned = stored.select(*[
                 F.col(f.name).cast(f.dataType)
                 for f in batch_state.schema.fields])
+            bkeys = F.broadcast(batch.select(*keys).distinct())
+            touched = aligned.join(bkeys, keys, "left_semi")
+            carried = aligned.join(bkeys, keys, "left_anti")
+            return rollup_merge(touched, batch, group_cols=keys,
+                                metrics=metrics).unionByName(carried)
 
-        if store_format == "manifest":
-            def _merge(stored: Optional[DataFrame],
-                       batch: DataFrame) -> DataFrame:
-                # ``stored`` is every row of the TOUCHED buckets —
-                # including same-bucket groups this batch didn't see;
-                # merge the touched groups, carry the rest verbatim
-                # (the merge_fn return value replaces those buckets)
-                if stored is None:
-                    return batch
-                aligned = _align(stored)
-                bkeys = F.broadcast(batch.select(*keys).distinct())
-                touched = aligned.join(bkeys, keys, "left_semi")
-                carried = aligned.join(bkeys, keys, "left_anti")
-                return rollup_merge(touched, batch, group_cols=keys,
-                                    metrics=metrics).unionByName(carried)
-
-            if pcol is not None:
-                from ..sources.partitioned import pmanifest_merge
-                pmanifest_merge(
-                    batch_state, store_path, pcol,
-                    [k for k in keys if k != pcol],
-                    epoch_id=epoch_id, merge_fn=_merge,
-                    n_buckets=store_buckets)
-            else:
-                manifest_merge(batch_state, store_path, keys,
-                               epoch_id=epoch_id, merge_fn=_merge,
-                               n_buckets=store_buckets)
-            return
-        if store_format == "acid":
-            stored = acid_read(spark, store_path)
-            if stored is not None:
-                stored = _align(stored)
-                bkeys = F.broadcast(batch_state.select(*keys).distinct())
-                touched = stored.join(bkeys, keys, "left_semi")
-                untouched = stored.join(bkeys, keys, "left_anti")
-                merged = rollup_merge(touched, batch_state,
-                                      group_cols=keys, metrics=metrics) \
-                    .unionByName(untouched)
-            else:
-                merged = batch_state
-            # snapshot commit: data + epoch publish in ONE atomic
-            # pointer write; the new version dir is disjoint from the
-            # one being read, so no localCheckpoint is needed
-            acid_commit(merged, store_path, epoch_id=epoch_id,
-                        partition_by=list(store_partition_by))
-            return
-        if recover_upsert_backup(store_path, spark=spark):
-            stored = _align(spark.read.parquet(store_path))
-            touched = (stored.join(
-                F.broadcast(batch_state.select(*keys).distinct()),
-                keys, "left_semi"))
-            merged = rollup_merge(touched, batch_state,
-                                  group_cols=keys, metrics=metrics)
+        if pcol is not None:
+            from ..sources.partitioned import pmanifest_merge
+            pmanifest_merge(
+                batch_state, store_path, pcol,
+                [k for k in keys if k != pcol],
+                epoch_id=epoch_id, merge_fn=_merge,
+                n_buckets=store_buckets)
         else:
-            merged = batch_state
-        # localCheckpoint: upsert rewrites the store we read from
-        merged = merged.localCheckpoint(eager=True)
-        upsert_parquet(merged, store_path, keys,
-                       partition_by=list(store_partition_by))
-        _write_epoch(store_path, epoch_id, spark=spark)
+            manifest_merge(batch_state, store_path, keys,
+                           epoch_id=epoch_id, merge_fn=_merge,
+                           n_buckets=store_buckets)
 
     writer = stream_df.writeStream.foreachBatch(_batch) \
         .trigger(availableNow=True)
@@ -1102,7 +1070,7 @@ def _store_run_tag(checkpoint: Optional[str]) -> str:
             if checkpoint else uuid.uuid4().hex[:8])
 
 
-def _write_epoch_partition(df: DataFrame, path: str, tag: str) -> None:
+def _write_batch_partition(df: DataFrame, path: str, tag: str) -> None:
     """Write ONLY this batch's ``_epoch=<tag>`` partition (dynamic
     overwrite): per-batch cost linear in batch size, redelivery of the
     same tag overwrites itself.  An EMPTY batch writes nothing — an
@@ -1155,11 +1123,14 @@ def foreach_batch_bloom_dedup(stream_df: DataFrame, store_path: str, *,
     (broadcast join — ``_maybe = false`` keys are GUARANTEED unseen),
     append only the unseen rows to ``accepted_path`` (epoch-partition
     dynamic overwrite, so a redelivered batch overwrites itself), then
-    commit ``OR(resident, bitmap(accepted))`` to the versioned acid
-    store — the pointer carries the epoch WITH the bits, closing the
-    double-ingest window.  Bloom union is idempotent, so replay
+    commit ``OR(resident, bitmap(accepted))`` to a one-bucket manifest
+    store keyed by ``word`` (``sources.manifest``; every batch touches
+    nearly every word, so one bucket keeps the commit a one-file
+    rewrite) — the pointer carries the epoch WITH the bits, closing
+    the double-ingest window.  Bloom union is idempotent, so replay
     converges even without the epoch guard; the guard makes the
-    accepted output exactly-once too.
+    accepted output exactly-once too.  A path holding a swap or
+    full-snapshot store from an older layout raises ValueError.
 
     Honest semantics: a false positive (~fpp for a well-sized filter)
     drops a GENUINELY-NEW key's rows forever — this maintainer trades
@@ -1197,12 +1168,14 @@ def foreach_batch_bloom_dedup(stream_df: DataFrame, store_path: str, *,
     from .. import fsutil
     from ..operators.dedup import (bloom_bitmap, bloom_merge_bitmaps,
                                    bloom_probe, dedup_keep_best)
-    from ..sources.acid import acid_commit, acid_current, acid_read
+    from ..sources.manifest import manifest_current, manifest_merge
 
     if n_bits < 64:
         raise ValueError("n_bits must be >= 64")
     params_path = store_path.rstrip("/") + "/_bloom.json"
     session = stream_df.sparkSession
+    _refuse_retired_layout(store_path, "foreach_batch_bloom_dedup",
+                           spark=session)
     _refuse_interrupted_resize(store_path, spark=session)
     prior = fsutil.read_text(params_path, spark=session)
     if prior is not None:
@@ -1216,7 +1189,7 @@ def foreach_batch_bloom_dedup(stream_df: DataFrame, store_path: str, *,
                 "immutable for the store's lifetime")
     tag_run = _store_run_tag(checkpoint)
     if (checkpoint is None
-            and acid_current(store_path, spark=session) is not None):
+            and manifest_current(store_path, spark=session) is not None):
         warnings.warn(
             "foreach_batch_bloom_dedup: resuming an existing bloom "
             f"store ({store_path!r}) WITHOUT a checkpoint location — "
@@ -1230,11 +1203,11 @@ def foreach_batch_bloom_dedup(stream_df: DataFrame, store_path: str, *,
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        cur = acid_current(store_path, spark=spark)
+        cur = manifest_current(store_path, spark=spark)
         if cur is not None and epoch_id <= cur[1]:
             return  # replayed batch already ingested
         best = dedup_keep_best(batch_df, [key_col], list(order_cols))
-        resident = acid_read(spark, store_path)
+        resident = _read_state(spark, store_path)
         if resident is not None:
             member = bloom_probe(best.select(key_col), resident,
                                  key_col, n_bits=n_bits,
@@ -1243,15 +1216,13 @@ def foreach_batch_bloom_dedup(stream_df: DataFrame, store_path: str, *,
                         .filter(~F.col("_maybe")).drop("_maybe"))
         else:
             accepted = best
-        # pin before the dependent writes (probe lineage reads the
-        # store the commit below replaces)
+        # pin before the two dependent writes, so the probe runs once
+        # and the accepted rows and the committed bits agree
         accepted = accepted.localCheckpoint(eager=True)
-        _write_epoch_partition(accepted, accepted_path,
+        _write_batch_partition(accepted, accepted_path,
                                f"{tag_run}-{epoch_id}")
         add = bloom_bitmap(accepted, key_col, n_bits=n_bits,
                            n_hashes=n_hashes)
-        merged = add if resident is None \
-            else bloom_merge_bitmaps(resident, add)
         # sidecar BEFORE the first commit (publish-last-pointer
         # discipline): params are pinned once any bits exist, so a
         # crash in between leaves a sidecar with zero commits (a
@@ -1263,11 +1234,14 @@ def foreach_batch_bloom_dedup(stream_df: DataFrame, store_path: str, *,
                 params_path,
                 _json.dumps({"n_bits": n_bits, "n_hashes": n_hashes}),
                 spark=spark)
-        acid_commit(merged, store_path, epoch_id=epoch_id)
+        manifest_merge(
+            add, store_path, ["word"], epoch_id=epoch_id, n_buckets=1,
+            merge_fn=lambda stored, new: new if stored is None
+            else bloom_merge_bitmaps(stored, new))
         if occupancy_warn is not None:
             from ..operators.dedup import bloom_occupancy
             occ = bloom_occupancy(
-                acid_read(spark, store_path), n_bits=n_bits,
+                _read_state(spark, store_path), n_bits=n_bits,
                 n_hashes=n_hashes).collect()[0]
             if occ.occupancy >= occupancy_warn:
                 warnings.warn(
@@ -1291,7 +1265,8 @@ def bloom_store_occupancy(spark, store_path: str):
     one-row DataFrame ``(set_bits, n_bits, occupancy, est_fpp)`` from
     ONE aggregate over the committed bitmap table, with the hash
     family read from the store's ``_bloom.json`` sidecar.  ``None``
-    when nothing was ever committed.
+    when nothing was ever committed; a store whose commits set no
+    bits reports zero.
 
     Run on a maintenance cadence (not per batch): occupancy past
     ~50% means the filter outgrew its bit budget and the
@@ -1303,10 +1278,9 @@ def bloom_store_occupancy(spark, store_path: str):
 
     from .. import fsutil
     from ..operators.dedup import bloom_occupancy
-    from ..sources.acid import acid_read
 
     _refuse_interrupted_resize(store_path, spark=spark)
-    bitmap = acid_read(spark, store_path)
+    bitmap = _read_state(spark, store_path)
     if bitmap is None:
         return None
     txt = fsutil.read_text(store_path.rstrip("/") + "/_bloom.json",
@@ -1345,16 +1319,17 @@ def bloom_resize_store(spark, store_path: str, accepted_path: str, *,
     between commit and sidecar rewrite would leave the OLD sidecar
     next to the NEW-family bitmap, and a maintainer resumed with the
     old params would pass validation and merge mixed hash families.
-    Returns the committed version."""
+    The commit replaces the store's one bucket whole, keeping the
+    committed epoch.  Returns the committed version."""
     import json as _json
 
     from .. import fsutil
     from ..operators.dedup import bloom_bitmap
-    from ..sources.acid import acid_commit, acid_current
+    from ..sources.manifest import manifest_current, manifest_merge
 
     if n_bits < 64:
         raise ValueError("n_bits must be >= 64")
-    cur = acid_current(store_path, spark=spark)
+    cur = manifest_current(store_path, spark=spark)
     if cur is None:
         raise ValueError(
             f"nothing committed at {store_path!r} to resize")
@@ -1365,7 +1340,15 @@ def bloom_resize_store(spark, store_path: str, accepted_path: str, *,
     doc = _json.dumps({"n_bits": n_bits, "n_hashes": n_hashes})
     next_path = store_path.rstrip("/") + "/_bloom.json.next"
     fsutil.write_text_atomic(next_path, doc, spark=spark)
-    version = acid_commit(bitmap, store_path, epoch_id=cur[1])
+    # a zero-bits placeholder word routes the commit to the store's
+    # one bucket even when no key was accepted, so the old family's
+    # bits are always replaced; the merge drops it again (a bitmap
+    # stores non-zero words only)
+    placeholder = spark.createDataFrame([(-1, 0)], bitmap.schema)
+    version = manifest_merge(
+        bitmap.unionByName(placeholder), store_path, ["word"],
+        epoch_id=cur[1], n_buckets=1,
+        merge_fn=lambda _stored, new: new.filter(F.col("bits") != 0))
     fsutil.write_text_atomic(
         store_path.rstrip("/") + "/_bloom.json", doc, spark=spark)
     fsutil.delete(next_path, spark=spark)
@@ -1387,14 +1370,16 @@ def foreach_batch_cms(stream_df: DataFrame, store_path: str, *,
     (``cms_heavy_hitters_against``) read the store instead of holding
     a full-cardinality groupBy as state.
 
-    Per batch: one ``cms_build`` over the batch, one ``cms_merge``
-    with the resident sketch, one acid snapshot commit.  The sketch
-    is COMPACT state by construction, so the acid store's full-
-    snapshot-per-commit is the right trade (the manifest store's
-    file-level deltas pay off for data-sized state; a sketch that
-    big means ``width`` was sized like a table — rethink it).
-    The pointer carries the epoch WITH the counters, so the additive
-    merge is exactly-once under replay; like every additive
+    Per batch: one ``cms_build`` over the batch, committed with an
+    ADDITIVE ``manifest_merge`` keyed by ``(d, pos)`` — the store's
+    ``groupBy(d, pos).sum(cnt)`` is ``cms_merge``.  The sketch is
+    COMPACT state and every batch touches nearly every cell, so the
+    store has one bucket and each commit is a one-file rewrite (a
+    sketch big enough to want more means ``width`` was sized like a
+    table — rethink it).  The pointer carries the epoch WITH the
+    counters, so the additive merge is exactly-once under replay, and
+    a path holding a swap or full-snapshot store from an older layout
+    raises ValueError; like every additive
     maintainer here, the guard needs MONOTONIC batch ids (a
     ``checkpoint``), and resuming an existing store without one
     warns — a reused batch id would silently skip a genuinely-new
@@ -1405,11 +1390,13 @@ def foreach_batch_cms(stream_df: DataFrame, store_path: str, *,
     import warnings
 
     from .. import fsutil
-    from ..operators.sketches import cms_build, cms_merge
-    from ..sources.acid import acid_commit, acid_current, acid_read
+    from ..operators.sketches import cms_build
+    from ..sources.manifest import manifest_current, manifest_merge
 
     params_path = store_path.rstrip("/") + "/_cms.json"
     session = stream_df.sparkSession
+    _refuse_retired_layout(store_path, "foreach_batch_cms",
+                           spark=session)
     prior = fsutil.read_text(params_path, spark=session)
     if prior is not None:
         doc = _json.loads(prior)
@@ -1420,7 +1407,7 @@ def foreach_batch_cms(stream_df: DataFrame, store_path: str, *,
                 f"({depth}, {width}) — the hash family is immutable "
                 "for the store's lifetime")
     if (checkpoint is None
-            and acid_current(store_path, spark=session) is not None):
+            and manifest_current(store_path, spark=session) is not None):
         warnings.warn(
             "foreach_batch_cms: resuming an existing cms store "
             f"({store_path!r}) WITHOUT a checkpoint location — batch "
@@ -1432,13 +1419,11 @@ def foreach_batch_cms(stream_df: DataFrame, store_path: str, *,
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        cur = acid_current(store_path, spark=spark)
+        cur = manifest_current(store_path, spark=spark)
         if cur is not None and epoch_id <= cur[1]:
             return  # replayed batch already counted
         add = cms_build(batch_df, key_col, depth=depth, width=width,
                         weight_col=weight_col)
-        resident = acid_read(spark, store_path)
-        merged = add if resident is None else cms_merge(resident, add)
         # sidecar BEFORE the first commit (publish-last-pointer
         # discipline): a crash between first commit and a trailing
         # sidecar write would leave committed counters with no pinned
@@ -1451,7 +1436,9 @@ def foreach_batch_cms(stream_df: DataFrame, store_path: str, *,
                 params_path,
                 _json.dumps({"depth": depth, "width": width}),
                 spark=spark)
-        acid_commit(merged, store_path, epoch_id=epoch_id)
+        manifest_merge(add, store_path, ["d", "pos"], mode="additive",
+                       value_cols=["cnt"], n_buckets=1,
+                       epoch_id=epoch_id)
 
     writer = stream_df.writeStream.foreachBatch(_batch) \
         .trigger(availableNow=True)
@@ -1465,13 +1452,13 @@ def cms_store(spark, store_path: str):
     its pinned hash family: ``(sketch DataFrame, depth, width)`` —
     hand these straight to ``cms_estimate`` /
     ``cms_heavy_hitters_against``.  ``None`` when nothing was ever
-    committed."""
+    committed; a store whose commits counted nothing gives an empty
+    sketch."""
     import json as _json
 
     from .. import fsutil
-    from ..sources.acid import acid_read
 
-    sketch = acid_read(spark, store_path)
+    sketch = _read_state(spark, store_path)
     if sketch is None:
         return None
     txt = fsutil.read_text(store_path.rstrip("/") + "/_cms.json",
@@ -1889,8 +1876,8 @@ def foreach_batch_minhash_index(stream_df: DataFrame, index_path: str, *,
                         num_hashes=num_hashes,
                         jaccard_threshold=jaccard_threshold,
                         max_bucket=max_bucket)))
-            _write_epoch_partition(canon, pairs_path, tag)
-        _write_epoch_partition(sigs, index_path, tag)
+            _write_batch_partition(canon, pairs_path, tag)
+        _write_batch_partition(sigs, index_path, tag)
 
     writer = stream_df.writeStream.foreachBatch(_batch) \
         .trigger(availableNow=True)
@@ -2037,8 +2024,8 @@ def foreach_batch_embedding_index(stream_df: DataFrame, index_path: str,
                                  F.col("i._v")).alias("cosine")))
                 pairs = pairs.unionByName(cross)
             pairs = pairs.filter(F.col("cosine") >= threshold)
-            _write_epoch_partition(pairs, pairs_path, tag)
-        _write_epoch_partition(base, index_path, tag)
+            _write_batch_partition(pairs, pairs_path, tag)
+        _write_batch_partition(base, index_path, tag)
 
     writer = stream_df.writeStream.foreachBatch(_batch) \
         .trigger(availableNow=True)
