@@ -6015,7 +6015,8 @@ FROM customer
 
 def q_gopher_quality(spark, sf_dir):
     """Gopher/MassiveText-style rule battery (operators/quality.py:
-    gopher_quality_flags) — one codegen'd map-only projection."""
+    gopher_quality_flags) — map-only; the tokens are projected once
+    and every rule reads them."""
     d = _t(spark, sf_dir, "documents")
     return gopher_quality_flags(d).select(
         "doc_id", "word_count", "mean_word_len", "symbol_word_ratio",

@@ -135,6 +135,74 @@ def test_incremental_lsh_matches_full_batch(spark, dup_corpus):
     assert len(inc_pairs) > 50
 
 
+def test_minhash_signatures_tokenize_once(spark, sf_dir):
+    """The signature plan tokenizes each document once: the shingle
+    builder reads one projected token column.  The tokenizer is a
+    higher-order function that Spark never shares across consumers, so
+    an inlined form repeats its ``split`` per use (8 at 3-shingles)."""
+    from wrangle_pypes_spark.operators.dedup import minhash_signatures
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    sigs = minhash_signatures(docs, "text", id_col="doc_id")
+    plan = sigs._sc._jvm.PythonSQLUtils.explainString(
+        sigs._jdf.queryExecution(), "formatted")
+    assert plan.count("split(") == 1, plan
+
+
+def _minhash_reference(df, num_hashes, bands):
+    """The LSH index built as a Column tree, one call per node: the
+    form the SQL-string builders must match bit for bit."""
+    exploded = df.select(
+        F.col("doc_id"), F.explode(shingles(F.col("text"), 3)).alias("sh"))
+    hashed = exploded.select(
+        F.col("doc_id"),
+        F.xxhash64(F.lit(1), F.col("sh"))
+        .bitwiseAND(F.lit((1 << 61) - 1)).alias("h1"),
+        F.xxhash64(F.lit(2), F.col("sh"))
+        .bitwiseAND(F.lit((1 << 56) - 1)).alias("h2"))
+    sigs = (hashed.groupBy("doc_id")
+            .agg(*[F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"m{i}")
+                   for i in range(num_hashes)])
+            .select(F.col("doc_id"),
+                    F.array(*[F.col(f"m{i}") for i in range(num_hashes)])
+                    .alias("signature")))
+    rows = num_hashes // bands
+    banded = sigs.select(
+        F.col("doc_id"), F.col("signature"),
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     F.xxhash64(F.lit(b), F.concat_ws(",", *[
+                         F.col("signature")[b * rows + r].cast("string")
+                         for r in range(rows)])).alias("bhash"))
+            for b in range(bands)])).alias("lsh"),
+    ).select("doc_id", "signature", "lsh.band", "lsh.bhash")
+    return sigs, banded
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(64, 16), (12, 4)])
+def test_minhash_index_schema_and_values_pinned(spark, dup_corpus,
+                                                num_hashes, bands):
+    """Stored LSH indexes (the streaming MinHash index,
+    ``minhash_lsh_pairs_against``'s corpus side) join on band, bhash
+    and signature, so the signature and banded tables must keep the
+    Column-form reference's names, types, nullability, containsNull
+    and values exactly."""
+    from wrangle_pypes_spark.operators.dedup import (
+        minhash_banded, minhash_signatures)
+
+    ref_sigs, ref_banded = _minhash_reference(dup_corpus, num_hashes, bands)
+    sigs = minhash_signatures(dup_corpus, "text", id_col="doc_id",
+                              num_hashes=num_hashes)
+    banded = minhash_banded(dup_corpus, "text", id_col="doc_id",
+                            num_hashes=num_hashes, bands=bands)
+    for got, want in ((sigs, ref_sigs), (banded, ref_banded)):
+        # StructType equality covers names, types, nullable and the
+        # signature array's containsNull
+        assert got.schema == want.schema
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, want.collect()))
+
+
 def test_connected_components_vs_union_find(spark):
     from wrangle_pypes_spark.operators.dedup import connected_components
 

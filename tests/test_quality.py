@@ -135,6 +135,10 @@ def test_quality_plans(docs, spark):
         assert "Exchange" not in p, f"{build.__name__}: shuffle in map-only op"
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, \
             f"{build.__name__}: Python in the hot path"
+    # the tokens are projected once and every rule reads them:
+    # Spark shares no higher-order-function expression between
+    # consumers, so an inlined tokenizer repeats its split per rule
+    assert plan_of(gopher_quality_flags(docs)).count("split(") == 1
 
     ev = docs.filter(F.col("doc_id") % 97 == 0)
     tr = docs.filter(F.col("doc_id") % 97 != 0)

@@ -1,7 +1,12 @@
 """Deduplication operators for training-data pipelines.
 
-All hot paths are pure Column expressions (whole-stage codegen; no
-Python per row).  The LSH family follows the standard web-scale recipe
+All hot paths are pure Column expressions (no Python per row).  The
+tokenizer and shingle builders are higher-order functions, which Spark
+interprets rather than codegens and never shares between consumers, so
+the MinHash and SimHash signatures project a document's tokens ONCE
+into a child column that the shingle builder reads.
+
+The LSH family follows the standard web-scale recipe
 (shingle -> MinHash -> band -> bucket equi-join -> verify): candidate
 generation is an EQUI-join on (band_index, band_hash), so the shuffle is
 linear in corpus size — never the O(n^2) all-pairs compare.
@@ -16,8 +21,12 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
-from ..localdf import local_df
 from pyspark.sql import functions as F
+
+# the engine's one tokenizer (quality.py imports it the same way):
+# dedup, quality rules and decontamination must segment text alike
+from ..functions.text import tokens as tokens_col
+from ..localdf import local_df
 
 
 # ---------------------------------------------------------------------------
@@ -114,13 +123,31 @@ def dedup_keep_best(df: DataFrame, key_cols: Sequence[str],
 # tokenize / shingle (shared by MinHash & Jaccard & SimHash)
 # ---------------------------------------------------------------------------
 
-def tokens_col(text: Column) -> Column:
-    """Lowercased whitespace tokens (empty strings removed)."""
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != F.lit(""))
+_TOKS = "_wps_toks"
+
+
+def _id_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id_col, ``_TOKS``): the token array projected once per row.
+    Every later use reads the column; ``CollapseProject`` does not
+    inline a non-cheap expression that its consumer reads more than
+    once, so the plan keeps exactly one ``split``."""
+    return spread_small_input(df).select(
+        F.col(id_col), tokens_col(F.col(text_col)).alias(_TOKS))
 
 
 def shingles(text: Column, n: int = 3) -> Column:
     """Word n-gram shingle set of a text column, as array<string>.
+
+    A thin wrapper over :func:`_shingles_of` for single-column use;
+    the corpus operators project the tokens once and call that form.
+    Documents shorter than ``n`` tokens keep the prior semantics: one
+    shingle of the whole (possibly empty or NULL) document.
+    """
+    return _shingles_of(tokens_col(text), n)
+
+
+def _shingles_of(toks: Column, n: int) -> Column:
+    """:func:`shingles` over a token-array column.
 
     One pass, no explode, no UDF — built by zipping the token array
     against its own shifted ``slice``s (an n-step ``zip_with`` chain).
@@ -130,10 +157,9 @@ def shingles(text: Column, n: int = 3) -> Column:
     higher-order-function path — O(tokens²) per document (measured
     ~20× slower at sf0.1).  Here every slice is a HOF *child*,
     evaluated once per row; lambdas touch only their arguments.
-    Documents shorter than ``n`` tokens keep the prior semantics: one
-    shingle of the whole (possibly empty or NULL) document.
+    ``toks`` appears several times in the result, so pass a column
+    reference, not the tokenizer expression.
     """
-    toks = tokens_col(text)
     wc = F.size(toks)
     k = wc - F.lit(n - 1)
     grams = F.slice(toks, 1, F.greatest(k, F.lit(0)))
@@ -181,35 +207,33 @@ def minhash_signatures(df: DataFrame, text_col: str, *, id_col: str,
                        num_hashes: int = 64, shingle_n: int = 3) -> DataFrame:
     """id, signature array<long> of ``num_hashes`` minhashes.
 
-    Strategy: explode shingles, then ONE codegen'd hash-aggregate with
-    ``num_hashes`` ``min(xxhash64(seed_i, shingle))`` columns.  The
-    explode looks expensive but wins at scale: partial (map-side)
-    aggregation collapses each partition to one row per doc before the
-    shuffle, the whole thing whole-stage-codegens, and there is no wide
-    array materialization per row.  (The per-row
-    ``transform``+``array_min`` formulation benchmarked ~2-3x slower on
-    sf0.1 because higher-order-function lambdas don't codegen.)
+    Strategy: project the tokens once, explode their shingles, then
+    ONE codegen'd hash-aggregate with ``num_hashes``
+    ``min(xxhash64(seed_i, shingle))`` buffers.  The explode looks
+    expensive but wins at scale: partial (map-side) aggregation
+    collapses each partition to one row per doc before the shuffle,
+    the aggregate whole-stage-codegens, and there is no wide array
+    materialization per row.  (The per-row ``transform``+``array_min``
+    formulation benchmarked ~2-3x slower on sf0.1 because
+    higher-order-function lambdas don't codegen.)
     """
     # Carter–Wegman family: hash each shingle TWICE, derive the i-th
     # hash as h1 + i*h2 (universal-family guarantee is enough for
     # minhash).  2 xxhash64 calls per shingle instead of num_hashes —
     # benchmarked ~2.5x faster at sf0.1 with identical recall.
-    exploded = spread_small_input(df).select(
+    exploded = _id_tokens(df, text_col, id_col).select(
         F.col(id_col),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("_sh"))
+        F.explode(_shingles_of(F.col(_TOKS), shingle_n)).alias("_sh"))
     # masks keep h1 + i*h2 inside signed-long range under ANSI mode
     # (i < 64: 64 * 2^56 + 2^61 < 2^63); 56-bit hashes are ample.
-    # expressions are built as SQL strings: the Column-tree form costs
-    # ~2s of py4j round trips per plan at num_hashes=64
+    # the wide expression is ONE SQL string: a Column tree costs a
+    # py4j round trip per node (~2s per plan at num_hashes=64)
     hashed = exploded.select(
         F.col(id_col),
         _h64(F.col("_sh"), 1).bitwiseAND(F.lit((1 << 61) - 1)).alias("_h1"),
         _h64(F.col("_sh"), 2).bitwiseAND(F.lit((1 << 56) - 1)).alias("_h2"))
-    aggs = [F.expr(f"min(_h1 + {i} * _h2) AS _m{i}")
-            for i in range(num_hashes)]
-    arr = "array(" + ", ".join(f"_m{i}" for i in range(num_hashes)) + ")"
-    return (hashed.groupBy(id_col).agg(*aggs)
-            .selectExpr(id_col, f"{arr} AS signature"))
+    mins = ", ".join(f"min(_h1 + {i} * _h2)" for i in range(num_hashes))
+    return hashed.groupBy(id_col).agg(F.expr(f"array({mins}) AS signature"))
 
 
 def minhash_banded(df: DataFrame, text_col: str, *, id_col: str,
@@ -224,16 +248,16 @@ def minhash_banded(df: DataFrame, text_col: str, *, id_col: str,
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col=id_col,
                               num_hashes=num_hashes, shingle_n=shingle_n)
-    return sigs.select(
-        F.col(id_col), F.col("signature"),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(F.lit(b), F.concat_ws(
-                         ",", *[F.col("signature")[b * rows_per_band + r].cast("string")
-                                for r in range(rows_per_band)])).alias("bhash"))
-            for b in range(bands)
-        ])).alias("lsh"),
-    ).select(id_col, "signature", "lsh.band", "lsh.bhash")
+    # one SQL string, as in minhash_signatures: band b hashes its
+    # signature slice joined with ","
+    def band(b: int) -> str:
+        vals = "".join(f", CAST(signature[{b * rows_per_band + r}] AS STRING)"
+                       for r in range(rows_per_band))
+        return (f"named_struct('band', {b}, "
+                f"'bhash', xxhash64({b}, concat_ws(','{vals})))")
+    rows = ", ".join(band(b) for b in range(bands))
+    return sigs.select(F.col(id_col), F.col("signature"),
+                       F.expr(f"inline(array({rows}))"))
 
 
 _HOT_BUCKET_CACHE: dict = {}
@@ -626,11 +650,11 @@ def simhash_signatures(df: DataFrame, text_col: str, *, id_col: str,
     single-value use; this is the corpus path (the nested
     aggregate/transform lambdas in ``simhash64`` are interpreted, which
     benchmarked ~10x slower at sf0.1)."""
-    # hash each shingle ONCE in a projection; the 64 aggregate columns
-    # only do shift/mask arithmetic on the precomputed hash
-    exploded = spread_small_input(df).select(
+    # tokenize and hash each shingle ONCE in projections; the 64
+    # aggregate columns only do shift/mask arithmetic on the hash
+    exploded = _id_tokens(df, text_col, id_col).select(
         F.col(id_col),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("_sh"),
+        F.explode(_shingles_of(F.col(_TOKS), shingle_n)).alias("_sh"),
     ).select(F.col(id_col), _h64(F.col("_sh"), 7777).alias("_h"))
     # SQL-string expressions: see minhash_signatures (py4j plan cost)
     aggs = [F.expr(f"sum(CASE WHEN (shiftright(_h, {i}) & 1) = 1 "

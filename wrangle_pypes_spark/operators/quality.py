@@ -1,8 +1,11 @@
 """Document-quality operators for LLM training-data curation.
 
 Classics of the public data-pipeline literature, each expressed as
-pure Column expressions (JVM-side, whole-stage-codegen'd, map-only
-unless noted) so they run unchanged over a 100 TB corpus:
+pure Column expressions (JVM-side, map-only unless noted) so they run
+unchanged over a 100 TB corpus.  The tokenizer is a higher-order
+function, which Spark interprets rather than codegens and never shares
+between consumers, so :func:`gopher_quality_flags` projects the token
+array once into a child column that every rule reads:
 
 - :func:`c4_line_clean` — the C4/RealNews line-level recipe: keep lines
   ending in terminal punctuation with enough words and no banned
@@ -62,6 +65,9 @@ DEFAULT_STOPWORDS: tuple[str, ...] = (
 from ..functions.text import tokens as _tokens
 from ..functions.text import word_ngrams as _word_ngrams
 
+# child-projection column read by the rules, dropped from the output
+_TOKS = "_wps_toks"
+
 
 def gopher_quality_flags(
     df: DataFrame,
@@ -80,11 +86,11 @@ def gopher_quality_flags(
 
     Thresholds default to the published MassiveText settings scaled to
     short documents; every rule is a JVM Column expression over the
-    tokenized text, so the whole battery is one codegen'd projection —
-    map-only, shuffle-free, safe to run inline in the ingest scan.
+    token array, which is projected once per row — map-only,
+    shuffle-free, safe to run inline in the ingest scan.
     """
     text = F.col(text_col)
-    toks = _tokens(text)
+    toks = F.col(_TOKS)
     wc = F.size(toks)
     wc_d = F.greatest(wc, F.lit(1)).cast("double")
     sum_len = F.aggregate(toks, F.lit(0).cast("long"),
@@ -108,7 +114,7 @@ def gopher_quality_flags(
         & (alpha_frac >= F.lit(min_alpha_word_frac))
         & (stop_hits >= F.lit(min_stopword_hits))
     )
-    return df.select(
+    return df.select("*", _tokens(text).alias(_TOKS)).select(
         "*",
         wc.cast("bigint").alias("word_count"),
         mean_wl.alias("mean_word_len"),
@@ -116,7 +122,7 @@ def gopher_quality_flags(
         alpha_frac.alias("alpha_word_frac"),
         stop_hits.cast("bigint").alias("stopword_hits"),
         passes.alias("passes_gopher"),
-    )
+    ).drop(_TOKS)
 
 
 def c4_line_clean(
