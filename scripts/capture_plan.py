@@ -10,7 +10,17 @@ plan shape (Exchange count, join strategy, PushedFilters, ReadSchema,
 Python-eval nodes) that OPTIMIZATION_r14.md claims are checked against.
 Queries that run streaming drains or side-effecting builds inside the
 builder DO execute those side effects here; the captured plan is the
-final returned DataFrame's plan.
+final returned DataFrame's plan.  A builder that runs an eager
+``localCheckpoint`` (``minhash_lsh_pairs``, whose skew guard
+checkpoints the banded signatures) therefore yields the plan AFTER the
+checkpoint: a scan of the checkpointed rows, with the stages before it
+already run and absent from the plan.
+
+Besides the registered queries, the names in ``OPERATORS`` capture one
+operator's own plan over the sf ``documents`` table, with no
+checkpoint in between: ``minhash_signatures`` and ``minhash_banded``
+(64 hashes, 16 bands, 3-token shingles, as ``minhash_lsh_pairs``
+uses).
 """
 from __future__ import annotations
 
@@ -22,7 +32,23 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from wrangle_pypes_spark.operators.dedup import (minhash_banded,
+                                                 minhash_signatures)
 from wrangle_pypes_spark.session import get_session
+
+
+def _documents(spark, sf_dir):
+    return entrymod._t(spark, sf_dir, "documents").select("doc_id", "text")
+
+
+OPERATORS = {
+    "minhash_signatures": lambda spark, sf_dir: minhash_signatures(
+        _documents(spark, sf_dir), "text", id_col="doc_id", num_hashes=64,
+        shingle_n=3),
+    "minhash_banded": lambda spark, sf_dir: minhash_banded(
+        _documents(spark, sf_dir), "text", id_col="doc_id", num_hashes=64,
+        bands=16, shingle_n=3),
+}
 
 
 def main() -> None:
@@ -35,7 +61,7 @@ def main() -> None:
     outdir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", tag)
     os.makedirs(outdir, exist_ok=True)
-    qs = entrymod.queries()
+    qs = {**entrymod.queries(), **OPERATORS}
     for name in names:
         df = qs[name](spark, sf_dir)
         buf = io.StringIO()

@@ -394,14 +394,22 @@ def _sorted(df):
     return sorted(map(tuple, df.collect()), key=repr)
 
 
+def _rows_written(spark, path, man):
+    """The rows of the bucket files the commit ``man`` wrote."""
+    dirs = [os.path.join(path, rel) for rel in man["buckets"].values()
+            if rel.startswith(f"data/v{man['version']:06d}/")]
+    return spark.read.parquet(*dirs).count() if dirs else 0
+
+
 def _commit_both(spark, tmp_path, boot, batches, schema, keys, probes,
                  **kw):
     """Bootstrap two stores alike, then commit each batch to one as
     ``local_df`` output (the driver writer: no Spark job) and to the
     other as a pickled-RDD frame (the Spark writer).  Reads, lookups,
     change feeds and manifests must agree; the manifests differ only
-    in which writer their summary names and the bytes it wrote.
-    Returns the driver-written store's path."""
+    in which writer their summary names, the bytes it wrote and the
+    rows it wrote (which only the driver writer counts).  Returns the
+    driver-written store's path."""
     paths = {}
     for side in ("driver", "spark"):
         paths[side] = path = str(tmp_path / side)
@@ -421,6 +429,9 @@ def _commit_both(spark, tmp_path, boot, batches, schema, keys, probes,
             assert m["summary"].pop("writer") == side
             assert m["summary"].pop("bytes_added") > 0 \
                 or not m["summary"]["files_added"]
+        assert mans["spark"]["summary"].pop("rows_written") is None
+        assert mans["driver"]["summary"].pop("rows_written") == \
+            _rows_written(spark, paths["driver"], mans["driver"])
         assert mans["driver"] == mans["spark"]
     for fn in (lambda p: manifest_read(spark, p),
                lambda p: manifest_lookup(spark, p,
@@ -642,7 +653,321 @@ def test_history_summary_is_null_for_older_manifests(spark, tmp_path):
     del doc["summary"]
     with open(m1, "w") as f:
         json.dump(doc, f)
+    # a Spark commit counts no rows: that would cost a job
+    manifest_merge(spark.createDataFrame([(0, 9)], "k int, v int"), path,
+                   ["k"], epoch_id=2, n_buckets=4)
     rows = sorted(manifest_history(spark, path).collect())
-    assert rows[0][5:] == (None, None, None, None)
-    assert rows[1][5:] == ("driver", 1, 1, rows[1].bytes_added)
+    assert rows[0][5:] == (None, None, None, None, None)
+    # the second commit rewrote key 1's bucket, which holds key 0 too
+    # when both hash there
+    b0, b1 = _driver_buckets([(0,), (1,)], [T.IntegerType()], 4)
+    assert rows[1][5:] == ("driver", 1, 1, rows[1].bytes_added,
+                           1 + (b0 == b1))
     assert rows[1].bytes_added > 0
+    assert rows[2][5:] == ("spark", 1, 1, rows[2].bytes_added, None)
+
+
+# one column of each type the driver serves: the derived merge schema
+# must equal Spark's for all of them
+_FLAT_DDL = ("k bigint, b boolean, t tinyint, s smallint, i int, f float, "
+             "d double, u string, y binary, dt date, dc decimal(10, 2)")
+
+
+def _flat_row(i):
+    return (i, i % 2 == 0, i % 100, i * 3, -i, i / 4, i / 3, f"u{i}",
+            bytes([i % 256]), datetime.date(2024, 1, 1 + i % 28),
+            decimal.Decimal(i) / 4)
+
+
+def _pinned(spark, tmp_path, boot, batch, keys, tombstone_col=None,
+            evolve_schema=False):
+    """The derived merge schema of ``batch`` against a store bootstrapped
+    from ``boot``, asserted equal to the analysed plan's — both with the
+    store's rows (``_read_buckets``) and with none (every touched bucket
+    empty, or a first commit)."""
+    path = str(tmp_path / uuid.uuid4().hex)
+    manifest_merge(boot, path, keys, n_buckets=1)
+    man = _man(path)
+    recorded = T.StructType.fromJson(man["schema"])
+    out = {}
+    for name, stored, rec in (
+            ("stored", manifest._read_buckets(spark, path, man), recorded),
+            ("empty", None, None)):
+        want = manifest._merge_upsert(stored, batch, keys, tombstone_col,
+                                      evolve_schema).schema
+        got = manifest._upsert_schema(rec, batch.schema, keys,
+                                      tombstone_col, evolve_schema)
+        assert got is not None, name
+        assert got.jsonValue() == want.jsonValue(), name
+        out[name] = got
+    return out
+
+
+def test_derived_merge_schema_equals_spark_analysis(spark, tmp_path):
+    flat = T._parse_datatype_string(_FLAT_DDL)
+    assert {type(f.dataType) for f in flat.fields} == \
+        set(manifest._FLAT_TYPES)
+    rows = [_flat_row(i) for i in range(6)]
+    boot = spark.createDataFrame(rows, flat)
+    # every flat type, keys leading, with a tombstone column to drop
+    dead = T.StructType(flat.fields + [T.StructField("dead",
+                                                     T.BooleanType())])
+    got = _pinned(spark, tmp_path, boot, spark.createDataFrame(
+        [r + (i == 1,) for i, r in enumerate(rows[:3])], dead), ["k"],
+        tombstone_col="dead")
+    assert "dead" not in got["stored"].names
+    assert all(f.nullable for f in got["stored"].fields)
+    # non-nullable batch fields, keys NOT leading: the anti-join moves
+    # the keys first, and stored rows make every field nullable
+    strict = spark.range(5).select(
+        (F.col("id") * 2).alias("v"), F.col("id").alias("k"),
+        F.lit("x").alias("w"))
+    got = _pinned(spark, tmp_path, strict, strict, ["k"])
+    assert got["stored"].names == ["k", "v", "w"]
+    assert all(f.nullable for f in got["stored"].fields)
+    assert got["empty"].names == ["v", "k", "w"]
+    assert not any(f.nullable for f in got["empty"].fields)
+    # evolve_schema: the batch carries a column the store lacks, lacks
+    # one the store carries, and both at once
+    base = spark.range(5).select(F.col("id").alias("k"),
+                                 F.col("id").cast("string").alias("a"))
+    for cols in (["k", "a", F.lit(1).alias("new")], ["k"],
+                 [F.lit(2.5).alias("new"), "k"]):
+        got = _pinned(spark, tmp_path, base, base.select(*cols), ["k"],
+                      evolve_schema=True)
+    assert got["stored"].names == ["k", "a", "new"]
+    assert got["empty"].names == ["new", "k"]
+
+
+def test_derived_merge_schema_declines_what_spark_would_widen(spark):
+    stored = T._parse_datatype_string("k bigint, v int")
+    batch = T._parse_datatype_string
+
+    def derived(ddl, **kw):
+        return manifest._upsert_schema(stored, batch(ddl), ["k"],
+                                       kw.get("tombstone_col"),
+                                       kw.get("evolve_schema", False))
+
+    assert derived("k bigint, v int") is not None
+    assert derived("k bigint, v bigint") is None  # Spark widens
+    assert derived("k bigint, V int") is None  # case-only name clash
+    assert derived("k bigint, v int, x int") is None  # strict union fails
+    assert derived("k bigint, v int, d int", tombstone_col="d") is None
+    assert derived("k bigint, v int", tombstone_col="d") is None
+
+
+def test_case_only_name_clash_commits_like_spark(spark, tmp_path):
+    """Spark's ``unionByName`` matches names case-insensitively, so under
+    evolve_schema a batch column ``V`` updates the stored ``v``.  The
+    driver writer matches names exactly and would write nulls there, so
+    such a batch commits through the Spark writer."""
+    got = {}
+    for name, frame in (
+            ("local", lambda rows, ddl: local_df(spark, rows, ddl)),
+            ("rdd", spark.createDataFrame)):
+        path = str(tmp_path / name)
+        manifest_merge(spark.createDataFrame(
+            [(1, "a"), (2, "b")], "k bigint, v string"), path, ["k"],
+            n_buckets=2)
+        manifest_merge(frame([(1, "z")], "k bigint, V string"), path,
+                       ["k"], n_buckets=2, evolve_schema=True)
+        got[name] = _sorted(manifest_read(spark, path))
+    assert got["local"] == got["rdd"] == [(1, "z"), (2, "b")]
+
+
+def _raise(*_, **__):
+    raise AssertionError("patched to raise")
+
+
+def _kept(spark, monkeypatch, lookup, probes, schema):
+    """Rows of ``lookup`` over a bare ``local_df`` of the probes, with
+    the plan-folding ``_driver_rows`` patched to raise."""
+    with monkeypatch.context() as m:
+        m.setattr(manifest, "_driver_rows", _raise)
+        out = lookup(local_df(spark, probes, schema))
+        return sorted(map(tuple, out.collect()), key=repr)
+
+
+def test_driver_commit_builds_no_merge_plan(spark, tmp_path, monkeypatch):
+    """A driver commit derives the merge schema in Python: with the plan
+    builders patched to raise, the first commit, upserts with
+    tombstones and both evolve_schema directions still commit on the
+    driver.  The commits the driver writer declines still build the
+    plan."""
+    path = str(tmp_path / "s")
+    schema = "k bigint, v string, dead boolean"
+    manifest_merge(spark.createDataFrame(
+        [(i, f"v{i}", False) for i in range(20)], schema), path, ["k"],
+        n_buckets=4, tombstone_col="dead")
+    monkeypatch.setattr(manifest, "_read_buckets", _raise)
+    monkeypatch.setattr(manifest, "_merge_upsert", _raise)
+    first = str(tmp_path / "first")
+    for target, rows, ddl, kw in (
+            (first, [(1, "a", False)], schema, {"tombstone_col": "dead"}),
+            (path, [(1, "a", False), (2, None, True), (30, "c", False)],
+             schema, {"tombstone_col": "dead"}),
+            (path, [(3, "w", 7)], "k bigint, v string, x int",
+             {"evolve_schema": True}),
+            (path, [(4,)], "k bigint", {"evolve_schema": True})):
+        manifest_merge(local_df(spark, rows, ddl), target, ["k"],
+                       n_buckets=4, **kw)
+        assert _man(target)["summary"]["writer"] == "driver"
+    monkeypatch.undo()
+    got = {r.k: (r.v, r.x) for r in manifest_read(spark, path).collect()}
+    assert len(got) == 20 and 2 not in got and got[30] == ("c", None)
+    assert got[1] == ("a", None) and got[3] == ("w", 7)
+    assert got[4] == (None, None) and got[5] == ("v5", None)
+
+    def keep_new(stored, updates):
+        return updates if stored is None else stored.join(
+            updates, ["k"], "left_anti").unionByName(updates)
+
+    rows = [(i, i) for i in range(10)]
+    for name, data, ddl, kw in (
+            ("capped", rows, "k int, v bigint", {}),
+            ("nested", [(i, [i]) for i in range(10)],
+             "k int, xs array<int>", {}),
+            ("double", [(i / 2, i) for i in range(10)], "k double, v int",
+             {}),
+            ("additive", rows, "k int, v bigint",
+             {"mode": "additive", "value_cols": ["v"]}),
+            ("merge_fn", rows, "k int, v bigint", {"merge_fn": keep_new})):
+        p = str(tmp_path / name)
+        manifest_merge(spark.createDataFrame(data, ddl), p, ["k"],
+                       n_buckets=4, **kw)
+        with monkeypatch.context() as m:
+            m.setattr(manifest, "_read_buckets", _raise)
+            if name == "capped":
+                m.setattr(manifest, "_DRIVER_READ_MAX_BYTES", 0)
+            with pytest.raises(AssertionError, match="patched to raise"):
+                manifest_merge(local_df(spark, data[:3], ddl), p, ["k"],
+                               n_buckets=4, **kw)
+
+
+def _py4j_calls(fn, tries=3):
+    """The fewest py4j round trips of ``tries`` calls of ``fn()``."""
+    from py4j import clientserver
+    real = clientserver.ClientServerConnection.send_command
+    n = [0]
+
+    def counting(self, command):
+        n[0] += 1
+        return real(self, command)
+
+    best = None
+    clientserver.ClientServerConnection.send_command = counting
+    try:
+        for _ in range(tries):
+            ready = fn()
+            n[0] = 0
+            ready()
+            best = n[0] if best is None else min(best, n[0])
+    finally:
+        clientserver.ClientServerConnection.send_command = real
+    return best
+
+
+def test_driver_commit_and_lookup_py4j_round_trips(spark, tmp_path):
+    """A 24-row driver commit (a projection over ``local_df``, as
+    ``Pipeline.create_multiple`` gives) and a 4-key lookup stay under
+    a fixed number of py4j round trips.  Analysing a merge plan per
+    commit and folding a probe projection per lookup would take ~110
+    and ~50."""
+    path = str(tmp_path / "s")
+    manifest_merge(spark.range(2000).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("c"),
+        F.col("id").cast("string").alias("s")), path, ["k"], n_buckets=16)
+    ddl = "k bigint, c bigint, s string, dead boolean"
+    nxt = iter(range(10_000))
+
+    def commit():
+        i = next(nxt) * 24
+        batch = local_df(spark, [((j * 7) % 3000, j, f"x{j}", j % 5 == 0)
+                                 for j in range(i, i + 24)], ddl).select(
+            "k", (F.col("c") + 1).alias("c"), "s", "dead")
+        return lambda: manifest_merge(batch, path, ["k"], n_buckets=16,
+                                      tombstone_col="dead")
+
+    def lookup():
+        keys = local_df(spark, [(next(nxt) % 2500,) for _ in range(4)],
+                        "k bigint")
+        return lambda: manifest_lookup(spark, path, keys)
+
+    commit_calls = _py4j_calls(commit)
+    lookup_calls = _py4j_calls(lookup)
+    assert _man(path)["summary"]["writer"] == "driver"
+    assert commit_calls <= 40, commit_calls
+    assert lookup_calls <= 35, lookup_calls
+
+
+def test_lookup_reads_kept_rows_of_a_bare_local_df(spark, tmp_path,
+                                                   monkeypatch):
+    """A bare ``local_df`` of the store's key types is routed from the
+    rows it kept, with no plan to optimize; an empty one, one above the
+    cap and any frame derived from one are not, and every one of them
+    returns what the Spark path does."""
+    from wrangle_pypes_spark.localdf import local_rows
+    path = str(tmp_path / "s")
+    manifest_merge(spark.range(6000).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")), path,
+        ["k"], n_buckets=8)
+
+    def look(keys):
+        return manifest_lookup(spark, path, keys)
+
+    probes = [(3,), (4,), (5_000,), (9_999,), (None,)]
+    got = _both(spark, look, probes, "k bigint")
+    assert _kept(spark, monkeypatch, look, probes, "k bigint") == got
+    assert [r[0] for r in got] == [3, 4, 5_000]
+    bare = local_df(spark, probes, "k bigint")
+    for derived in (bare.filter(F.col("k") > 3),
+                    bare.select((F.col("k") + 1).alias("k")),
+                    bare.withColumn("k", F.col("k") * 2)):
+        assert local_rows(derived, ["k"]) is None
+        a = sorted(map(tuple, look(derived).collect()))
+        b = sorted(map(tuple, look(derived.localCheckpoint()).collect()))
+        assert a == b
+    assert sorted(r.k for r in look(bare.withColumn(
+        "k", F.col("k") * 2)).collect()) == [6, 8]
+    # 4096 rows keep theirs; one more keeps none
+    many = [(i,) for i in range(4097)]
+    assert local_rows(local_df(spark, many[:4096], "k bigint"),
+                      ["k"]) == many[:4096]
+    assert local_rows(local_df(spark, many, "k bigint"), ["k"]) is None
+    assert len(_both(spark, look, many, "k bigint", max_jobs=9)) == 4097
+    assert local_rows(local_df(spark, [], "k bigint"), ["k"]) is None
+    assert _both(spark, look, [], "k bigint", max_jobs=9) == []
+    # an int probe converts through _as_type, not through kept rows
+    seen = []
+    real = manifest._as_type
+
+    def spy(k, dt, strict=False):
+        seen.append((k, dt, strict))
+        return real(k, dt, strict)
+
+    monkeypatch.setattr(manifest, "_as_type", spy)
+    got = _both(spark, look, [(3,), (2 ** 31 - 1,), (None,)], "k int")
+    assert [r[0] for r in got] == [3] and ("k", T.LongType(), False) in seen
+
+
+@pytest.mark.parametrize("as_bytes", ["true", "false"])
+def test_kept_binary_keys_match_the_spark_path(spark, tmp_path,
+                                               monkeypatch, as_bytes):
+    path = str(tmp_path / "s")
+    manifest_merge(spark.createDataFrame(
+        [(bytes([i, 3]), i) for i in range(40)], "k binary, v int"), path,
+        ["k"], n_buckets=4)
+    conf = "spark.sql.execution.pyspark.binaryAsBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, as_bytes)
+    probes = [(bytes([i, 3]),) for i in (1, 2, 77)] + [(None,)]
+
+    def look(keys):
+        return manifest_lookup(spark, path, keys)
+
+    try:
+        got = _both(spark, look, probes, "k binary")
+        assert _kept(spark, monkeypatch, look, probes, "k binary") == got
+    finally:
+        spark.conf.set(conf, old)
+    assert sorted(r[1] for r in got) == [1, 2]

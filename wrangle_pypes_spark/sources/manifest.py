@@ -58,12 +58,17 @@ per commit.  A small driver-resident upsert batch on a local, flat
 store whose touched files fit ``_DRIVER_READ_MAX_BYTES`` is committed
 on the driver: pyarrow reads the touched buckets, drops the batch's
 keys, appends the batch's rows and writes one file per bucket, with
-no Spark job (``manifest_merge`` states when).  Every other commit
-runs one Spark job, ``repartition(touched, bucket)``, over the merge
-plan.  Both writers publish through the same manifest-then-pointer
-tail, and each manifest records a ``summary`` of its commit (which
-writer, buckets touched, files and bytes added; ``manifest_history``
-lists them).  Skewed keys skew buckets; xxhash64 spreads keys
+no Spark job and no merge plan to analyse — the output schema follows
+from the recorded one and the batch's in Python (``manifest_merge``
+states when).  Every other commit runs one Spark job,
+``repartition(touched, bucket)``, over the merge plan.  A lookup over
+a bare ``local_df`` reads the probe rows that ``local_df`` kept in
+Python, so it asks the JVM for no plan either.  Both writers publish
+through the same manifest-then-pointer tail, and each manifest
+records a ``summary`` of its commit (which writer, buckets touched,
+files and bytes added, and the rows written, which only the driver
+writer knows for free; ``manifest_history`` lists them).  Skewed keys
+skew buckets; xxhash64 spreads keys
 uniformly, and a hot single KEY is a store-design problem no format
 solves — pre-aggregate upstream.
 
@@ -89,7 +94,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import fsutil
-from ..localdf import local_df
+from ..localdf import _DRIVER_KEYS_MAX, local_df, local_rows
 from . import xxhash64
 
 _PTR = "_ptr.json"
@@ -97,11 +102,6 @@ _BKT = "bkt"  # partition dir prefix; NOT underscore-led (Spark hides those)
 _MANIFEST_RE = re.compile(r"^_m(\d{6})\.json$")
 _DATA_V_RE = re.compile(r"^v(\d{6})$")
 _HASH = "xxhash64"  # recorded in the manifest; immutable per store
-# Keys that sit in driver memory are routed to buckets in Python up to
-# this many rows.  Hashing costs ~3 us per long key and ~15-18 us per
-# 48-byte string; the discovery job it replaces costs >= ~100 ms, so
-# even 4096 string keys stay under one job.
-_DRIVER_KEYS_MAX = 4096
 # column types the driver read serves (pyarrow reads them exactly as
 # Spark's parquet reader does); anything nested takes the Spark path
 _FLAT_TYPES = (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
@@ -325,6 +325,52 @@ def _merge_upsert(stored: Optional[DataFrame], updates: DataFrame,
     return survivors.unionByName(alive)
 
 
+def _upsert_schema(stored: Optional[T.StructType], batch: T.StructType,
+                   keys: Sequence[str], tombstone_col: Optional[str],
+                   evolve_schema: bool) -> Optional[T.StructType]:
+    """The schema of ``_merge_upsert``'s plan, derived without
+    building one.  ``stored`` is the recorded schema when a touched
+    bucket holds data (None when none does), ``batch`` the batch's.
+    With no stored rows it is the batch's schema less the tombstone
+    column.  Otherwise it follows the plan: the anti-join on the
+    ``keys`` puts them first, then the other recorded fields in
+    order; ``unionByName`` appends (``evolve_schema``) the batch-only
+    fields; every field is nullable — the parquet reader reports
+    stored columns so, and a union column is nullable when either
+    side's is.  None when the rule is not that simple — a shared
+    column's types differ (Spark widens or fails), names clash
+    case-insensitively, the strict union would fail, or the tombstone
+    column is not one boolean batch column — and the commit then
+    builds the plan and takes the Spark writer."""
+    if len({n.lower() for n in batch.names}) != len(batch.names):
+        return None
+    if tombstone_col is not None and not (
+            tombstone_col in batch.names
+            and isinstance(batch[tombstone_col].dataType, T.BooleanType)):
+        return None
+    alive = [f for f in batch.fields if f.name != tombstone_col]
+    if stored is None:
+        return T.StructType(alive)
+    have = {f.name.lower(): f for f in stored.fields}
+    if len(have) != len(stored.fields):
+        return None
+    new = []
+    for f in alive:
+        s = have.get(f.name.lower())
+        if s is None and evolve_schema:
+            new.append(f)
+        elif s is None or s.name != f.name or s.dataType != f.dataType:
+            return None
+    if not evolve_schema and len(alive) != len(have):
+        return None
+    if any(k not in stored.names for k in keys):
+        return None
+    left = [stored[k] for k in keys] + [f for f in stored.fields
+                                        if f.name not in keys]
+    return T.StructType([T.StructField(f.name, f.dataType, True, f.metadata)
+                         for f in left + new])
+
+
 def _merge_additive(stored: Optional[DataFrame], updates: DataFrame,
                     key_cols: Sequence[str],
                     value_cols: Sequence[str]) -> DataFrame:
@@ -392,9 +438,13 @@ def manifest_merge(updates: DataFrame, path: str,
     commit runs on the driver with pyarrow and no Spark job: stored
     rows whose keys the batch carries are dropped, the batch's live
     rows are appended to the buckets they hash to, and each non-empty
-    touched bucket is written as one parquet file.  It records the
-    same schema as the Spark path, which the merge plan's analysis
-    gives both.
+    touched bucket is written as one parquet file.  Such a commit
+    builds no merge plan: it derives the plan's output schema in
+    Python (``_upsert_schema``, Spark's ``unionByName`` rule) and
+    records the same schema as the Spark path.  A batch the rule does
+    not cover simply (a column type that differs from the store's, or
+    a column name that matches a stored one only case-insensitively)
+    commits through the Spark writer.
 
     Otherwise the commit is one Spark job over the merge plan, and
     ``updates`` is evaluated TWICE — once for touched-bucket discovery
@@ -488,27 +538,56 @@ def manifest_merge(updates: DataFrame, path: str,
             r[0] for r in updates.select(bcol.alias(_BKT)).distinct()
             .collect())
 
-    stored = None
-    if man is not None and touched:
-        stored = _read_buckets(spark, path, man, bucket_ids=touched)
+    def merge_plan() -> DataFrame:
+        stored = None
+        if man is not None and touched:
+            stored = _read_buckets(spark, path, man, bucket_ids=touched)
+        if merge_fn is not None:
+            out = merge_fn(stored, updates)
+            lacking = [k for k in keys if k not in out.columns]
+            if lacking:
+                raise ValueError(
+                    f"merge_fn result lacks key columns {lacking}")
+            return out
+        if mode == "additive":
+            return _merge_additive(stored, updates, keys, value_cols)
+        return _merge_upsert(stored, updates, keys, tombstone_col,
+                             evolve_schema)
 
-    if merge_fn is not None:
-        out = merge_fn(stored, updates)
-        lacking = [k for k in keys if k not in out.columns]
-        if lacking:
-            raise ValueError(
-                f"merge_fn result lacks key columns {lacking}")
-    elif mode == "additive":
-        out = _merge_additive(stored, updates, keys, value_cols)
-    else:
-        out = _merge_upsert(stored, updates, keys, tombstone_col,
-                            evolve_schema)
+    # a driver commit needs only the merge plan's schema, which a first
+    # commit or a recorded schema gives in Python; every other commit
+    # builds the plan, before the version number is chosen: a merge_fn
+    # runs caller code, which may itself commit to this store
+    out, out_schema = None, None
+    if mode == "upsert" and merge_fn is None and buckets is not None \
+            and (man is None or schema is not None):
+        full = man is not None and any(str(b) in man["buckets"]
+                                       for b in touched)
+        out_schema = _upsert_schema(schema if full else None,
+                                    updates.schema, keys, tombstone_col,
+                                    evolve_schema)
+    if out_schema is None:
+        out = merge_plan()
+        out_schema = out.schema
 
     used = _used_versions(path, spark=spark) \
         if fsutil.dir_exists(path, spark=spark) else []
     version = (used[-1] + 1) if used else 1
+    staging = _join(path, f"data/v{version:06d}")
+    done = None if out is not None else _driver_write(
+        path, staging, man, schema, out_schema, updates.schema, rows,
+        buckets, touched, keys, tombstone_col, compression)
+    if done is not None:
+        (written, rows_written), writer = done, "driver"
+    else:
+        if out is None:  # the driver writer declined
+            out = merge_plan()
+            out_schema = out.schema
+        written, rows_written, writer = _spark_write(
+            spark, staging, out, keys, n_buckets, touched,
+            compression), None, "spark"
     if touched:
-        schema_json = out.schema.jsonValue()
+        schema_json = out_schema.jsonValue()
         if man is not None and man.get("schema"):
             # the recorded schema NEVER narrows (found by the property
             # soak): a batch without an evolved column whose keys land
@@ -521,27 +600,18 @@ def manifest_merge(updates: DataFrame, path: str,
             old_names = {f["name"] for f in old["fields"]}
             schema_json = dict(old)
             schema_json["fields"] = list(old["fields"]) + [
-                f for f in out.schema.jsonValue()["fields"]
+                f for f in out_schema.jsonValue()["fields"]
                 if f["name"] not in old_names]
     else:  # nothing written: the store (and its schema) are unchanged
         schema_json = man.get("schema") if man is not None \
-            else out.schema.jsonValue()
-    staging = _join(path, f"data/v{version:06d}")
-    written, writer = None, "driver"
-    if mode == "upsert" and merge_fn is None and buckets is not None:
-        written = _driver_write(path, staging, man, schema, out.schema,
-                                updates.schema, rows, buckets, touched,
-                                keys, tombstone_col, compression)
-    if written is None:
-        written, writer = _spark_write(spark, staging, out, keys,
-                                       n_buckets, touched,
-                                       compression), "spark"
+            else out_schema.jsonValue()
     return _publish(
         spark, path, version, written, writer=writer,
         base_buckets=dict(man["buckets"]) if man is not None else {},
         touched=touched, keys=keys, n_buckets=n_buckets,
         epoch_id=epoch_id, schema_json=schema_json,
-        expected_version=cur[0] if cur is not None else None)
+        expected_version=cur[0] if cur is not None else None,
+        rows_written=rows_written)
 
 
 def _spark_write(spark, staging: str, out: DataFrame,
@@ -570,22 +640,23 @@ def _driver_write(path: str, staging: str, man: Optional[dict],
                   schema: Optional[T.StructType], out: T.StructType,
                   batch: T.StructType, rows: list, buckets: list,
                   touched: Sequence[int], keys: Sequence[str],
-                  tombstone_col: Optional[str],
-                  compression: str) -> Optional[dict[int, list[int]]]:
+                  tombstone_col: Optional[str], compression: str
+                  ) -> Optional[tuple[dict[int, list[int]], int]]:
     """The upsert of the batch ``rows`` (of schema ``batch``; bucket
     ``buckets[i]`` for row i) written on the driver with pyarrow, one
     parquet file per non-empty touched bucket under ``staging``;
-    returns {bucket: [bytes of its file]}.  Each touched bucket's
-    stored rows lose the keys the batch carries (left anti-join) and
-    keep their bucket; the batch's non-tombstone rows append to the
-    buckets they hash to.  ``out`` is the schema of the Spark path's
-    merge plan, which the files take.  None — nothing written — when
-    the store is remote or lacks a recorded schema, the codec has no
-    pyarrow equivalent, a column is not flat, a column's type differs
-    between ``out``, the batch and the store, or the touched files
-    exceed ``_DRIVER_READ_MAX_BYTES``."""
+    returns ({bucket: [bytes of its file]}, rows written).  Each
+    touched bucket's stored rows lose the keys the batch carries (left
+    anti-join) and keep their bucket; the batch's non-tombstone rows
+    append to the buckets they hash to.  ``out`` is the schema of the
+    Spark path's merge plan, which the files take; ``schema`` is the
+    store's recorded one (None on a first commit).  None — nothing
+    written — when the store is remote, the codec has no pyarrow
+    equivalent, a column is not flat, a column's type differs between
+    ``out``, the batch and the store, or the touched files exceed
+    ``_DRIVER_READ_MAX_BYTES``."""
     codec = _ARROW_CODECS.get(compression.lower())
-    if codec is None or (man is not None and schema is None) \
+    if codec is None \
             or any(f.name in s.names and s[f.name].dataType != f.dataType
                    for s in (batch, schema) if s is not None
                    for f in out.fields):
@@ -630,18 +701,20 @@ def _driver_write(path: str, staging: str, man: Optional[dict],
             pq.write_table(part, f, compression=codec,
                            use_dictionary=False, store_schema=False)
             written[b] = [os.path.getsize(f)]
-    return written
+    return written, merged.num_rows
 
 
 def _publish(spark, path: str, version: int,
              written: dict[int, list[int]], *, writer: str,
              base_buckets: dict, touched: Sequence[int],
              keys: Sequence[str], n_buckets: int, epoch_id: int,
-             schema_json, expected_version: Optional[int]) -> int:
+             schema_json, expected_version: Optional[int],
+             rows_written: Optional[int] = None) -> int:
     """Publish version ``version`` whose touched buckets were written
-    under ``data/vN`` (``written``: bucket -> bytes of each file): the
-    manifest, then the pointer — the shared tail of both writers and
-    of rebucket.
+    under ``data/vN`` (``written``: bucket -> bytes of each file;
+    ``rows_written`` their rows, None where counting them would cost a
+    job): the manifest, then the pointer — the shared tail of both
+    writers and of rebucket.
 
     ``expected_version`` is the committed version the caller's merge
     was BASED on: re-checked immediately before the pointer publish
@@ -698,7 +771,8 @@ def _publish(spark, path: str, version: int,
     fsutil.ensure_dir(path, spark=spark)
     summary = {"writer": writer, "buckets_touched": len(touched),
                "files_added": sum(map(len, written.values())),
-               "bytes_added": sum(map(sum, written.values()))}
+               "bytes_added": sum(map(sum, written.values())),
+               "rows_written": rows_written}
     fsutil.write_text_atomic(
         _join(path, _manifest_name(version)),
         json.dumps({"version": version, "epoch": int(epoch_id),
@@ -912,7 +986,11 @@ def manifest_lookup(spark: SparkSession, path: str,
     Cost: keys already in driver memory (``keys`` folds to a local
     relation of at most ``_DRIVER_KEYS_MAX`` rows, as ``local_df``
     output and filters or projections over it do) are routed to their
-    buckets in Python.  When, in addition, the store is local, every
+    buckets in Python.  A bare ``local_df`` whose key types are the
+    store's gives its kept rows straight back (``local_rows``), with
+    no projection to build or optimize; any key that converts goes
+    through the one ``_as_type`` projection.  When, in addition, the
+    store is local, every
     recorded column is flat (no struct, array or map) and the touched
     files total at most ``_DRIVER_READ_MAX_BYTES`` (32 MB), the
     lookup is served on the driver: pyarrow reads those files and the
@@ -942,10 +1020,15 @@ def manifest_lookup(spark: SparkSession, path: str,
     got = [keys.schema[k].dataType for k in kcols]
     ktypes = _key_types(kcols, got, schema, "probe")
     n_buckets = int(man["n_buckets"])
+    # keys of the store's types are read back from a bare ``local_df``
+    # in Python; any other probe converts in the one projection
+    rows = local_rows(keys, kcols) if got == ktypes else None
+    want = None
+    if rows is None:
+        want = keys.select(*[k if g == t else _as_type(k, t)
+                             for k, g, t in zip(kcols, got, ktypes)])
+        rows = _driver_rows(want)
     touched = None
-    want = keys.select(*[k if g == t else _as_type(k, t)
-                         for k, g, t in zip(kcols, got, ktypes)])
-    rows = _driver_rows(want)
     if rows is not None:
         # a null (or non-fitting) key matches nothing
         probes = {r for r in rows if None not in r}
@@ -955,7 +1038,7 @@ def manifest_lookup(spark: SparkSession, path: str,
                                probes)
             if out is not None:
                 return out
-    want = want.distinct()
+    want = (keys.select(*kcols) if want is None else want).distinct()
     if touched is None:
         bcol = _bucket_col(kcols, n_buckets)
         touched = sorted(r[0] for r in
@@ -979,8 +1062,10 @@ def manifest_history(spark: SparkSession, path: str) -> Optional[DataFrame]:
     staged/orphaned versions above the pointer are not commits and
     are excluded).  Trailing columns carry each commit's recorded
     summary: ``writer`` (``"driver"`` or ``"spark"``),
-    ``buckets_touched``, ``files_added`` and ``bytes_added`` — null
-    for manifests written before commits recorded one.  ``None`` when
+    ``buckets_touched``, ``files_added``, ``bytes_added`` and
+    ``rows_written`` — null for manifests written before commits
+    recorded one; ``rows_written`` is null, too, for Spark-written
+    commits, which would need a job to count them.  ``None`` when
     nothing was ever committed.  Driver cost: one tiny JSON read per
     retained version, bounded by the vacuum keep-window."""
     cur = manifest_current(path, spark=spark)
@@ -999,12 +1084,14 @@ def manifest_history(spark: SparkSession, path: str) -> Optional[DataFrame]:
         rows.append((int(man["version"]), int(man["epoch"]),
                      int(man["n_buckets"]), len(man["buckets"]),
                      v == cur[0], s.get("writer"), s.get("buckets_touched"),
-                     s.get("files_added"), s.get("bytes_added")))
+                     s.get("files_added"), s.get("bytes_added"),
+                     s.get("rows_written")))
     return local_df(
         spark, rows, "version int, epoch int, n_buckets int, "
                      "n_nonempty_buckets int, is_head boolean, "
                      "writer string, buckets_touched int, "
-                     "files_added int, bytes_added bigint")
+                     "files_added int, bytes_added bigint, "
+                     "rows_written bigint")
 
 
 def manifest_merge_into(source: DataFrame, path: str, *,
