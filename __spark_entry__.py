@@ -2753,12 +2753,14 @@ QUALIFY cume_dist() OVER (PARTITION BY lang ORDER BY quality) > 0.2
 def q_stream_dedup_keep_best(spark, sf_dir):
     """Durable streaming corpus dedup (streaming/windows.py
     ``foreach_batch_dedup_keep_best``): drain the documents table as a
-    file stream, maintaining a keep-longest-per-fingerprint store via
-    idempotent max_by merges (no epoch marker needed — see docstring).
-    Store == batch ``dedup_keep_best`` regardless of batch boundaries,
-    so the batch keep-longest SQL is the oracle."""
+    file stream, maintaining a keep-longest-per-fingerprint manifest
+    store via idempotent max_by merges (no epoch marker needed — see
+    docstring), read back with ``manifest_read``.  Store == batch
+    ``dedup_keep_best`` regardless of batch boundaries, so the batch
+    keep-longest SQL is the oracle."""
     import tempfile
 
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import (
         foreach_batch_dedup_keep_best, stream_table)
 
@@ -2770,7 +2772,7 @@ def q_stream_dedup_keep_best(spark, sf_dir):
         docs, store, key_cols=["fingerprint"],
         order_cols=[F.col("n_chars"), -F.col("doc_id")])
     q.awaitTermination()
-    return (spark.read.parquet(store)
+    return (manifest_read(spark, store)
             .select("fingerprint", "doc_id", "n_chars"))
 
 
@@ -4197,9 +4199,11 @@ def q_stream_cdc_store(spark, sf_dir):
     """Durable streaming CDC (streaming/windows.py
     ``foreach_batch_cdc_apply``): an I/U/D feed over orders drained in
     two micro-batches — seq-2 updates supersede the seq-1 images,
-    seq-3 deletes tombstone their keys.  The max_by merge is
-    order-independent and idempotent, so the final store equals the
-    one-shot latest-image semantics the oracle expresses directly.
+    seq-3 deletes tombstone their keys, into a manifest store with the
+    default 64 buckets, read back with ``read_cdc_store``.  The max_by
+    merge is order-independent and idempotent, so the final store
+    equals the one-shot latest-image semantics the oracle expresses
+    directly.
     Multiplies by 2 / 0.5 keep doubles binary-exact cross-engine."""
     import tempfile
 
@@ -4237,14 +4241,13 @@ def q_stream_cdc_store(spark, sf_dir):
 
 
 def q_stream_cdc_manifest_store(spark, sf_dir):
-    """NEW r7: the same durable streaming CDC on the bucketed
-    copy-on-write MANIFEST store (``store_format="manifest"``) — the
-    data-sized keyed-store case the full-snapshot/swap stores state as
-    their limit.  Each micro-batch's max_by merge rewrites only the
-    buckets its keys hash into; untouched buckets' files carry over by
-    reference (sources/manifest.py).  Same one-shot latest-image
-    oracle as ``stream_cdc_store``; tombstone / replay / carry-over /
-    vacuum proofs live in tests/test_manifest.py."""
+    """NEW r7: the same durable streaming CDC on a 32-bucket manifest
+    store, vacuumed to its last version before the read.  Each
+    micro-batch's max_by merge rewrites only the buckets its keys hash
+    into; untouched buckets' files carry over by reference
+    (sources/manifest.py).  Same one-shot latest-image oracle as
+    ``stream_cdc_store``; tombstone / replay / carry-over / vacuum
+    proofs live in tests/test_manifest.py."""
     import tempfile
 
     from wrangle_pypes_spark.sources.manifest import manifest_vacuum
@@ -4277,7 +4280,6 @@ def q_stream_cdc_manifest_store(spark, sf_dir):
     store = tempfile.mkdtemp(prefix="wps_cdcm_store_") + "/state"
     q = foreach_batch_cdc_apply(stream, store,
                                 key_cols=["o_orderkey"], seq_col="seq",
-                                store_format="manifest",
                                 store_buckets=32)
     q.awaitTermination()
     manifest_vacuum(store, keep=1)
@@ -4336,8 +4338,7 @@ def q_stream_cdc_manifest_evolve(spark, sf_dir):
                   .format("parquet").load(src))
         q = foreach_batch_cdc_apply(
             stream, store, key_cols=["o_orderkey"], seq_col="seq",
-            store_format="manifest", store_buckets=32,
-            evolve_schema=True)
+            store_buckets=32, evolve_schema=True)
         q.awaitTermination()
     return (read_cdc_store(spark, store)
             .select("o_orderkey", "o_custkey", "o_totalprice",
@@ -4362,11 +4363,14 @@ def q_cdc_vacuum_store(spark, sf_dir):
     read-back: a feed with TWO delete generations (seq 3 and seq 9)
     is maintained into a durable store, then vacuumed at horizon 5 —
     old tombstones vanish, young ones survive with their applied seq,
-    live rows are untouched.  The oracle expresses the whole
-    feed→latest-image→retention pipeline as one CASE chain."""
+    live rows are untouched.  The raw manifest store, tombstones and
+    bookkeeping included, is read back with ``manifest_read``.  The
+    oracle expresses the whole feed→latest-image→retention pipeline
+    as one CASE chain."""
     import tempfile
 
     from wrangle_pypes_spark.operators.cdc import cdc_vacuum
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import foreach_batch_cdc_apply
 
     base = _t(spark, sf_dir, "orders").select(
@@ -4394,7 +4398,7 @@ def q_cdc_vacuum_store(spark, sf_dir):
     foreach_batch_cdc_apply(stream, store, key_cols=["o_orderkey"],
                             seq_col="seq").awaitTermination()
     cdc_vacuum(spark, store, min_seq=5)
-    raw = spark.read.parquet(store)
+    raw = manifest_read(spark, store)
     return raw.select("o_orderkey", "o_totalprice",
                       F.col("_cdc_seq").cast("long").alias("cdc_seq"),
                       F.col("_cdc_deleted").alias("cdc_deleted")) \
@@ -4606,32 +4610,32 @@ SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders
 
 def q_scd2_rebuild_heal(spark, sf_dir):
     """Late-data recovery for the durable SCD2 store (operators/scd.py
-    ``scd2_rebuild_store``): bootstrap the dimension from a log MISSING
-    a deterministic straggler slice (minute>=30 events of every 7th
+    ``scd2_rebuild_store``): bootstrap the manifest-store dimension
+    with a full rebuild (``keys=None``) of a log MISSING a
+    deterministic straggler slice (minute>=30 events of every 7th
     user), then heal ONLY the affected keys from the full raw log.
-    The healed store must equal ``scd2_build`` over the complete log —
-    the same change-detect/lead() SQL as the streaming SCD2 oracle,
-    which is the ground-truth contract the docstring promises."""
+    The healed store, read back with ``manifest_read``, must equal
+    ``scd2_build`` over the complete log — the same change-detect/
+    lead() SQL as the streaming SCD2 oracle, which is the
+    ground-truth contract the docstring promises."""
     import tempfile
 
-    from wrangle_pypes_spark.operators.scd import (scd2_build,
-                                                   scd2_rebuild_store)
-    from wrangle_pypes_spark.sources.sinks import upsert_parquet
+    from wrangle_pypes_spark.operators.scd import scd2_rebuild_store
+    from wrangle_pypes_spark.sources.manifest import manifest_read
 
     dim = tempfile.mkdtemp(prefix="wps_scd2_heal_") + "/dim"
     log = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     late = ((F.pmod(F.col("user_id"), F.lit(7)) == 3) &
             (F.minute("ts") >= 30))
-    partial = scd2_build(log.filter(~late), key_cols=["user_id"],
-                         ts_col="ts", attr_cols=["event_type"],
-                         tiebreak_cols=["event_type"])
-    upsert_parquet(partial, dim, ["user_id"], dedup_incoming=False)
+    scd2_rebuild_store(log.filter(~late), dim, key_cols=["user_id"],
+                       ts_col="ts", attr_cols=["event_type"],
+                       tiebreak_cols=["event_type"])
     # heal: re-collapse ONLY the straggler keys from the raw log
     scd2_rebuild_store(log, dim, key_cols=["user_id"], ts_col="ts",
                        attr_cols=["event_type"],
                        tiebreak_cols=["event_type"],
                        keys=log.filter(late).select("user_id"))
-    return (spark.read.parquet(dim)
+    return (manifest_read(spark, dim)
             .select("user_id", F.col("event_type").alias("status"),
                     F.col("valid_from").cast("timestamp_ntz")
                      .alias("valid_from"),
@@ -5879,12 +5883,14 @@ ORDER BY user_id
 def q_stream_scd2_user_status(spark, sf_dir):
     """Durable streaming SCD2 (streaming/windows.py
     ``foreach_batch_scd2_merge``): each user's event-type history as
-    validity intervals, maintained incrementally in a parquet dimension
-    keyed-MERGEd per micro-batch.  Intervals derive from data
-    timestamps, so the drained store equals the batch ``scd2_build`` —
-    the change-detect/lead() SQL is the oracle."""
+    validity intervals, maintained incrementally in a manifest-store
+    dimension keyed-MERGEd per micro-batch and read back with
+    ``manifest_read``.  Intervals derive from data timestamps, so the
+    drained store equals the batch ``scd2_build`` — the
+    change-detect/lead() SQL is the oracle."""
     import tempfile
 
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import foreach_batch_scd2_merge
 
     dim = tempfile.mkdtemp(prefix="wps_scd2_dim_") + "/state"
@@ -5893,7 +5899,7 @@ def q_stream_scd2_user_status(spark, sf_dir):
                                  ts_col="ts", attr_cols=["event_type"],
                                  tiebreak_cols=["event_type"])
     q.awaitTermination()
-    return (spark.read.parquet(dim)
+    return (manifest_read(spark, dim)
             .select("user_id", F.col("event_type").alias("status"),
                     F.col("valid_from").cast("timestamp_ntz")
                      .alias("valid_from"),

@@ -188,6 +188,16 @@ def main():
     args = [a for a in args if a not in ("--bare", "--window")]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    qs = entrymod.queries()
+    if window:
+        qs = dict(list(qs.items())[:50])
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # a typo, or a name outside --window, must not run nothing and
+        # still print ALL PASS
+        raise SystemExit("query names not in the "
+                         f"{'--window slice of the ' if window else ''}"
+                         f"registry: {unknown}")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     # same hygiene as bench.py: clear OUR abandoned per-query temp
     # stores (wps_* only) so repeated sweeps don't pile small-file
@@ -211,9 +221,6 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"'{os.path.join(sf_dir, t + '.parquet')}'")
 
-    qs = entrymod.queries()
-    if window:
-        qs = dict(list(qs.items())[:50])
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():

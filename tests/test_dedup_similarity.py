@@ -464,6 +464,7 @@ def test_streaming_dedup_keep_best_equals_batch(spark, tables, tmp_path):
 
     from wrangle_pypes_spark.functions import doc_fingerprint
     from wrangle_pypes_spark.operators.dedup import dedup_keep_best
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import foreach_batch_dedup_keep_best
 
     d = tables["documents"].select(
@@ -492,7 +493,7 @@ def test_streaming_dedup_keep_best_equals_batch(spark, tables, tmp_path):
         return sorted((r.fingerprint, r.doc_id, r.n_chars)
                       for r in df.collect())
 
-    got = spark.read.parquet(store)
+    got = manifest_read(spark, store)
     want = dedup_keep_best(d, ["fingerprint"], order)
     assert rows(got) == rows(want)
     assert got.count() < d.count()  # the corpus has real duplicates
@@ -504,7 +505,7 @@ def test_streaming_dedup_keep_best_equals_batch(spark, tables, tmp_path):
     q2 = foreach_batch_dedup_keep_best(
         replay, store, key_cols=["fingerprint"], order_cols=order)
     q2.awaitTermination()
-    assert rows(spark.read.parquet(store)) == rows(want)
+    assert rows(manifest_read(spark, store)) == rows(want)
 
 
 def test_span_dedup_removes_duplicated_spans(spark):
@@ -799,6 +800,7 @@ def test_streaming_cdc_apply_tombstones_and_replay(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import (foreach_batch_cdc_apply,
                                                read_cdc_store)
 
@@ -836,12 +838,12 @@ def test_streaming_cdc_apply_tombstones_and_replay(spark, tmp_path):
     # key 1: seq-3 image wins over the late seq-2; key 2 stays deleted
     assert cur == {1: "v3", 3: "c1", 4: "d1"}
     raw = {r.id: (r._cdc_seq, r._cdc_deleted)
-           for r in spark.read.parquet(store).collect()}
+           for r in manifest_read(spark, store).collect()}
     assert raw[2] == (5, True)  # tombstone retained with applied seq
 
-    before = sorted(map(tuple, spark.read.parquet(store).collect()))
+    before = sorted(map(tuple, manifest_read(spark, store).collect()))
     drain()  # at-least-once replay of the whole feed
-    after = sorted(map(tuple, spark.read.parquet(store).collect()))
+    after = sorted(map(tuple, manifest_read(spark, store).collect()))
     assert before == after
 
 

@@ -395,7 +395,7 @@ def test_streaming_rollup_manifest_store_equals_batch_and_survives_crash(
 
 def test_streaming_cdc_manifest_store_tombstones_replay_and_carryover(
         spark, tmp_path):
-    """foreach_batch_cdc_apply(store_format='manifest'): out-of-order
+    """foreach_batch_cdc_apply on the manifest store: out-of-order
     I/U/D batches converge to the one-shot latest image, a late stale
     update cannot resurrect a tombstoned key, replaying the feed is a
     no-op, and batches rewrite only the buckets their keys hash into."""
@@ -431,7 +431,6 @@ def test_streaming_cdc_manifest_store_tombstones_replay_and_carryover(
                   .format("parquet").load(src))
         q = foreach_batch_cdc_apply(stream, store, key_cols=["id"],
                                     seq_col="seq",
-                                    store_format="manifest",
                                     store_buckets=BUCKETS)
         q.awaitTermination()
 
@@ -462,7 +461,7 @@ def test_streaming_cdc_manifest_store_tombstones_replay_and_carryover(
 
 def test_streaming_scd2_manifest_store_equals_batch_and_replays(
         spark, tmp_path):
-    """foreach_batch_scd2_merge(store_format='manifest'): the drained
+    """foreach_batch_scd2_merge on the manifest store: the drained
     bucketed dimension equals the one-shot scd2_build, replay is a
     no-op, and a key's whole version history lands in one bucket."""
     import glob
@@ -497,7 +496,6 @@ def test_streaming_scd2_manifest_store_equals_batch_and_replays(
         q = foreach_batch_scd2_merge(stream, dim, key_cols=["id"],
                                      ts_col="ts", attr_cols=["status"],
                                      tiebreak_cols=["status"],
-                                     store_format="manifest",
                                      store_buckets=BUCKETS)
         q.awaitTermination()
 
@@ -526,7 +524,7 @@ def test_streaming_scd2_manifest_store_equals_batch_and_replays(
 
 
 def test_streaming_dedup_keep_best_manifest_store(spark, tmp_path):
-    """foreach_batch_dedup_keep_best(store_format='manifest') keeps the
+    """foreach_batch_dedup_keep_best on the manifest store keeps the
     best row per fingerprint across batches, idempotent under replay."""
     import glob
     import shutil
@@ -555,7 +553,7 @@ def test_streaming_dedup_keep_best_manifest_store(spark, tmp_path):
         q = foreach_batch_dedup_keep_best(
             stream, store, key_cols=["fp"],
             order_cols=[F.col("score"), F.col("doc")],
-            store_format="manifest", store_buckets=BUCKETS)
+            store_buckets=BUCKETS)
         q.awaitTermination()
 
     drain()
@@ -565,21 +563,6 @@ def test_streaming_dedup_keep_best_manifest_store(spark, tmp_path):
     drain()  # replay no-op
     assert {r.fp: (r.doc, r.score)
             for r in manifest_read(spark, store).collect()} == got
-
-
-def test_cdc_store_format_validation(spark, tmp_path):
-    from wrangle_pypes_spark.streaming import foreach_batch_cdc_apply
-
-    df = spark.createDataFrame([(1, "I", 1, "x")],
-                               "id int, op string, seq int, val string")
-    src = str(tmp_path / "src")
-    df.write.parquet(src)
-    stream = (spark.readStream.schema(df.schema)
-              .format("parquet").load(src))
-    with pytest.raises(ValueError, match="store_format"):
-        foreach_batch_cdc_apply(stream, str(tmp_path / "x"),
-                                key_cols=["id"], seq_col="seq",
-                                store_format="delta")
 
 
 def test_rollup_manifest_partition_by_routes_to_pmanifest(
@@ -799,7 +782,7 @@ def test_cdc_manifest_mid_stream_schema_evolution(spark, tmp_path):
     from wrangle_pypes_spark.streaming import (foreach_batch_cdc_apply,
                                                read_cdc_store)
 
-    def _drain(feed, store, fmt="manifest", **kw):
+    def _drain(feed, store, **kw):
         src = str(tmp_path / f"src_{abs(hash(feed.schema.json())) % 997}")
         shutil.rmtree(src, ignore_errors=True)
         feed.coalesce(1).write.parquet(src)
@@ -807,7 +790,7 @@ def test_cdc_manifest_mid_stream_schema_evolution(spark, tmp_path):
                   .format("parquet").load(src))
         q = foreach_batch_cdc_apply(
             stream, store, key_cols=["k"], seq_col="seq",
-            store_format=fmt, store_buckets=8, **kw)
+            store_buckets=8, **kw)
         q.awaitTermination()
 
     store = str(tmp_path / "store")
@@ -839,16 +822,6 @@ def test_cdc_manifest_mid_stream_schema_evolution(spark, tmp_path):
     got = {r.k: (r.val, r.extra)
            for r in read_cdc_store(spark, store).collect()}
     assert got[3] == ("NEW", 99)
-
-    # validation: evolve_schema needs the manifest store
-    empty_src = str(tmp_path / "empty_src")
-    os.makedirs(empty_src)
-    with pytest.raises(ValueError, match="manifest"):
-        foreach_batch_cdc_apply(
-            spark.readStream.schema(v1.schema)
-            .format("parquet").load(empty_src),
-            store, key_cols=["k"], seq_col="seq",
-            store_format="swap", evolve_schema=True)
 
 
 def test_concurrent_writer_detected_before_publish(spark, tmp_path):
@@ -1032,7 +1005,7 @@ def test_cdc_store_lookup_hides_tombstones_and_prunes(spark, tmp_path):
     q = foreach_batch_cdc_apply(
         spark.readStream.schema(feed.schema).format("parquet").load(src),
         store, key_cols=["k"], seq_col="seq",
-        store_format="manifest", store_buckets=8)
+        store_buckets=8)
     q.awaitTermination()
 
     probe = spark.createDataFrame([(1,), (2,), (3,), (9,)], "k int")
@@ -1113,7 +1086,7 @@ def test_cdc_random_feed_equals_latest_image_model(spark, tmp_path, seed):
             spark.readStream.schema(feed.schema)
             .format("parquet").load(src),
             store, key_cols=["k"], seq_col="seq",
-            store_format="manifest", store_buckets=4,
+            store_buckets=4,
             evolve_schema=True)
         q.awaitTermination()
 
@@ -1164,7 +1137,7 @@ def test_lookup_all_probes_miss_returns_empty_not_none(spark, tmp_path):
     q = foreach_batch_cdc_apply(
         spark.readStream.schema(feed.schema).format("parquet").load(src),
         cstore, key_cols=["k"], seq_col="seq",
-        store_format="manifest", store_buckets=64)
+        store_buckets=64)
     q.awaitTermination()
     assert cdc_store_lookup(spark, cstore, probe).count() == 0
 
@@ -1427,7 +1400,7 @@ def test_cdc_quarantine_dead_letter_path(spark, tmp_path):
               .parquet(src))
     q = foreach_batch_cdc_apply(
         stream, store, key_cols=["k"], seq_col="seq",
-        store_format="manifest", store_buckets=4,
+        store_buckets=4,
         quarantine_path=quar,
         checkpoint=str(tmp_path / "ckpt"))
     q.awaitTermination()

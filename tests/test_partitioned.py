@@ -387,8 +387,7 @@ def test_streaming_rollup_partitioned_manifest_equals_batch(
 
 def test_streaming_cdc_partitioned_store_converges_and_lookups(
         spark, tmp_path):
-    """foreach_batch_cdc_apply(store_format='manifest',
-    store_partition_col='day'): out-of-order I/U/D batches converge
+    """foreach_batch_cdc_apply(store_partition_col='day'): out-of-order I/U/D batches converge
     to the one-shot latest image laid out one sub-store per day
     (partition value immutable per key — the stated contract),
     replay is a no-op (idempotent max_by, guard disabled on purpose),
@@ -428,8 +427,7 @@ def test_streaming_cdc_partitioned_store_converges_and_lookups(
                   .format("parquet").load(src))
         q = foreach_batch_cdc_apply(
             stream, store, key_cols=["id"], seq_col="seq",
-            store_format="manifest", store_buckets=4,
-            store_partition_col="day")
+            store_buckets=4, store_partition_col="day")
         q.awaitTermination()
 
     drain()
@@ -462,13 +460,7 @@ def test_streaming_cdc_partitioned_store_converges_and_lookups(
             spark.readStream.schema(batch_a.schema)
             .format("parquet").load(src),
             store, key_cols=["id"], seq_col="seq",
-            store_format="manifest", store_partition_col="id")
-    with pytest.raises(ValueError, match="store_format='manifest'"):
-        foreach_batch_cdc_apply(
-            spark.readStream.schema(batch_a.schema)
-            .format("parquet").load(src),
-            store, key_cols=["id"], seq_col="seq",
-            store_partition_col="day")
+            store_partition_col="id")
 
 
 def test_streaming_keep_best_partitioned_equals_batch(spark, tmp_path):
@@ -507,8 +499,7 @@ def test_streaming_keep_best_partitioned_equals_batch(spark, tmp_path):
         q = foreach_batch_dedup_keep_best(
             stream, store, key_cols=["fp"],
             order_cols=[F.col("score")],
-            store_format="manifest", store_buckets=4,
-            store_partition_col="src")
+            store_buckets=4, store_partition_col="src")
         q.awaitTermination()
 
     drain()

@@ -109,6 +109,7 @@ def test_streaming_scd2_merge_equals_batch_build(spark, tables, tmp_path):
     no-op."""
     from wrangle_pypes_spark.streaming import foreach_batch_scd2_merge
     from wrangle_pypes_spark.operators.scd import scd2_merge
+    from wrangle_pypes_spark.sources.manifest import manifest_read
 
     ev = tables["events"].select("user_id", "event_type", "ts")
     # deterministic midpoint: median row's ts via sort+limit
@@ -144,7 +145,7 @@ def test_streaming_scd2_merge_equals_batch_build(spark, tables, tmp_path):
         return sorted((r.user_id, r.valid_from, r.event_type,
                        r.valid_to, r.is_current) for r in df.collect())
 
-    got = spark.read.parquet(dim_path)
+    got = manifest_read(spark, dim_path)
     assert rows(got) == rows(want)
     # replaying the second half (checkpoint recovery) is a no-op
     replay = scd2_merge(got, ev.filter(F.col("ts") > mid_ts),
@@ -161,9 +162,10 @@ def test_scd2_rebuild_store_heals_late_observation(spark, tmp_path):
     scd2_rebuild_store over the raw log must heal exactly that key."""
     import datetime as dt
 
-    from wrangle_pypes_spark.operators.scd import (
-        scd2_build, scd2_merge, scd2_rebuild_store)
-    from wrangle_pypes_spark.sources.sinks import upsert_parquet
+    from wrangle_pypes_spark.operators.scd import (scd2_build,
+                                                   scd2_rebuild_store)
+    from wrangle_pypes_spark.sources.manifest import manifest_read
+    from wrangle_pypes_spark.streaming import foreach_batch_scd2_merge
 
     def t(day):
         return dt.datetime(2024, 1, day)
@@ -182,28 +184,27 @@ def test_scd2_rebuild_store_heals_late_observation(spark, tmp_path):
 
     # streaming arrival violating the per-key order contract: batch 1
     # carries (t1,A) and (t9,A) — they collapse to ONE interval — then
-    # batch 2 delivers the t5 straggler (same merge calls the
-    # foreachBatch maintainer makes)
+    # batch 2 delivers the t5 straggler, each drained through the
+    # foreachBatch maintainer
     dim_path = str(tmp_path / "dim")
-    upsert_parquet(scd2_build(on_time, key_cols=["user_id"], ts_col="ts",
-                              attr_cols=["status"]),
-                   dim_path, ["user_id"], dedup_incoming=False)
-    stored = spark.read.parquet(dim_path)
-    upsert_parquet(scd2_merge(stored, straggler, key_cols=["user_id"],
-                              ts_col="ts", attr_cols=["status"],
-                              include_untouched=False),
-                   dim_path, ["user_id"], dedup_incoming=False)
+    for i, batch in enumerate((on_time, straggler)):
+        src = str(tmp_path / f"src{i}")
+        batch.coalesce(1).write.parquet(src)
+        foreach_batch_scd2_merge(
+            spark.readStream.schema(batch.schema).parquet(src), dim_path,
+            key_cols=["user_id"], ts_col="ts",
+            attr_cols=["status"]).awaitTermination()
 
     want = scd2_build(all_obs, key_cols=["user_id"], ts_col="ts",
                       attr_cols=["status"])
     # the streaming path lost the A@t9 resurrection — store is WRONG
-    assert rows(spark.read.parquet(dim_path)) != rows(want)
+    assert rows(manifest_read(spark, dim_path)) != rows(want)
 
     # heal ONLY the late key from the raw log
     late_keys = spark.createDataFrame([(1,)], "user_id int")
     scd2_rebuild_store(all_obs, dim_path, key_cols=["user_id"],
                        ts_col="ts", attr_cols=["status"], keys=late_keys)
-    assert rows(spark.read.parquet(dim_path)) == rows(want)
+    assert rows(manifest_read(spark, dim_path)) == rows(want)
 
 
 def test_scd2_rebuild_store_carries_tiebreak_column(spark, tmp_path):
@@ -214,6 +215,7 @@ def test_scd2_rebuild_store_carries_tiebreak_column(spark, tmp_path):
 
     from wrangle_pypes_spark.operators.scd import (scd2_build,
                                                    scd2_rebuild_store)
+    from wrangle_pypes_spark.sources.manifest import manifest_read
 
     t = dt.datetime(2024, 1, 1)
     log = spark.createDataFrame(
@@ -222,7 +224,7 @@ def test_scd2_rebuild_store_carries_tiebreak_column(spark, tmp_path):
     dim_path = str(tmp_path / "dim")
     scd2_rebuild_store(log, dim_path, key_cols=["user_id"], ts_col="ts",
                        attr_cols=["status"], tiebreak_cols=["seq"])
-    got = spark.read.parquet(dim_path).collect()
+    got = manifest_read(spark, dim_path).collect()
     want = scd2_build(log, key_cols=["user_id"], ts_col="ts",
                       attr_cols=["status"], tiebreak_cols=["seq"]).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
@@ -303,6 +305,7 @@ def test_cdc_vacuum_tombstone_retention(spark, tmp_path):
     young tombstones survive; a kept tombstone still blocks a late
     stale update from resurrecting the key."""
     from wrangle_pypes_spark.operators.cdc import cdc_vacuum
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import (foreach_batch_cdc_apply,
                                                read_cdc_store)
 
@@ -320,7 +323,7 @@ def test_cdc_vacuum_tombstone_retention(spark, tmp_path):
     # horizon 5: only key 2's tombstone (seq 3) is past retention
     assert cdc_vacuum(spark, store, min_seq=5) == 1
     raw = {r.id: (r._cdc_seq, r._cdc_deleted)
-           for r in spark.read.parquet(store).collect()}
+           for r in manifest_read(spark, store).collect()}
     assert set(raw) == {1, 3}
     assert raw[3] == (9, True)  # young tombstone kept
     assert cdc_vacuum(spark, store, min_seq=5) == 0  # idempotent

@@ -461,11 +461,12 @@ def test_multimodal_resize_and_frame_sample(spark, tables):
 
 
 def test_foreach_batch_get_or_create_upsert(spark, sf_dir, tables, tmp_path):
-    """Durable dim store: stream drains into a parquet dimension via
-    keyed upsert; replaying the stream is idempotent."""
+    """Durable dim store: stream drains into a manifest-store dimension
+    via keyed upsert; replaying the stream is idempotent."""
     from dataclasses import dataclass
 
     from wrangle_pypes_spark import Get, Pipeline
+    from wrangle_pypes_spark.sources.manifest import manifest_read
     from wrangle_pypes_spark.streaming import (
         foreach_batch_get_or_create_upsert)
 
@@ -481,12 +482,12 @@ def test_foreach_batch_get_or_create_upsert(spark, sf_dir, tables, tmp_path):
                                            ["user_id"])
     q.awaitTermination()
     n_users = tables["events"].select("user_id").distinct().count()
-    assert spark.read.parquet(dim_path).count() == n_users
+    assert manifest_read(spark, dim_path).count() == n_users
     # replay the whole stream (fresh checkpoint): dim unchanged
     q2 = foreach_batch_get_or_create_upsert(stream_events(spark, sf_dir),
                                             p, UserM, dim_path, ["user_id"])
     q2.awaitTermination()
-    back = spark.read.parquet(dim_path)
+    back = manifest_read(spark, dim_path)
     assert back.count() == n_users
     assert back.select("user_id").distinct().count() == n_users
 

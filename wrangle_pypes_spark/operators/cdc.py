@@ -128,59 +128,39 @@ def cdc_vacuum(spark, store_path: str, *, min_seq) -> int:
     the horizon is the caller's explicit statement, never a default.
     Live rows are untouched at any ``min_seq``.
 
-    Layout-aware: a swap store rewrites through the same backup-rename
-    swap as ``upsert_parquet`` (crash-recoverable, one FULL rewrite —
-    schedule like compaction); a MANIFEST store
-    (``store_format="manifest"``) sweeps by MERGING tombstone deletes
-    for exactly the dead keys, so only the buckets that held an
-    expired tombstone rewrite — O(touched buckets), the same cost
-    asymmetry that justified the manifest layout in the first place;
-    a PARTITIONED store sweeps each committed sub-store the same way
-    (partitions with no expired tombstone are untouched).  The
-    manifest sweep preserves the store's committed epoch (no data
-    ingested — same contract as ``manifest_rebucket``).
+    The sweep MERGES tombstone deletes for exactly the dead keys, so
+    only the manifest buckets that held an expired tombstone rewrite —
+    O(touched buckets), not a full rewrite; a PARTITIONED store sweeps
+    each committed sub-store the same way (partitions with no expired
+    tombstone are untouched).  The sweep preserves the store's
+    committed epoch (no data ingested — same contract as
+    ``manifest_rebucket``).  A path with nothing committed, or holding
+    a swap or full-snapshot store from an older layout, raises
+    ValueError.
     """
-    from ..sources.manifest import manifest_current
-    from ..sources.partitioned import _list_tokens, _recorded_pcol, _sub
-    from ..sources.sinks import recover_upsert_backup
-    from .. import fsutil
+    from ..sources.manifest import _refuse_retired_layout, manifest_current
+    from ..sources.partitioned import (_list_tokens, _publish_root_from_heads,
+                                       _recorded_pcol, _sub, root_current)
 
+    _refuse_retired_layout(store_path, "cdc_vacuum", spark=spark)
     if manifest_current(store_path, spark=spark) is not None:
         return _cdc_vacuum_manifest(spark, store_path, min_seq)
-    if _recorded_pcol(store_path, spark=spark) is not None:
-        from ..sources.partitioned import (_publish_root_from_heads,
-                                           root_current)
-        n = 0
-        for t in _list_tokens(store_path, spark=spark):
-            sub = _sub(store_path, t)
-            if manifest_current(sub, spark=spark) is not None:
-                n += _cdc_vacuum_manifest(spark, sub, min_seq)
-        if n:
-            # the sweep moved sub heads; readers resolve through the
-            # ROOT pointer, so publish one naming the swept versions
-            # (epoch preserved — no data ingested)
-            root = root_current(store_path, spark=spark)
-            _publish_root_from_heads(
-                store_path, root[1] if root is not None else -1,
-                spark=spark)
-        return n
-
-    recover_upsert_backup(store_path, spark=spark)
-    df = spark.read.parquet(store_path)
-    dead = F.col("_cdc_deleted") & (F.col("_cdc_seq") < F.lit(min_seq))
-    n_dead = df.filter(dead).count()
-    if n_dead == 0:
-        return 0
-    kept = df.filter(~dead).localCheckpoint(eager=True)
-    tmp = store_path.rstrip("/") + "._vacuum_tmp"
-    bak = store_path.rstrip("/") + "._upsert_bak"
-    fsutil.delete(tmp, spark=spark)
-    fsutil.delete(bak, spark=spark)
-    kept.write.mode("overwrite").parquet(tmp)
-    fsutil.rename(store_path, bak, spark=spark)
-    fsutil.rename(tmp, store_path, spark=spark)
-    fsutil.delete(bak, spark=spark)
-    return n_dead
+    if _recorded_pcol(store_path, spark=spark) is None:
+        raise ValueError(
+            f"cdc_vacuum: {store_path!r} holds no committed CDC store")
+    n = 0
+    for t in _list_tokens(store_path, spark=spark):
+        sub = _sub(store_path, t)
+        if manifest_current(sub, spark=spark) is not None:
+            n += _cdc_vacuum_manifest(spark, sub, min_seq)
+    if n:
+        # the sweep moved sub heads; readers resolve through the ROOT
+        # pointer, so publish one naming the swept versions (epoch
+        # preserved — no data ingested)
+        root = root_current(store_path, spark=spark)
+        _publish_root_from_heads(
+            store_path, root[1] if root is not None else -1, spark=spark)
+    return n
 
 
 def _cdc_vacuum_manifest(spark, store_path: str, min_seq) -> int:

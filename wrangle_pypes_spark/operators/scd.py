@@ -83,7 +83,7 @@ def scd2_merge(dim: DataFrame, updates: DataFrame, *,
     as observations at their ``valid_from`` and re-collapsed together
     with the new updates via :func:`scd2_build`.  Replaying the same
     batch is a no-op (identical observations collapse), so the merge is
-    batch-idempotent like ``sources.upsert_parquet``.
+    batch-idempotent.
 
     ``include_untouched=False`` returns ONLY the rebuilt versions of
     touched keys — the shape a keyed storage MERGE wants (replace the
@@ -126,14 +126,23 @@ def scd2_rebuild_store(raw_log: DataFrame, dim_path: str, *,
     ``keys`` scopes the heal: pass the late keys (any DataFrame with
     ``key_cols``) and only their log slices are re-collapsed and
     keyed-MERGEd into the store — at 100 TB you heal one straggler's
-    key, not a billion-key dimension.  ``keys=None`` rebuilds the whole
-    store (initial backfill / full audit).  Either way the store swap
-    goes through :func:`~wrangle_pypes_spark.sources.sinks.upsert_parquet`
-    (group-replace, crash-recoverable), and the result equals
-    ``scd2_build`` over the full log for every healed key.
+    key, not a billion-key dimension.  ``keys=None`` rebuilds every
+    key of the log (initial backfill / full audit).  Either way the
+    rebuilt version rows REPLACE the healed keys' groups through
+    ``sources.manifest.manifest_merge``: only the buckets those keys
+    hash into are rewritten, a crash before the pointer publish leaves
+    the old store, and the result equals ``scd2_build`` over the full
+    log for every healed key.  The store keeps its recorded bucket
+    count and committed epoch; a new store gets 64 buckets, the
+    streaming maintainer's default.  A path holding a swap or
+    full-snapshot store from an older layout raises ValueError.
     """
-    from ..sources.sinks import upsert_parquet
+    from ..sources.manifest import (_keyed_merge, _load_manifest,
+                                    _refuse_retired_layout,
+                                    manifest_current, manifest_merge)
 
+    spark = raw_log.sparkSession
+    _refuse_retired_layout(dim_path, "scd2_rebuild_store", spark=spark)
     kc = list(key_cols)
     log = raw_log
     if keys is not None:
@@ -149,8 +158,14 @@ def scd2_rebuild_store(raw_log: DataFrame, dim_path: str, *,
     rebuilt = scd2_build(log.select(*cols),
                          key_cols=kc, ts_col=ts_col,
                          attr_cols=list(attr_cols),
-                         tiebreak_cols=tiebreak_cols)
-    upsert_parquet(rebuilt, dim_path, kc, dedup_incoming=False)
+                         tiebreak_cols=tiebreak_cols) \
+        .localCheckpoint(eager=True)
+    cur = manifest_current(dim_path, spark=spark)
+    man = _load_manifest(dim_path, cur[0], spark=spark) if cur else None
+    manifest_merge(rebuilt, dim_path, kc,
+                   epoch_id=cur[1] if cur else -1,
+                   n_buckets=int(man["n_buckets"]) if man else 64,
+                   merge_fn=_keyed_merge(kc, lambda touched, new: new))
 
 
 def scd2_snapshot(dim: DataFrame, as_of, *,

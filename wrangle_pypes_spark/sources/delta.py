@@ -1130,8 +1130,10 @@ def _partition_expr(value: Optional[str], dtype: T.DataType):
 
 
 def _norm_uri(col):
-    """Canonicalize 'file:'-scheme URIs so log paths and Spark's
-    ``_metadata.file_path`` compare equal."""
+    """Canonicalize 'file:'-scheme URIs so Delta log paths, Iceberg
+    manifest and delete-file paths, and Spark's
+    ``_metadata.file_path`` compare equal ('file:/x', 'file:///x',
+    '/x' -> '/x')."""
     return F.regexp_replace(col, "^file:/+", "/")
 
 

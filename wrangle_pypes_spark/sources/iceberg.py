@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 from .. import fsutil
 from ..localdf import local_df
 from .avro_io import read_container_file
+from .delta import _norm_uri
 
 
 class IcebergProtocolError(NotImplementedError):
@@ -1183,13 +1184,6 @@ def read_iceberg(spark: SparkSession, table: str, *,
             if hi is not None:
                 out = out.filter(F.col(c) <= F.lit(hi))
     return out
-
-
-def _norm_uri(col):
-    """Canonicalize 'file:'-scheme URIs so manifest paths, delete-file
-    ``file_path`` values, and Spark's ``_metadata.file_path`` compare
-    equal ('file:/x', 'file:///x', '/x' -> '/x')."""
-    return F.regexp_replace(col, "^file:/+", "/")
 
 
 def _pos_delete_rows(spark, pos_files: list) -> Optional[DataFrame]:

@@ -208,6 +208,42 @@ def _load_manifest(path: str, version: int, spark=None) -> dict:
     return json.loads(txt)
 
 
+def _refuse_retired_layout(store_path: str, who: str, *, spark) -> None:
+    """Refuse a store path that holds a layout the streaming
+    maintainers no longer write: a swap store (an ``upsert_parquet``
+    table, with parquet files or Spark's ``_SUCCESS`` at its top
+    level, a ``<store>._epoch`` marker beside it, or only the
+    ``<store>._upsert_bak`` backup of a swap that crashed between its
+    two renames) or a full-snapshot store (``_ptr.json`` with
+    ``_vNNNNNN`` snapshot directories).  The maintainers commit
+    through the manifest store only; resuming on either layout would
+    start a fresh manifest store beside the old state and silently
+    drop it.  A crashed first manifest commit (``data/`` orphans, no
+    ``_ptr.json``) is a manifest store and resumes."""
+    names = fsutil.list_dir(store_path, spark=spark)
+    base = store_path.rstrip("/")
+    if (fsutil.read_text(base + "._epoch", spark=spark) is not None
+            or any(n.endswith(".parquet") or n == "_SUCCESS"
+                   for n in names)):
+        layout = ("a swap store (an upsert_parquet table or its "
+                  "._epoch marker)")
+    elif fsutil.dir_exists(base + "._upsert_bak", spark=spark):
+        layout = ("a swap store interrupted mid-swap (only its "
+                  "._upsert_bak backup)")
+    elif _PTR in names and any(re.fullmatch(r"_v\d{6}", n)
+                               for n in names):
+        layout = "a full-snapshot store (_ptr.json + _vNNNNNN dirs)"
+    else:
+        return
+    raise ValueError(
+        f"{who}: {store_path!r} holds {layout}, a layout this "
+        "maintainer no longer writes — it commits to a manifest store "
+        "(sources.manifest) only, and resuming here would start a new "
+        "store beside the old state and silently drop it. Rebuild the "
+        "state into a manifest store at a fresh path (or delete the "
+        "old one) before resuming.")
+
+
 def manifest_rollback(path: str, version: int, spark=None) -> None:
     """Swing the pointer BACK to an earlier retained ``version`` (its
     recorded epoch comes back with it — each version's manifest pins
@@ -612,6 +648,36 @@ def manifest_merge(updates: DataFrame, path: str,
         epoch_id=epoch_id, schema_json=schema_json,
         expected_version=cur[0] if cur is not None else None,
         rows_written=rows_written)
+
+
+def _keyed_merge(keys: Sequence[str],
+                 combine: Callable[[DataFrame, DataFrame], DataFrame], *,
+                 first: Callable[[DataFrame], DataFrame] = lambda b: b,
+                 align: bool = False,
+                 allow_missing: bool = False):
+    """The ``merge_fn`` of a store whose state merges key by key.
+    ``stored`` (every row of the touched buckets) splits on a
+    broadcast of the batch's keys: the TOUCHED rows go to
+    ``combine(touched, batch)``, which returns the merged rows of the
+    batch's keys, and the CARRIED rows (same-bucket keys the batch did
+    not see) pass through verbatim.  ``first(batch)`` is the content
+    of the first commit.  ``align`` first casts the stored rows to the
+    batch's column order and types; ``allow_missing`` null-fills the
+    side of the final union that lacks a column (additive schema
+    evolution)."""
+    def merge_fn(stored: Optional[DataFrame],
+                 batch: DataFrame) -> DataFrame:
+        if stored is None:
+            return first(batch)
+        if align:
+            stored = stored.select(*[F.col(f.name).cast(f.dataType)
+                                     for f in batch.schema.fields])
+        bkeys = F.broadcast(batch.select(*keys).distinct())
+        touched = stored.join(bkeys, keys, "left_semi")
+        carried = stored.join(bkeys, keys, "left_anti")
+        return combine(touched, batch).unionByName(
+            carried, allowMissingColumns=allow_missing)
+    return merge_fn
 
 
 def _spark_write(spark, staging: str, out: DataFrame,

@@ -226,10 +226,9 @@ def recover_upsert_backup(path: str, spark=None) -> bool:
     ``<path>._upsert_bak`` exists and IS the table — restore it.
 
     Every reader that decides "does this store exist yet?" with a bare
-    existence probe must call this FIRST (the streaming foreachBatch
-    maintainers do), or a crash window makes it bootstrap from scratch
-    and silently discard the accumulated store.  Returns True when a
-    table directory exists after the check.
+    existence probe must call this FIRST, or a crash window makes it
+    bootstrap from scratch and silently discard the accumulated store.
+    Returns True when a table directory exists after the check.
 
     Paths with a non-local scheme (hdfs://, s3a://, ...) route through
     the Hadoop FileSystem API and require ``spark``; see

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..localdf import local_df
+from ..sources.manifest import _keyed_merge, _refuse_retired_layout
 
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str,
@@ -204,39 +205,17 @@ def stream_static_enrich(stream: DataFrame, dim: DataFrame,
                        how=how)
 
 
-def _refuse_retired_layout(store_path: str, who: str, *, spark) -> None:
-    """Refuse a store path that holds a layout the rollup, Bloom and
-    CMS maintainers no longer write: a swap store (an
-    ``upsert_parquet`` table, with parquet files or Spark's
-    ``_SUCCESS`` at its top level, or a ``<store>._epoch`` marker
-    beside it) or a full-snapshot store (``_ptr.json`` with
-    ``_vNNNNNN`` snapshot directories).  These maintainers commit
-    through the manifest store only; resuming on either layout would
-    start a fresh manifest store beside the old state and silently
-    drop it.  A crashed first manifest commit (``data/`` orphans, no
-    ``_ptr.json``) is a manifest store and resumes."""
-    import re
-
-    from .. import fsutil
-
-    names = fsutil.list_dir(store_path, spark=spark)
-    if (fsutil.read_text(store_path.rstrip("/") + "._epoch",
-                         spark=spark) is not None
-            or any(n.endswith(".parquet") or n == "_SUCCESS"
-                   for n in names)):
-        layout = "a swap store (upsert_parquet table + ._epoch marker)"
-    elif "_ptr.json" in names and any(re.fullmatch(r"_v\d{6}", n)
-                                      for n in names):
-        layout = "a full-snapshot store (_ptr.json + _vNNNNNN dirs)"
-    else:
-        return
-    raise ValueError(
-        f"{who}: {store_path!r} holds {layout}, a layout this "
-        "maintainer no longer writes — it commits to a manifest store "
-        "(sources.manifest) only, and resuming here would start a new "
-        "store beside the old state and silently drop it. Rebuild the "
-        "state into a manifest store at a fresh path (or delete the "
-        "old one) before resuming.")
+def _start_foreach_batch(stream_df: DataFrame, batch_fn,
+                         checkpoint: Optional[str]):
+    """Start ``batch_fn`` as the ``foreachBatch`` sink of ``stream_df``,
+    draining what is available now (``trigger(availableNow=True)``),
+    with ``checkpoint`` as the query's checkpoint location if given;
+    returns the started query."""
+    writer = stream_df.writeStream.foreachBatch(batch_fn) \
+        .trigger(availableNow=True)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
 
 
 def _read_state(spark, store_path: str) -> Optional[DataFrame]:
@@ -347,6 +326,13 @@ def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
         cur = manifest_current(store_path, spark=spark)
         return cur[1] if cur is not None else -1
 
+    # the stored rows are pinned to the batch state's column order and
+    # types for the joins and rollup_merge's unionByName
+    _merge = _keyed_merge(
+        keys, lambda touched, batch: rollup_merge(
+            touched, batch, group_cols=keys, metrics=metrics),
+        align=True)
+
     if (checkpoint is None
             and _committed_epoch(session) >= 0):
         warnings.warn(
@@ -364,27 +350,6 @@ def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
             return  # checkpoint replay of an already-merged batch
         batch_state = rollup_build(batch_df, group_cols=keys,
                                    metrics=metrics)
-
-        def _merge(stored: Optional[DataFrame],
-                   batch: DataFrame) -> DataFrame:
-            # ``stored`` is every row of the TOUCHED buckets —
-            # including same-bucket groups this batch didn't see;
-            # merge the touched groups, carry the rest verbatim
-            # (the merge_fn return value replaces those buckets)
-            if stored is None:
-                return batch
-            # pin the stored rows to batch_state's exact column order
-            # and types for the semi/anti joins and rollup_merge's
-            # unionByName
-            aligned = stored.select(*[
-                F.col(f.name).cast(f.dataType)
-                for f in batch_state.schema.fields])
-            bkeys = F.broadcast(batch.select(*keys).distinct())
-            touched = aligned.join(bkeys, keys, "left_semi")
-            carried = aligned.join(bkeys, keys, "left_anti")
-            return rollup_merge(touched, batch, group_cols=keys,
-                                metrics=metrics).unionByName(carried)
-
         if pcol is not None:
             from ..sources.partitioned import pmanifest_merge
             pmanifest_merge(
@@ -397,11 +362,7 @@ def foreach_batch_rollup_upsert(stream_df: DataFrame, store_path: str, *,
                            epoch_id=epoch_id, merge_fn=_merge,
                            n_buckets=store_buckets)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_scd2_merge(stream_df: DataFrame, dim_path: str, *,
@@ -409,15 +370,15 @@ def foreach_batch_scd2_merge(stream_df: DataFrame, dim_path: str, *,
                              attr_cols: Sequence[str],
                              tiebreak_cols: Sequence[str] = (),
                              checkpoint: Optional[str] = None,
-                             store_format: str = "swap",
                              store_buckets: int = 64):
     """Durable streaming SCD2 maintenance: each micro-batch of attribute
     observations re-collapses the version history of the keys it
-    touches and keyed-MERGEs them into a parquet dimension — untouched
-    keys' history is never re-COLLAPSED (the merge computation is
-    touched-keys-only; the parquet table swap still rewrites the file
-    set, as any non-partitioned parquet upsert must — partition or use
-    a table format when the dimension is huge).
+    touches and keyed-MERGEs them into a manifest store
+    (``sources.manifest``, hash-bucketed by ``key_cols`` into
+    ``store_buckets``).  A key's whole version history hashes to one
+    bucket, so each batch rewrites only the buckets its keys touch;
+    untouched keys' history is never re-collapsed.  Read the dimension
+    with ``sources.manifest.manifest_read``.
 
     Validity intervals derive from the DATA's ``ts_col`` (never wall
     clock).  Contract: a key's observations must arrive in
@@ -431,91 +392,73 @@ def foreach_batch_scd2_merge(stream_df: DataFrame, dim_path: str, *,
     the late keys).  Under that contract the drained store equals
     ``scd2_build`` over all rows regardless of batch boundaries, and
     replaying a batch after checkpoint recovery is a no-op (both pinned
-    in tests/test_scd.py).  Completes the durable-streaming trio:
-    ``foreach_batch_get_or_create_upsert`` (dims),
+    in tests/test_scd.py), so no epoch guard is needed.  A path
+    holding a swap or full-snapshot store from an older layout raises
+    ValueError instead of resuming.  Completes the durable-streaming
+    trio: ``foreach_batch_get_or_create_upsert`` (dims),
     ``foreach_batch_rollup_upsert`` (aggregates), this (history).
-
-    ``store_format="manifest"`` swaps the parquet-table rewrite for
-    the bucketed copy-on-write manifest layout (``sources.manifest``,
-    hash-bucketed by ``key_cols`` into ``store_buckets``): a key's
-    whole version history hashes to one bucket, so each batch rewrites
-    only the buckets its keys touch — the data-sized-dimension path.
-    Read such a dimension with ``sources.manifest.manifest_read``.
     """
     from ..operators.scd import scd2_build, scd2_merge
     from ..sources.manifest import manifest_merge
-    from ..sources.sinks import recover_upsert_backup, upsert_parquet
 
-    if store_format not in ("swap", "manifest"):
-        raise ValueError(f"unknown store_format {store_format!r} "
-                         "(expected 'swap' or 'manifest')")
-    keys = list(key_cols)
+    keys, attrs, ties = list(key_cols), list(attr_cols), list(tiebreak_cols)
+    _refuse_retired_layout(dim_path, "foreach_batch_scd2_merge",
+                           spark=stream_df.sparkSession)
+    # re-collapse the stored versions of the batch's keys with its
+    # observations; the version rows replace those keys' groups
+    _merge = _keyed_merge(
+        keys,
+        lambda touched, obs: scd2_merge(
+            touched, obs, key_cols=keys, ts_col=ts_col, attr_cols=attrs,
+            tiebreak_cols=ties, include_untouched=False),
+        first=lambda obs: scd2_build(
+            obs, key_cols=keys, ts_col=ts_col, attr_cols=attrs,
+            tiebreak_cols=ties))
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        obs = batch_df.select(*keys, *attr_cols, ts_col)
-        if store_format == "manifest":
-            def _merge(stored: Optional[DataFrame],
-                       obs_batch: DataFrame) -> DataFrame:
-                # stored = every version row of the touched buckets;
-                # re-collapse only the batch's keys, carry the rest
-                if stored is None:
-                    return scd2_build(obs_batch, key_cols=keys,
-                                      ts_col=ts_col,
-                                      attr_cols=list(attr_cols),
-                                      tiebreak_cols=list(tiebreak_cols))
-                bkeys = F.broadcast(obs_batch.select(*keys).distinct())
-                touched = stored.join(bkeys, keys, "left_semi")
-                carried = stored.join(bkeys, keys, "left_anti")
-                rebuilt = scd2_merge(touched, obs_batch, key_cols=keys,
-                                     ts_col=ts_col,
-                                     attr_cols=list(attr_cols),
-                                     tiebreak_cols=list(tiebreak_cols),
-                                     include_untouched=False)
-                return rebuilt.unionByName(carried)
+        manifest_merge(batch_df.select(*keys, *attrs, ts_col), dim_path,
+                       keys, epoch_id=epoch_id, merge_fn=_merge,
+                       n_buckets=store_buckets)
 
-            manifest_merge(obs, dim_path, keys, epoch_id=epoch_id,
-                           merge_fn=_merge, n_buckets=store_buckets)
-            return
-        if recover_upsert_backup(dim_path, spark=spark):
-            dim = spark.read.parquet(dim_path)
-            rebuilt = scd2_merge(dim, obs, key_cols=keys, ts_col=ts_col,
-                                 attr_cols=list(attr_cols),
-                                 tiebreak_cols=list(tiebreak_cols),
-                                 include_untouched=False)
-        else:
-            rebuilt = scd2_build(obs, key_cols=keys, ts_col=ts_col,
-                                 attr_cols=list(attr_cols),
-                                 tiebreak_cols=list(tiebreak_cols))
-        # materialize before the store rewrite (lineage reads the store)
-        rebuilt = rebuilt.localCheckpoint(eager=True)
-        # version rows share the dimension key: replace whole key groups
-        upsert_parquet(rebuilt, dim_path, keys, dedup_incoming=False)
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+
+def _merge_idempotent(batch: DataFrame, store_path: str,
+                      keys: Sequence[str], epoch_id: int, merge_fn, *,
+                      n_buckets: int, partition_col: Optional[str]):
+    """Commit an idempotent keyed merge to a manifest store, or with
+    ``partition_col`` to a partitioned one.  There the merge RE-APPLIES
+    a replayed batch instead of skipping it (``guard_epochs=False``):
+    with the guard on, a reused batch id would silently drop a
+    genuinely new batch."""
+    from ..sources.manifest import manifest_merge
+    from ..sources.partitioned import pmanifest_merge
+
+    if partition_col is None:
+        manifest_merge(batch, store_path, keys, epoch_id=epoch_id,
+                       merge_fn=merge_fn, n_buckets=n_buckets)
+    else:
+        pmanifest_merge(batch, store_path, partition_col, keys,
+                        epoch_id=epoch_id, merge_fn=merge_fn,
+                        n_buckets=n_buckets, guard_epochs=False)
 
 
 def foreach_batch_dedup_keep_best(stream_df: DataFrame, store_path: str, *,
                                   key_cols: Sequence[str],
                                   order_cols: Sequence,
                                   checkpoint: Optional[str] = None,
-                                  store_format: str = "swap",
                                   store_buckets: int = 64,
                                   store_partition_col: Optional[str]
                                   = None):
-    """Durable streaming corpus dedup: maintain a parquet store holding,
-    for every content fingerprint (``key_cols``) ever seen, the single
-    BEST row — max by ``order_cols`` (include a unique tiebreak, e.g.
+    """Durable streaming corpus dedup: maintain a manifest store
+    (``sources.manifest``, hash-bucketed by ``key_cols`` into
+    ``store_buckets``) holding, for every content fingerprint
+    (``key_cols``) ever seen, the single BEST row — max by
+    ``order_cols`` (include a unique tiebreak, e.g.
     ``[F.col("n_chars"), -F.col("doc_id")]`` for keep-longest).  The
     ingest-time twin of ``operators.dedup.dedup_keep_best``, for
-    corpora that arrive incrementally.  ``store_format="manifest"``
-    gives the store the bucketed copy-on-write layout
-    (``sources.manifest``) — touched-buckets-only rewrites for
-    corpus-sized fingerprint stores; read it with ``manifest_read``.
+    corpora that arrive incrementally.  Read the store with
+    ``manifest_read``.
 
     Correctness without an epoch marker: ``max_by`` under a
     deterministic total order is associative, commutative, and
@@ -524,24 +467,25 @@ def foreach_batch_dedup_keep_best(stream_df: DataFrame, store_path: str, *,
     boundaries — and replaying a delivered batch (foreachBatch is
     at-least-once) merges to the identical store.  This is the same
     merge-shaped-state argument as the rollup maintainer, minus the
-    additivity hazard that forces its epoch guard.
+    additivity hazard that forces its epoch guard.  A path holding a
+    swap or full-snapshot store from an older layout raises ValueError
+    instead of resuming.
 
     Per batch: one map-side-partial ``max_by`` over the batch, a
     broadcast semi-join pulling ONLY the touched fingerprints from the
-    store, one merge aggregate over (touched ∪ batch-best), and a keyed
-    upsert.  Steady-state cost scales with batch size, not store size
-    (modulo the parquet-swap rewrite — partition or use a table format
-    for huge stores, as with the other maintainers).
+    buckets the batch hashes into, one merge aggregate over
+    (touched ∪ batch-best), and a rewrite of those buckets alone.
+    Steady-state cost scales with batch size, not store size.
 
-    ``store_partition_col`` (manifest only) gives the fingerprint
-    store the partitioned layout (``sources.partitioned``) — one
-    sub-store per value of a payload column that is FUNCTIONALLY
-    DEPENDENT on the fingerprint (source id, shard family): reads
-    prune whole partitions and serving GETs double-prune.  A
-    fingerprint whose partition value varied across rows would leave
-    a duplicate live in the other partition, so the dependence is a
-    stated contract (same as the CDC maintainer's).  Replay stays
-    idempotent-not-skipped (``guard_epochs=False``).
+    ``store_partition_col`` gives the fingerprint store the
+    partitioned layout (``sources.partitioned``) — one sub-store per
+    value of a payload column that is FUNCTIONALLY DEPENDENT on the
+    fingerprint (source id, shard family): reads prune whole
+    partitions and serving GETs double-prune.  A fingerprint whose
+    partition value varied across rows would leave a duplicate live
+    in the other partition, so the dependence is a stated contract
+    (same as the CDC maintainer's).  Replay stays idempotent-not-
+    skipped (``guard_epochs=False``).
 
     No ``evolve_schema`` here, deliberately: keep-best's correctness
     rests on ONE deterministic total order over every row ever seen,
@@ -552,66 +496,25 @@ def foreach_batch_dedup_keep_best(stream_df: DataFrame, store_path: str, *,
     column, where last-writer-wins is well-defined across generations.
     """
     from ..operators.dedup import dedup_keep_best
-    from ..sources.manifest import manifest_merge
-    from ..sources.sinks import recover_upsert_backup, upsert_parquet
 
-    if store_format not in ("swap", "manifest"):
-        raise ValueError(f"unknown store_format {store_format!r} "
-                         "(expected 'swap' or 'manifest')")
-    if store_partition_col is not None and store_format != "manifest":
-        raise ValueError(
-            "store_partition_col requires store_format='manifest' — "
-            "the partitioned layout is built over manifest sub-stores")
     keys = list(key_cols)
     if store_partition_col in keys:
         raise ValueError(
             f"store_partition_col {store_partition_col!r} must be a "
             "payload column, not a key column")
     order = list(order_cols)
+    _refuse_retired_layout(store_path, "foreach_batch_dedup_keep_best",
+                           spark=stream_df.sparkSession)
+    _merge = _keyed_merge(keys, lambda touched, best: dedup_keep_best(
+        touched.unionByName(best), keys, order))
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        best = dedup_keep_best(batch_df, keys, order)
-        if store_format == "manifest":
-            def _merge(stored, batch_best):
-                # same max_by idempotent-merge argument; carry the
-                # touched buckets' other fingerprints verbatim
-                if stored is None:
-                    return batch_best
-                bkeys = F.broadcast(batch_best.select(*keys).distinct())
-                touched = stored.join(bkeys, keys, "left_semi")
-                carried = stored.join(bkeys, keys, "left_anti")
-                return dedup_keep_best(
-                    touched.unionByName(batch_best), keys, order) \
-                    .unionByName(carried)
+        _merge_idempotent(dedup_keep_best(batch_df, keys, order),
+                          store_path, keys, epoch_id, _merge,
+                          n_buckets=store_buckets,
+                          partition_col=store_partition_col)
 
-            if store_partition_col is not None:
-                from ..sources.partitioned import pmanifest_merge
-                pmanifest_merge(best, store_path, store_partition_col,
-                                keys, epoch_id=epoch_id,
-                                merge_fn=_merge,
-                                n_buckets=store_buckets,
-                                guard_epochs=False)
-            else:
-                manifest_merge(best, store_path, keys,
-                               epoch_id=epoch_id, merge_fn=_merge,
-                               n_buckets=store_buckets)
-            return
-        if recover_upsert_backup(store_path, spark=spark):
-            stored = spark.read.parquet(store_path)
-            touched = stored.join(
-                F.broadcast(best.select(*keys).distinct()),
-                keys, "left_semi")
-            best = dedup_keep_best(
-                touched.unionByName(best), keys, order)
-        best = best.localCheckpoint(eager=True)
-        upsert_parquet(best, store_path, keys, dedup_incoming=False)
-
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_cdc_apply(stream_df: DataFrame, store_path: str, *,
@@ -620,7 +523,6 @@ def foreach_batch_cdc_apply(stream_df: DataFrame, store_path: str, *,
                             update_op: str = "U", delete_op: str = "D",
                             tiebreak_cols: Sequence[str] = (),
                             checkpoint: Optional[str] = None,
-                            store_format: str = "swap",
                             store_buckets: int = 64,
                             store_partition_col: Optional[str] = None,
                             evolve_schema: bool = False,
@@ -653,26 +555,22 @@ def foreach_batch_cdc_apply(stream_df: DataFrame, store_path: str, *,
     and the rest of the batch applies normally (quarantine appends
     are at-least-once; the store merge stays exactly-once).
 
-    Per batch: one map-side-partial ``max_by`` over the batch, a
-    broadcast semi-join pulling only touched keys from the store, one
-    merge aggregate, one keyed upsert.  Steady-state COMPUTE scales
-    with batch size, not store size; with the default
-    ``store_format="swap"`` the parquet table swap still REWRITES the
-    whole file set, so for a data-sized store pass
-    ``store_format="manifest"``: the store becomes a bucketed
-    copy-on-write manifest table (``sources.manifest``, hash-bucketed
-    by ``key_cols`` into ``store_buckets``) and each batch rewrites
-    only the buckets its keys hash into — write cost O(touched
-    buckets), the file-level-delta behaviour of a table-format MERGE.
-    Tombstones accumulate by design — at 100 TB give deletes a
-    retention sweep (filter tombstones older than the transport's max
-    disorder).
+    The store is a bucketed copy-on-write manifest table
+    (``sources.manifest``, hash-bucketed by ``key_cols`` into
+    ``store_buckets``).  Per batch: one map-side-partial ``max_by``
+    over the batch, a broadcast semi-join pulling only touched keys
+    from the buckets the batch hashes into, one merge aggregate, and a
+    rewrite of those buckets alone — write cost O(touched buckets),
+    the file-level-delta behaviour of a table-format MERGE.  A path
+    holding a swap or full-snapshot store from an older layout raises
+    ValueError instead of resuming.  Tombstones accumulate by design —
+    give deletes a retention sweep (``operators.cdc.cdc_vacuum``).
 
-    ``store_partition_col`` (manifest store only) lays the base table
-    out as a PARTITIONED manifest store (``sources.partitioned``):
-    one hash-bucketed sub-store per value of the named payload column
-    — the Delta/Iceberg partitioned-MERGE shape.  Reads then prune
-    whole partitions (``pmanifest_read(lo=, hi=)``) and serving GETs
+    ``store_partition_col`` lays the base table out as a PARTITIONED
+    manifest store (``sources.partitioned``): one hash-bucketed
+    sub-store per value of the named payload column — the
+    Delta/Iceberg partitioned-MERGE shape.  Reads then prune whole
+    partitions (``pmanifest_read(lo=, hi=)``) and serving GETs
     double-prune (``pmanifest_lookup``).  The column must be
     FUNCTIONALLY DEPENDENT on the key (creation date, source id — a
     key whose partition value changed across images would leave its
@@ -681,36 +579,22 @@ def foreach_batch_cdc_apply(stream_df: DataFrame, store_path: str, *,
     as table formats state it), non-null, and low-cardinality.  The
     max_by merge stays idempotent per partition, so replay converges
     without epoch skipping (``guard_epochs=False`` — a reused batch
-    id must re-APPLY, not skip, matching the swap path's contract).
+    id must re-APPLY, not skip).
 
-    ``evolve_schema=True`` (manifest store only) allows ADDITIVE
-    mid-stream schema evolution: when the upstream source starts
-    emitting a new payload column (schema registries version CDC
-    topics exactly this way), batches carrying it widen the store —
-    the merge null-fills the column on the stored side, the commit
-    records the widened schema in the manifest, and buckets not yet
-    rewritten null-fill it on read.  A LATE stale image without the
-    column that loses the max_by keeps the stored row (new column
-    intact); if it wins, the new column is honestly null for that
-    key — last-writer-wins applies to the whole image.  Off by
-    default: unannounced drift fails loudly at the union.
+    ``evolve_schema=True`` allows ADDITIVE mid-stream schema
+    evolution: when the upstream source starts emitting a new payload
+    column (schema registries version CDC topics exactly this way),
+    batches carrying it widen the store — the merge null-fills the
+    column on the stored side, the commit records the widened schema
+    in the manifest, and buckets not yet rewritten null-fill it on
+    read.  A LATE stale image without the column that loses the max_by
+    keeps the stored row (new column intact); if it wins, the new
+    column is honestly null for that key — last-writer-wins applies to
+    the whole image.  Off by default: unannounced drift fails loudly
+    at the union.
     """
     from ..operators.dedup import dedup_keep_best
-    from ..sources.manifest import manifest_merge
-    from ..sources.sinks import recover_upsert_backup, upsert_parquet
 
-    if store_format not in ("swap", "manifest"):
-        raise ValueError(f"unknown store_format {store_format!r} "
-                         "(expected 'swap' or 'manifest')")
-    if evolve_schema and store_format != "manifest":
-        raise ValueError(
-            "evolve_schema requires store_format='manifest' — only "
-            "the manifest store records an authoritative schema that "
-            "null-fills not-yet-rewritten buckets on read")
-    if store_partition_col is not None and store_format != "manifest":
-        raise ValueError(
-            "store_partition_col requires store_format='manifest' — "
-            "the partitioned layout is built over manifest sub-stores")
     keys = list(key_cols)
     if store_partition_col in (*keys, seq_col, op_col):
         raise ValueError(
@@ -718,9 +602,17 @@ def foreach_batch_cdc_apply(stream_df: DataFrame, store_path: str, *,
             "payload column, not a key/seq/op column")
     order = [F.col("_cdc_seq"),
              *[F.col(c) for c in tiebreak_cols]]
+    _refuse_retired_layout(store_path, "foreach_batch_cdc_apply",
+                           spark=stream_df.sparkSession)
+    # under evolve_schema both unions null-fill whichever side lacks a
+    # column (additive widening only)
+    _merge = _keyed_merge(
+        keys, lambda touched, best: dedup_keep_best(
+            touched.unionByName(best, allowMissingColumns=evolve_schema),
+            keys, order),
+        allow_missing=evolve_schema)
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         payload = [c for c in batch_df.columns
                    if c not in (*keys, seq_col, op_col)]
         if quarantine_path is not None:
@@ -763,92 +655,44 @@ def foreach_batch_cdc_apply(stream_df: DataFrame, store_path: str, *,
             *keys, *payload,
             F.col(seq_col).alias("_cdc_seq"),
             deleted.alias("_cdc_deleted"))
-        best = dedup_keep_best(img, keys, order)
-        if store_format == "manifest":
-            def _merge(stored: Optional[DataFrame],
-                       batch_best: DataFrame) -> DataFrame:
-                # stored = every row of the touched buckets; the
-                # max_by merge needs only the batch's keys — carry the
-                # rest verbatim.  Idempotent under replay even without
-                # the epoch guard (same argument as the swap path).
-                # Under evolve_schema the unions null-fill whichever
-                # side lacks a column (additive widening only).
-                if stored is None:
-                    return batch_best
-                bkeys = F.broadcast(batch_best.select(*keys).distinct())
-                touched = stored.join(bkeys, keys, "left_semi")
-                carried = stored.join(bkeys, keys, "left_anti")
-                return dedup_keep_best(
-                    touched.unionByName(
-                        batch_best, allowMissingColumns=evolve_schema),
-                    keys, order) \
-                    .unionByName(carried,
-                                 allowMissingColumns=evolve_schema)
+        _merge_idempotent(dedup_keep_best(img, keys, order), store_path,
+                          keys, epoch_id, _merge,
+                          n_buckets=store_buckets,
+                          partition_col=store_partition_col)
 
-            if store_partition_col is not None:
-                from ..sources.partitioned import pmanifest_merge
-                # max_by is idempotent, so replay must RE-APPLY (not
-                # skip): a reused batch id with the guard on would
-                # silently drop a genuinely-new batch
-                pmanifest_merge(best, store_path, store_partition_col,
-                                keys, epoch_id=epoch_id,
-                                merge_fn=_merge,
-                                n_buckets=store_buckets,
-                                guard_epochs=False)
-            else:
-                manifest_merge(best, store_path, keys,
-                               epoch_id=epoch_id, merge_fn=_merge,
-                               n_buckets=store_buckets)
-            return
-        if recover_upsert_backup(store_path, spark=spark):
-            stored = spark.read.parquet(store_path)
-            touched = stored.join(
-                F.broadcast(best.select(*keys).distinct()),
-                keys, "left_semi")
-            best = dedup_keep_best(
-                touched.unionByName(best), keys, order)
-        best = best.localCheckpoint(eager=True)
-        upsert_parquet(best, store_path, keys, dedup_incoming=False)
-
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def read_cdc_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Current state of a :func:`foreach_batch_cdc_apply` store:
-    tombstoned keys hidden, bookkeeping columns dropped.  Detects the
-    store's layout by its control files: a manifest store
-    (``store_format="manifest"``) resolves through its committed
-    manifest, a partitioned one (``store_partition_col``) through its
-    sub-stores' manifests, a swap store reads the parquet directory."""
-    from ..sources.manifest import manifest_current, manifest_read
+    tombstoned keys hidden, bookkeeping columns dropped.  A manifest
+    store resolves through its committed manifest, a partitioned one
+    (``store_partition_col``) through its sub-stores' manifests.  A
+    path with nothing committed, or holding a swap or full-snapshot
+    store from an older layout, raises ValueError."""
     from ..sources.partitioned import _recorded_pcol, pmanifest_read
 
-    if manifest_current(store_path, spark=spark) is not None:
-        df = manifest_read(spark, store_path)
-    elif _recorded_pcol(store_path, spark=spark) is not None:
+    _refuse_retired_layout(store_path, "read_cdc_store", spark=spark)
+    df = _read_state(spark, store_path)
+    if df is None and _recorded_pcol(store_path, spark=spark) is not None:
         df = pmanifest_read(spark, store_path)
-    else:
-        df = spark.read.parquet(store_path)
+    if df is None:
+        raise ValueError(
+            f"read_cdc_store: {store_path!r} holds no committed CDC "
+            "store")
     return df.filter(~F.col("_cdc_deleted")) \
              .drop("_cdc_seq", "_cdc_deleted")
 
 
 def cdc_store_lookup(spark: SparkSession, store_path: str,
                      keys: DataFrame) -> DataFrame:
-    """Serving-side keyed GET against a manifest-backed CDC store:
-    the CURRENT image of the probed keys only — tombstoned keys
-    absent, bookkeeping dropped — scanning only the buckets the
-    probe keys hash into (``sources.manifest.manifest_lookup``).
-    This is the online read path of the maintained base table:
-    O(probed buckets) whatever the store has grown to, vs
-    :func:`read_cdc_store`'s full-table view.  Requires
-    ``store_format="manifest"`` (a swap store has no bucket layout
-    to prune — read and filter the table instead).  A PARTITIONED
-    store (``store_partition_col``) double-prunes via
+    """Serving-side keyed GET against a CDC store: the CURRENT image
+    of the probed keys only — tombstoned keys absent, bookkeeping
+    dropped — scanning only the buckets the probe keys hash into
+    (``sources.manifest.manifest_lookup``).  This is the online read
+    path of the maintained base table: O(probed buckets) whatever the
+    store has grown to, vs :func:`read_cdc_store`'s full-table view.
+    A PARTITIONED store (``store_partition_col``) double-prunes via
     ``pmanifest_lookup``: include the partition column in ``keys``
     to open only the probes' own partitions."""
     from ..sources.manifest import manifest_current, manifest_lookup
@@ -861,8 +705,7 @@ def cdc_store_lookup(spark: SparkSession, store_path: str,
     else:
         raise ValueError(
             f"{store_path!r} is not a committed manifest store — "
-            "bucket-pruned lookups need store_format='manifest'; for "
-            "a swap store, filter read_cdc_store() instead")
+            "nothing was committed there by foreach_batch_cdc_apply")
     if df is None:
         raise ValueError(
             f"{store_path!r} has no committed partition for the "
@@ -913,29 +756,31 @@ def foreach_batch_get_or_create(stream_df: DataFrame, pipeline, model: type,
         dim_holder.setdefault("batches", []).append(
             (epoch_id, stats["n"]))
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_get_or_create_upsert(stream_df: DataFrame, pipeline,
                                        model: type, dim_path: str,
                                        match_targets: Sequence[str],
                                        checkpoint: Optional[str] = None):
-    """Durable streaming get_or_create: the dimension lives in a PARQUET
-    table maintained by key-based upsert — the steady-state topology
-    without a table-format dependency.
+    """Durable streaming get_or_create: the dimension lives in a
+    manifest store (``sources.manifest``, hash-bucketed by
+    ``match_targets`` into 64 buckets) maintained by keyed upsert — the
+    steady-state topology without a table-format dependency, and the
+    one keyed store that plays the reference's caller-supplied
+    ``lookup`` role.
 
-    Per micro-batch: read the current dimension, run the set-oriented
-    lookup join, and write ONLY the newly-created rows back via
-    ``sources.upsert_parquet`` (keyed MERGE; the touched-partition
-    rewrite keeps the write proportional to the batch, and the
-    batch-level dedup makes replays after a checkpoint recovery
-    idempotent).  First batch bootstraps the table from the model
-    schema.  Swap ``upsert_parquet`` for a Delta/Iceberg ``MERGE INTO``
-    for concurrent writers — same plan shape plus a transaction log.
+    Per micro-batch: read the committed dimension, run the
+    set-oriented lookup join, and merge ONLY the newly-created rows
+    back with ``manifest_merge`` (upsert mode: each commit rewrites
+    only the buckets the created keys hash into).  A replayed batch
+    after a checkpoint recovery finds its rows already created, so
+    the merge is idempotent.  The first batch bootstraps an empty
+    dimension from the model schema.  Read the dimension with
+    ``manifest_read``.  A path holding a swap or full-snapshot store
+    from an older layout raises ValueError instead of resuming.  Use
+    a Delta/Iceberg ``MERGE INTO`` for concurrent writers — same plan
+    shape plus a transaction log.
 
     The dimension's row count is probed at most ONCE (an exact count
     when resuming an existing store, zero on bootstrap) and then
@@ -943,21 +788,22 @@ def foreach_batch_get_or_create_upsert(stream_df: DataFrame, pipeline,
     decision inside ``get_or_create`` never re-runs a dim-sized job
     per micro-batch.
     """
-    from ..sources.sinks import recover_upsert_backup, upsert_parquet
+    from ..sources.manifest import manifest_merge
 
+    keys = list(match_targets)
+    _refuse_retired_layout(dim_path, "foreach_batch_get_or_create_upsert",
+                           spark=stream_df.sparkSession)
     state: dict = {"rows": None}
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        keys = list(match_targets)
-        if recover_upsert_backup(dim_path, spark=spark):
-            dim = spark.read.parquet(dim_path)
-            if state["rows"] is None:  # resume: one exact count, ever
-                state["rows"] = dim.count()
-        else:
+        dim = _read_state(spark, dim_path)
+        if dim is None:
             dim = local_df(
                 spark, [], pipeline.schema_for(model, batch_df))
             state["rows"] = 0
+        elif state["rows"] is None:  # resume: one exact count, ever
+            state["rows"] = dim.count()
         result, _ = pipeline.get_or_create(model, batch_df, dim,
                                            match_targets,
                                            dim_rows=state["rows"])
@@ -965,13 +811,9 @@ def foreach_batch_get_or_create_upsert(stream_df: DataFrame, pipeline,
                    .drop("created").dropDuplicates(keys)
                    .localCheckpoint(eager=True))
         state["rows"] += created.count()
-        upsert_parquet(created, dim_path, keys)
+        manifest_merge(created, dim_path, keys, epoch_id=epoch_id)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 class StreamMetricsCollector:
@@ -1253,11 +1095,7 @@ def foreach_batch_bloom_dedup(stream_df: DataFrame, store_path: str, *,
                     "Rebuild at a larger size with bloom_resize_store.",
                     stacklevel=2)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def bloom_store_occupancy(spark, store_path: str):
@@ -1440,11 +1278,7 @@ def foreach_batch_cms(stream_df: DataFrame, store_path: str, *,
                        value_cols=["cnt"], n_buckets=1,
                        epoch_id=epoch_id)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def cms_store(spark, store_path: str):
@@ -1554,11 +1388,7 @@ def foreach_batch_zonemap_append(stream_df: DataFrame, path: str, *,
             zonemap_compact(spark, path,
                             target_files=compact_target_files)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_delta_append(stream_df: DataFrame, table: str, *,
@@ -1586,11 +1416,7 @@ def foreach_batch_delta_append(stream_df: DataFrame, table: str, *,
                     partition_by=partition_by,
                     txn_app_id=app_id, txn_version=int(epoch_id))
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_text_index(stream_df: DataFrame, store_path: str, *,
@@ -1664,11 +1490,7 @@ def foreach_batch_text_index(stream_df: DataFrame, store_path: str, *,
                        merge_fn=partial(merge_postings,
                                         block_limit=block_limit))
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_vector_index(stream_df: DataFrame, store_path: str,
@@ -1728,11 +1550,7 @@ def foreach_batch_vector_index(stream_df: DataFrame, store_path: str,
                            pq_m=pq_m, centroids=centroids,
                            epoch_id=epoch_id)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_bks(stream_df: DataFrame, store_path: str, *,
@@ -1779,11 +1597,7 @@ def foreach_batch_bks(stream_df: DataFrame, store_path: str, *,
         manifest_merge(state, store_path, cols, epoch_id=epoch_id,
                        n_buckets=store_buckets, merge_fn=_merge)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_minhash_index(stream_df: DataFrame, index_path: str, *,
@@ -1879,11 +1693,7 @@ def foreach_batch_minhash_index(stream_df: DataFrame, index_path: str, *,
             _write_batch_partition(canon, pairs_path, tag)
         _write_batch_partition(sigs, index_path, tag)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
 
 
 def foreach_batch_embedding_index(stream_df: DataFrame, index_path: str,
@@ -2027,8 +1837,4 @@ def foreach_batch_embedding_index(stream_df: DataFrame, index_path: str,
             _write_batch_partition(pairs, pairs_path, tag)
         _write_batch_partition(base, index_path, tag)
 
-    writer = stream_df.writeStream.foreachBatch(_batch) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _batch, checkpoint)
