@@ -844,35 +844,14 @@ def test_driver_commit_builds_no_merge_plan(spark, tmp_path, monkeypatch):
                                n_buckets=4, **kw)
 
 
-def _py4j_calls(fn, tries=3):
-    """The fewest py4j round trips of ``tries`` calls of ``fn()``."""
-    from py4j import clientserver
-    real = clientserver.ClientServerConnection.send_command
-    n = [0]
-
-    def counting(self, command):
-        n[0] += 1
-        return real(self, command)
-
-    best = None
-    clientserver.ClientServerConnection.send_command = counting
-    try:
-        for _ in range(tries):
-            ready = fn()
-            n[0] = 0
-            ready()
-            best = n[0] if best is None else min(best, n[0])
-    finally:
-        clientserver.ClientServerConnection.send_command = real
-    return best
-
-
-def test_driver_commit_and_lookup_py4j_round_trips(spark, tmp_path):
+def test_driver_commit_and_lookup_py4j_round_trips(spark, tmp_path,
+                                                   py4j_calls):
     """A 24-row driver commit (a projection over ``local_df``, as
     ``Pipeline.create_multiple`` gives) and a 4-key lookup stay under
     a fixed number of py4j round trips.  Analysing a merge plan per
     commit and folding a probe projection per lookup would take ~110
-    and ~50."""
+    and ~50; building the lookup's result with
+    ``spark.createDataFrame`` instead of ``arrow_df`` would take 23."""
     path = str(tmp_path / "s")
     manifest_merge(spark.range(2000).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("c"),
@@ -893,11 +872,11 @@ def test_driver_commit_and_lookup_py4j_round_trips(spark, tmp_path):
                         "k bigint")
         return lambda: manifest_lookup(spark, path, keys)
 
-    commit_calls = _py4j_calls(commit)
-    lookup_calls = _py4j_calls(lookup)
+    commit_calls = py4j_calls(commit)
+    lookup_calls = py4j_calls(lookup)
     assert _man(path)["summary"]["writer"] == "driver"
-    assert commit_calls <= 40, commit_calls
-    assert lookup_calls <= 35, lookup_calls
+    assert commit_calls <= 25, commit_calls
+    assert lookup_calls <= 5, lookup_calls
 
 
 def test_lookup_reads_kept_rows_of_a_bare_local_df(spark, tmp_path,

@@ -94,7 +94,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import fsutil
-from ..localdf import _DRIVER_KEYS_MAX, local_df, local_rows
+from ..localdf import _DRIVER_KEYS_MAX, arrow_df, local_df, local_rows
 from . import xxhash64
 
 _PTR = "_ptr.json"
@@ -1019,8 +1019,8 @@ def _driver_read(spark: SparkSession, path: str, man: dict,
                               stored.schema.field(k).type)
                      for i, k in enumerate(kcols)], names=list(kcols))
     # nullable like the schema Spark's file reader reports
-    return spark.createDataFrame(
-        stored.join(want, list(kcols), join_type="left semi")
+    return arrow_df(
+        spark, stored.join(want, list(kcols), join_type="left semi")
         .drop_columns([_BKT]),
         T.StructType([T.StructField(f.name, f.dataType)
                       for f in schema.fields]))
@@ -1056,15 +1056,16 @@ def manifest_lookup(spark: SparkSession, path: str,
     store's gives its kept rows straight back (``local_rows``), with
     no projection to build or optimize; any key that converts goes
     through the one ``_as_type`` projection.  When, in addition, the
-    store is local, every
-    recorded column is flat (no struct, array or map) and the touched
-    files total at most ``_DRIVER_READ_MAX_BYTES`` (32 MB), the
-    lookup is served on the driver: pyarrow reads those files and the
-    result is a local relation, so neither the lookup nor the
-    caller's ``collect()`` runs a Spark job.  Otherwise it takes the
-    Spark path: one tiny job hashes the keys (skipped for
-    driver-resident keys), then one pruned scan and one broadcast
-    semi-join.
+    store is local, every recorded column is flat (no struct, array or
+    map) and the touched files total at most
+    ``_DRIVER_READ_MAX_BYTES`` (32 MB), the lookup is served on the
+    driver: pyarrow reads those files and ``arrow_df`` makes the
+    result a local relation, so neither the lookup nor the caller's
+    ``collect()`` runs a Spark job.  Such a lookup over a bare
+    ``local_df`` makes 2-3 py4j round trips in all, and reading its
+    result's ``.schema`` none.  Otherwise it takes the Spark path: one
+    tiny job hashes the keys (skipped for driver-resident keys), then
+    one pruned scan and one broadcast semi-join.
     """
     cur = manifest_current(path, spark=spark)
     if cur is None:

@@ -232,8 +232,7 @@ def _read_state(spark, store_path: str) -> Optional[DataFrame]:
     df = manifest_read(spark, store_path)
     if df is None:
         man = _load_manifest(store_path, cur[0], spark=spark)
-        df = spark.createDataFrame(
-            [], T.StructType.fromJson(man["schema"]))
+        df = local_df(spark, [], T.StructType.fromJson(man["schema"]))
     return df
 
 
@@ -1182,7 +1181,7 @@ def bloom_resize_store(spark, store_path: str, accepted_path: str, *,
     # one bucket even when no key was accepted, so the old family's
     # bits are always replaced; the merge drops it again (a bitmap
     # stores non-zero words only)
-    placeholder = spark.createDataFrame([(-1, 0)], bitmap.schema)
+    placeholder = local_df(spark, [(-1, 0)], bitmap.schema)
     version = manifest_merge(
         bitmap.unionByName(placeholder), store_path, ["word"],
         epoch_id=cur[1], n_buckets=1,
