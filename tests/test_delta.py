@@ -443,6 +443,28 @@ class TestHiveFastPath:
         assert out2.filter("p = '0'").count() \
             < out.filter("p = '0'").count() + 1
 
+    def test_mixed_depths_take_grouped_scan(self, spark, tbl):
+        """Converted files under <root>/old/p=*/ beside appended files
+        under <root>/p=*/: every path agrees with its log values, but
+        the two depths are two hive roots, so one basePath scan would
+        fail.  The read takes the grouped scan instead."""
+        from wrangle_pypes_spark.sources.delta import convert_to_delta
+        for p in (0, 1):
+            (spark.range(0, 4).select(F.col("id").alias("k"))
+             .coalesce(1).write.parquet(
+                 os.path.join(tbl, "old", f"p={p}")))
+        convert_to_delta(spark, tbl, partition_schema=T.StructType(
+            [T.StructField("p", T.LongType())]))
+        write_delta(spark.range(0, 2).select(
+            F.col("id").alias("k"), F.col("id").alias("p")), tbl,
+            mode="append", partition_by=["p"])
+        out = read_delta(spark, tbl)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Union" in plan
+        assert out.count() == 10
+        assert sorted((r["p"], r["k"]) for r in out.collect()) == sorted(
+            [(p, k) for p in (0, 1) for k in range(4)] + [(0, 0), (1, 1)])
+
 
 class TestTxnIdempotence:
     def test_txn_skips_replayed_version(self, spark, tbl):

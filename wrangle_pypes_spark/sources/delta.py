@@ -13,14 +13,18 @@ Spark DataFrame calls:
 
 - **Reader**: replay the log (latest checkpoint parquet + later JSON
   commits, or pure JSON), resolve the live file set, prune partitions
-  from log ``partitionValues`` BEFORE touching data, and read with the
-  native parquet scan.  ``metaData.schemaString`` is Spark's own JSON
-  schema format, so types round-trip exactly.  Time travel via
-  ``version=``.  **Deletion vectors** (the v3 ``deletionVectors``
-  reader feature) are fully supported: descriptors decode via the
-  pure-Python roaring codec in sources/dv.py and apply as a
-  position anti-join on ``_metadata.file_path``/``row_index`` —
-  the same shape the Iceberg reader uses for position deletes.
+  from log ``partitionValues`` BEFORE touching data, and hand the
+  file list to the format-neutral scan core (sources/tablescan.py:
+  snapshot cache, hive check, basePath or grouped scan, row address,
+  position-delete anti-join, exact ``where_range`` filter), which the
+  Iceberg reader shares.  This module keeps what is Delta's own: log
+  replay, checkpoints, and column mapping.  ``metaData.schemaString``
+  is Spark's own JSON schema format, so types round-trip exactly.
+  Time travel via ``version=``.  **Deletion vectors** (the v3
+  ``deletionVectors`` reader feature) are fully supported:
+  descriptors decode via the pure-Python roaring codec in
+  sources/dv.py inside executors, and their positions are
+  anti-joined away on the row address.
   **Column mapping** is supported in BOTH modes: name-mode data
   files carry physical column names — the scan reads the physical
   schema and renames (nested included) back to the logical view —
@@ -170,56 +174,19 @@ def _dv_tuple(dvd: Optional[dict]):
 # local metadata rows through Arrow, never pickled Python partitions
 # (see wrangle_pypes_spark.localdf for the numbers)
 from ..localdf import local_df as _local_df
+from . import tablescan
 
 
-# ---------------------------------------------------------------------------
 # snapshot cache: a committed (table, version) snapshot is IMMUTABLE
 # (the commit file's content never changes; vacuum/log-cleanup don't
 # alter live state), so resolved snapshots are safe to reuse across a
 # session.  This is what makes commit-heavy lifecycles cheap: a
 # write→checkpoint→read sequence resolves the post-commit snapshot
 # once instead of re-reading the checkpoint's singleton actions (a
-# Spark job) at every step.  Entries are keyed per SparkSession —
-# a cached snapshot's DataFrame plans die with their session.
-# ---------------------------------------------------------------------------
-
-from collections import OrderedDict as _OrderedDict
-
-_SNAPSHOT_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
-_SNAPSHOT_CACHE_MAX = 64
-
-
-def _cache_key(table: str, version: int) -> tuple:
-    return (fsutil._strip_file_scheme(table).rstrip("/"),
-            int(version))
-
-
-def _commit_fp(text: Optional[str]) -> Optional[str]:
-    """Content fingerprint of a version's own commit JSON — guards
-    the cache against a DIFFERENT table recreated at the same path
-    (same version number, different history)."""
-    if text is None:
-        return None
-    import hashlib
-    return hashlib.sha1(text.encode()).hexdigest()
-
-
-def _cache_get(spark, table: str, version: int,
-               fp: Optional[str]):
-    hit = _SNAPSHOT_CACHE.get(_cache_key(table, version))
-    if hit is None or hit[0] is not spark or hit[2] != fp:
-        return None
-    _SNAPSHOT_CACHE.move_to_end(_cache_key(table, version))
-    return hit[1]
-
-
-def _cache_put(spark, table: str, version: int, snap,
-               fp: Optional[str]) -> None:
-    key = _cache_key(table, version)
-    _SNAPSHOT_CACHE[key] = (spark, snap, fp)
-    _SNAPSHOT_CACHE.move_to_end(key)
-    while len(_SNAPSHOT_CACHE) > _SNAPSHOT_CACHE_MAX:
-        _SNAPSHOT_CACHE.popitem(last=False)
+# Spark job) at every step.  The fingerprint is the version's own
+# commit JSON, so a DIFFERENT table recreated at the same path (same
+# version number, different history) never hits.
+_SNAPSHOT_CACHE = tablescan.SnapshotCache()
 
 
 @dataclass
@@ -941,8 +908,8 @@ def delta_snapshot(spark: SparkSession, table: str, *,
     target_text = (fsutil.read_text(
         _log_path(table, commits[target]), spark)
         if target in commits else None)
-    cached = _cache_get(spark, table, target,
-                        _commit_fp(target_text))
+    cached = _SNAPSHOT_CACHE.get(spark, table, target,
+                                 tablescan.fingerprint(target_text))
     if cached is not None:
         return cached
 
@@ -992,7 +959,8 @@ def delta_snapshot(spark: SparkSession, table: str, *,
         _replay_json_commit(text, state)
 
     snap = _snapshot_from_state(spark, table, target, state)
-    _cache_put(spark, table, target, snap, _commit_fp(target_text))
+    _SNAPSHOT_CACHE.put(spark, table, target,
+                        tablescan.fingerprint(target_text), snap)
     return snap
 
 
@@ -1089,83 +1057,33 @@ def _cache_post_commit(spark, table: str, version: int,
         snap = _snapshot_from_state(spark, table, version, state)
     except (ValueError, DeltaProtocolError):
         return  # let the next resolve rebuild (and raise) from disk
-    _cache_put(spark, table, version, snap,
-               _commit_fp(commit_text))
-
-
-def _hive_consistent(adds: list, pcols: list) -> bool:
-    """True when every add's relative path carries hive segments that
-    EXACTLY match its log partitionValues for all partition columns —
-    the precondition for the single-scan basePath fast path."""
-    from urllib.parse import unquote
-    for a in adds:
-        if os.path.isabs(a["path"]) or "://" in a["path"]:
-            return False  # clone-style absolute paths: basePath
-            # (the table root) is not an ancestor of the data file
-        pv = a.get("partitionValues") or {}
-        segs = {}
-        for seg in a["path"].split("/")[:-1]:
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                segs[k] = unquote(v)
-        for c in pcols:
-            sv = segs.get(c)
-            if sv is None:
-                return False
-            v = pv.get(c)
-            if sv == _HIVE_NULL:
-                if v is not None and v != _HIVE_NULL:
-                    return False
-            elif v is None or sv != str(v):
-                return False
-    return True
-
-
-def _partition_expr(value: Optional[str], dtype: T.DataType):
-    """A log partitionValue (string or null) as a typed literal column
-    (spec: values are serialized strings; null encodes missing)."""
-    if value is None or value == _HIVE_NULL:
-        return F.lit(None).cast(dtype)
-    return F.lit(value).cast(dtype)
-
-
-def _norm_uri(col):
-    """Canonicalize 'file:'-scheme URIs so Delta log paths, Iceberg
-    manifest and delete-file paths, and Spark's
-    ``_metadata.file_path`` compare equal ('file:/x', 'file:///x',
-    '/x' -> '/x')."""
-    return F.regexp_replace(col, "^file:/+", "/")
+    _SNAPSHOT_CACHE.put(spark, table, version,
+                        tablescan.fingerprint(commit_text), snap)
 
 
 def _scan_adds(spark: SparkSession, snap: DeltaSnapshot,
                adds: list[dict], *, with_meta: bool = False
                ) -> DataFrame:
-    """The table-schema scan over ``adds`` (hive-consistent single
-    scan when the layout allows, else per-partition-tuple groups).
-    ``with_meta`` appends (_dl_fp, _dl_ri) row-address columns for
-    deletion-vector merging.  Under column mapping data files carry
-    PHYSICAL column names: in NAME mode the scan reads the physical
-    schema and renames back to logical (struct casts rename nested
-    fields positionally); in ID mode the engine resolves FIELD-ID
-    matching itself from each file's footer (``_id_signatures`` /
-    ``_resolve_id_read``) and scans by the resolved physical names —
-    no session conf involved.  The hive fast path naturally falls
-    back to grouped
-    scans because physical dir names can't match logical
-    partitionValues."""
+    """The table-schema scan over ``adds`` (one basePath scan when the
+    hive layout agrees with the log, else one scan per partition tuple
+    — both in sources/tablescan.py).  ``with_meta`` appends the
+    ``tablescan.ROW_FILE``/``ROW_POS`` row address for deletion
+    vectors.  Under column mapping data files carry PHYSICAL column
+    names: in NAME mode the scan reads the physical schema and renames
+    back to logical (struct casts rename nested fields positionally);
+    in ID mode the engine resolves FIELD-ID matching itself from each
+    file's footer (``_id_signatures`` / ``_resolve_id_read``) and scans
+    by the resolved physical names — no session conf involved.  Both
+    modes take the grouped scan: physical dir names can't match
+    logical partitionValues."""
     maps = snap.column_mapping()
-    mode = _mapping_mode(snap.metadata)
-    fields = {f.name: f.dataType for f in snap.schema.fields}
     pcols = snap.logical_partition_columns
-    want = [f.name for f in snap.schema.fields]
     data_fields = [f for f in snap.schema.fields
                    if f.name not in pcols]
-    sig_of: dict[str, str] = {}     # rel path -> layout signature
-    per_sig: dict[str, tuple] = {}  # signature -> (schema, rename)
+    sig_of: dict[str, str] = {}  # rel path -> layout signature
     if maps is None:
-        data_schema = T.StructType(data_fields)
-        rename = None
-    elif mode == "id":
+        reads = {"": (T.StructType(data_fields), None)}
+    elif _mapping_mode(snap.metadata) == "id":
         # Field-id matching is resolved HERE, from the files' own
         # footers, never via spark.sql.parquet.fieldId.read.enabled:
         # Spark 4 consults that conf from the SESSION at ACTION time
@@ -1176,139 +1094,71 @@ def _scan_adds(spark: SparkSession, snap: DeltaSnapshot,
         # memoized on the immutable snapshot; files sharing a layout
         # share one scan.
         sig_of = _id_signatures(spark, snap, adds)
-        per_sig = {s: _resolve_id_read(data_fields, json.loads(s))
-                   for s in set(sig_of.values())}
-        if len(per_sig) == 1:
-            data_schema, rename = next(iter(per_sig.values()))
-        else:
-            data_schema = rename = None  # chosen per group below
+        reads = {s: _resolve_id_read(data_fields, json.loads(s))
+                 for s in set(sig_of.values())}
     else:
-        data_schema = T.StructType([
-            T.StructField(maps[0].get(f.name, f.name),
-                          _physical_type(f.dataType), f.nullable)
-            for f in data_fields])
-        rename = [(maps[0].get(f.name, f.name), f.dataType, f.name)
-                  for f in data_fields]
+        reads = {"": (
+            T.StructType([T.StructField(maps[0].get(f.name, f.name),
+                                        _physical_type(f.dataType),
+                                        f.nullable)
+                          for f in data_fields]),
+            [(maps[0].get(f.name, f.name), f.dataType, f.name)
+             for f in data_fields])}
 
-    def _meta_cols(d: DataFrame) -> DataFrame:
-        return d.select(
-            "*",
-            _norm_uri(F.col("_metadata.file_path")).alias("_dl_fp"),
-            F.col("_metadata.row_index").alias("_dl_ri"))
-
-    extra = ["_dl_fp", "_dl_ri"] if with_meta else []
-
-    def _to_logical(d: DataFrame, ren) -> DataFrame:
-        if ren is None:
+    def _read(paths: list, sig: str) -> DataFrame:
+        schema, rename = reads[sig]
+        d = spark.read.schema(schema).parquet(*paths)
+        if rename is None:
             return d
-        cols = [F.col(p).cast(t).alias(n) for p, t, n in ren]
-        return d.select(*cols, *[c for c in extra if c in d.columns])
+        return d.select(*[F.col(p).cast(t).alias(n)
+                          for p, t, n in rename])
 
-    # Fast path: when every add's path is hive-laid-out AND the dir
-    # segments agree with the LOG's partitionValues (the log stays
-    # authoritative — any disagreement falls back), one basePath scan
-    # reads all files with partition columns inferred per the provided
-    # schema.  This is the 10k-partition-safe shape: no per-partition
-    # DataFrame unions in the driver plan.  Heterogeneous id-mode
-    # layouts can't share one read schema, so they take the grouped
-    # path even unpartitioned.
-    if (not pcols and len(per_sig) <= 1) \
-            or (maps is None and _hive_consistent(adds, pcols)):
-        d = spark.read.schema(snap.schema if pcols else data_schema)
-        if pcols:
-            d = d.option("basePath", snap.path)
-        d = d.parquet(*[os.path.join(snap.path, a["path"])
-                        for a in adds])
-        if with_meta:
-            d = _meta_cols(d)
-        d = _to_logical(d, rename)
-        return d.select(*want, *extra)
-
-    # group by (partition tuple, layout signature); each group is one
-    # parquet scan with the log-typed partition literals attached
-    groups: dict[tuple, list[str]] = {}
-    pvals: dict[tuple, dict] = {}
-    for a in adds:
-        pv = a.get("partitionValues") or {}
-        key = (tuple(pv.get(c) for c in pcols),
-               sig_of.get(a["path"], ""))
-        groups.setdefault(key, []).append(
-            os.path.join(snap.path, a["path"]))
-        pvals[key] = pv
-    parts_df = []
-    for key, paths in sorted(groups.items(),
-                             key=lambda kv: (tuple(map(repr, kv[0][0])),
-                                             kv[0][1])):
-        g_schema, g_rename = (per_sig[key[1]] if key[1]
-                              else (data_schema, rename))
-        d = spark.read.schema(g_schema).parquet(*paths)
-        if with_meta:
-            d = _meta_cols(d)
-        d = _to_logical(d, g_rename)
-        for c in pcols:
-            d = d.withColumn(c, _partition_expr(pvals[key].get(c),
-                                                fields[c]))
-        parts_df.append(d.select(*want, *extra))
-    out = parts_df[0]
-    for d in parts_df[1:]:
-        out = out.unionByName(d)
-    return out
+    files = [(os.path.join(snap.path, a["path"]),
+              {c: None if v == _HIVE_NULL else v
+               for c, v in (a.get("partitionValues") or {}).items()},
+              sig_of.get(a["path"], ""))
+             for a in adds]
+    if maps is None and pcols \
+            and tablescan.hive_consistent(snap.path, files, pcols):
+        d = tablescan.single_scan(spark, snap.path,
+                                  [f[0] for f in files], snap.schema,
+                                  with_meta=with_meta)
+    else:
+        d = tablescan.grouped_scan(
+            files, pcols, {f.name: f.dataType for f in snap.schema},
+            _read, with_meta=with_meta)
+    extra = [tablescan.ROW_FILE, tablescan.ROW_POS] if with_meta else []
+    return d.select(*[f.name for f in snap.schema.fields], *extra)
 
 
-def _apply_deletion_vectors(spark: SparkSession, table: str,
-                            adds: list[dict], d: DataFrame
-                            ) -> DataFrame:
-    """Drop rows whose (file, position) a deletion vector marks.
-    Descriptors expand to (path, position) rows INSIDE executors via
-    ``mapInPandas`` (sources/dv.py does the roaring decode), then one
-    anti-join on the row address removes them — the driver never holds
-    decoded positions."""
-    dv_rows = []
-    for a in adds:
-        dvd = a.get("deletionVector")
-        if dvd:
-            dv_rows.append((
-                os.path.join(table, a["path"]),
-                dvd.get("storageType"), dvd.get("pathOrInlineDv"),
-                int(dvd["offset"]) if dvd.get("offset") is not None
-                else None,
-                int(dvd["sizeInBytes"]),
-                int(dvd["cardinality"])
-                if dvd.get("cardinality") is not None else None))
-    if not dv_rows:
-        return d
-    desc_schema = ("data_path string, storageType string, "
-                   "pathOrInlineDv string, offset int, "
-                   "sizeInBytes int, cardinality long")
-    desc_df = _local_df(spark, dv_rows, desc_schema)
-    table_root = fsutil._strip_file_scheme(table)
+def _dv_positions(spark: SparkSession, table: str,
+                  adds: list[dict]) -> Optional[DataFrame]:
+    """Deleted (file, position) rows for every deletion vector carried
+    by ``adds`` (decoded in executors by sources/dv.py), or None when
+    no add carries one."""
+    descriptors = [(os.path.join(table, a["path"]), 0,
+                    a["deletionVector"])
+                   for a in adds if a.get("deletionVector")]
+    if not descriptors:
+        return None
+    root = fsutil._strip_file_scheme(table)
 
-    def _expand(batches):
-        import pandas as pd
+    def _decode(desc: dict, cache: dict):
+        from . import dv
+        return dv.decode_descriptor(desc, root, cache)
 
-        from . import dv as _dv
-        cache: dict = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                desc = {"storageType": row.storageType,
-                        "pathOrInlineDv": row.pathOrInlineDv,
-                        "offset": row.offset,
-                        "sizeInBytes": row.sizeInBytes,
-                        "cardinality": row.cardinality}
-                pos = _dv.decode_descriptor(desc, table_root, cache)
-                yield pd.DataFrame({
-                    "_dv_fp": [row.data_path] * len(pos),
-                    "_dv_pos": pos})
+    return tablescan.position_deletes(spark, descriptors, _decode)
 
-    n_dv = max(1, min(len(dv_rows),
-                      spark.sparkContext.defaultParallelism))
-    pos_df = (desc_df.repartition(n_dv)
-              .mapInPandas(_expand, "_dv_fp string, _dv_pos long")
-              .withColumn("_dv_fp", _norm_uri(F.col("_dv_fp"))))
-    return d.join(pos_df,
-                  (d["_dl_fp"] == pos_df["_dv_fp"])
-                  & (d["_dl_ri"] == pos_df["_dv_pos"]),
-                  "left_anti")
+
+def _scan_live(spark: SparkSession, snap: DeltaSnapshot,
+               adds: list[dict], *, with_meta: bool = False
+               ) -> DataFrame:
+    """``_scan_adds`` with the rows the adds' deletion vectors mark
+    deleted dropped (one anti-join on the row address)."""
+    dels = _dv_positions(spark, snap.path, adds)
+    d = _scan_adds(spark, snap, adds,
+                   with_meta=with_meta or dels is not None)
+    return d if dels is None else tablescan.join_positions(d, dels)
 
 
 def read_delta(spark: SparkSession, table: str, *,
@@ -1361,19 +1211,8 @@ def read_delta(spark: SparkSession, table: str, *,
     adds = snap.pruned_adds(partition_filter, stats_ranges=ranges)
     if not adds:
         return _local_df(spark, [], snap.schema)
-    want = [f.name for f in snap.schema.fields]
-    has_dv = any(a.get("deletionVector") for a in adds)
-    d = _scan_adds(spark, snap, adds, with_meta=has_dv)
-    if has_dv:
-        d = _apply_deletion_vectors(spark, table, adds, d)
-        d = d.select(*want)
-    if where_range:
-        for c, (lo, hi) in where_range.items():
-            if lo is not None:
-                d = d.filter(F.col(c) >= F.lit(lo))
-            if hi is not None:
-                d = d.filter(F.col(c) <= F.lit(hi))
-    return d
+    return tablescan.table_rows(_scan_live(spark, snap, adds),
+                                snap.schema, where_range)
 
 
 # ---------------------------------------------------------------------------
@@ -1798,11 +1637,10 @@ def delta_delete_where(spark: SparkSession, table: str,
     adds = snap.pruned_adds(partition_filter)
     if not adds:
         return snap.version
-    d = _scan_adds(spark, snap, adds, with_meta=True)
-    d = _apply_deletion_vectors(spark, table, adds, d)
+    d = _scan_live(spark, snap, adds, with_meta=True)
     matches = (d.filter(F.expr(condition))
-               .select(F.col("_dl_fp").alias("fp"),
-                       F.col("_dl_ri").alias("pos")))
+               .select(F.col(tablescan.ROW_FILE).alias("fp"),
+                       F.col(tablescan.ROW_POS).alias("pos")))
 
     by_norm: dict[str, dict] = {}
     for a in adds:
@@ -2252,12 +2090,8 @@ def delta_optimize(spark: SparkSession, table: str, *,
         return {"version": snap.version, "removed_files": 0,
                 "added_files": 0, "bytes_compacted": 0}
 
-    has_dv = any(a.get("deletionVector") for a in victims)
-    d = _scan_adds(spark, snap, victims, with_meta=has_dv)
-    if has_dv:
-        d = _apply_deletion_vectors(spark, table, victims, d)
-    want = [f.name for f in snap.schema.fields]
-    d = d.select(*want)
+    d = _scan_live(spark, snap, victims).select(
+        *snap.schema.fieldNames())
 
     total_bytes = sum(int(a.get("size") or 0) for a in victims)
     n_out = max(1, -(-total_bytes // max(1, int(target_file_bytes))))
@@ -2567,54 +2401,6 @@ def _action_to_add(a: dict, maps) -> dict:
     return out
 
 
-def _dv_positions_df(spark: SparkSession, table: str,
-                     adds: list[dict]) -> Optional[DataFrame]:
-    """(_dv_fp, _dv_pos) rows for every deletion vector carried by
-    ``adds`` (decoded in executors), or None when no DVs exist."""
-    carriers = [a for a in adds if a.get("deletionVector")]
-    if not carriers:
-        return None
-    dv_rows = []
-    for a in carriers:
-        dvd = a["deletionVector"]
-        dv_rows.append((
-            os.path.join(table, a["path"]),
-            dvd.get("storageType"), dvd.get("pathOrInlineDv"),
-            int(dvd["offset"]) if dvd.get("offset") is not None
-            else None,
-            int(dvd["sizeInBytes"]),
-            int(dvd["cardinality"])
-            if dvd.get("cardinality") is not None else None))
-    desc_schema = ("data_path string, storageType string, "
-                   "pathOrInlineDv string, offset int, "
-                   "sizeInBytes int, cardinality long")
-    desc_df = _local_df(spark, dv_rows, desc_schema)
-    table_root = fsutil._strip_file_scheme(table)
-
-    def _expand(batches):
-        import pandas as pd
-
-        from . import dv as _dv
-        cache: dict = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                desc = {"storageType": row.storageType,
-                        "pathOrInlineDv": row.pathOrInlineDv,
-                        "offset": row.offset,
-                        "sizeInBytes": row.sizeInBytes,
-                        "cardinality": row.cardinality}
-                pos = _dv.decode_descriptor(desc, table_root, cache)
-                yield pd.DataFrame({
-                    "_dv_fp": [row.data_path] * len(pos),
-                    "_dv_pos": pos})
-
-    n = max(1, min(len(dv_rows),
-                   spark.sparkContext.defaultParallelism))
-    return (desc_df.repartition(n)
-            .mapInPandas(_expand, "_dv_fp string, _dv_pos long")
-            .withColumn("_dv_fp", _norm_uri(F.col("_dv_fp"))))
-
-
 def delta_changes(spark: SparkSession, table: str, *,
                   from_version: int,
                   to_version: Optional[int] = None) -> DataFrame:
@@ -2675,33 +2461,17 @@ def delta_changes(spark: SparkSession, table: str, *,
         if cdc:
             # cdc parquet of a partitioned table omits the partition
             # columns (they live in the action's partitionValues) —
-            # re-attach them as typed literals per partition tuple,
-            # the same mechanism the grouped scan uses.
-            pcols = snap_now.logical_partition_columns
-            fields = {f.name: f.dataType
-                      for f in snap_now.schema.fields}
-            groups: dict[tuple, list[str]] = {}
-            pvals: dict[tuple, dict] = {}
-            for c in cdc:
-                pv = dict(c.get("partitionValues") or {})
-                key = tuple(pv.get(p) for p in pcols)
-                groups.setdefault(key, []).append(
-                    os.path.join(table, c["path"]))
-                pvals[key] = pv
-            cdc_parts = []
-            for key, paths in sorted(
-                    groups.items(),
-                    key=lambda kv: tuple(map(repr, kv[0]))):
-                g = spark.read.parquet(*paths)
-                for p in pcols:
-                    if p not in g.columns:
-                        g = g.withColumn(
-                            p, _partition_expr(pvals[key].get(p),
-                                               fields[p]))
-                cdc_parts.append(g)
-            d = cdc_parts[0]
-            for g in cdc_parts[1:]:
-                d = d.unionByName(g)
+            # the grouped scan re-attaches them as typed literals per
+            # partition tuple.
+            files = [(os.path.join(table, c["path"]),
+                      {k: None if x == _HIVE_NULL else x
+                       for k, x in (c.get("partitionValues")
+                                    or {}).items()}, "")
+                     for c in cdc]
+            d = tablescan.grouped_scan(
+                files, snap_now.logical_partition_columns,
+                {f.name: f.dataType for f in snap_now.schema},
+                lambda paths, _: spark.read.parquet(*paths))
             out_parts.append(_tag(d, None, v))
             continue
         if not adds and not removes:
@@ -2717,52 +2487,38 @@ def delta_changes(spark: SparkSession, table: str, *,
         if ins_paths:
             ins_adds = [_action_to_add(adds[p], maps)
                         for p in ins_paths]
-            has_dv = any(a.get("deletionVector") for a in ins_adds)
-            d = _scan_adds(spark, snap_now, ins_adds,
-                           with_meta=has_dv)
-            if has_dv:
-                d = _apply_deletion_vectors(spark, table, ins_adds, d)
-            out_parts.append(_tag(d, "insert", v))
+            out_parts.append(_tag(_scan_live(spark, snap_now, ins_adds),
+                                  "insert", v))
         if del_paths:
             del_adds = [prev_adds[p] for p in del_paths
                         if p in prev_adds]
             if del_adds:
-                has_dv = any(a.get("deletionVector")
-                             for a in del_adds)
-                d = _scan_adds(spark, snap_now, del_adds,
-                               with_meta=has_dv)
-                if has_dv:
-                    d = _apply_deletion_vectors(spark, table,
-                                                del_adds, d)
-                out_parts.append(_tag(d, "delete", v))
+                out_parts.append(_tag(
+                    _scan_live(spark, snap_now, del_adds), "delete", v))
         for p in dv_pairs:
             new_add = _action_to_add(adds[p], maps)
             old_add = prev_adds.get(p)
-            new_pos = _dv_positions_df(spark, table, [new_add])
-            old_pos = (_dv_positions_df(spark, table, [old_add])
+            new_pos = _dv_positions(spark, table, [new_add])
+            old_pos = (_dv_positions(spark, table, [old_add])
                        if old_add else None)
             changed = new_pos if old_pos is None \
-                else new_pos.join(old_pos, ["_dv_fp", "_dv_pos"],
+                else new_pos.join(old_pos, [tablescan.DEL_FILE,
+                                            tablescan.DEL_POS],
                                   "left_anti")
             base = old_add if old_add else new_add
             scan = _scan_adds(spark, snap_now,
                               [dict(base, deletionVector=None)],
                               with_meta=True)
-            d = scan.join(changed,
-                          (scan["_dl_fp"] == changed["_dv_fp"])
-                          & (scan["_dl_ri"] == changed["_dv_pos"]),
-                          "inner")
-            out_parts.append(_tag(d, "delete", v))
+            out_parts.append(_tag(
+                tablescan.join_positions(scan, changed, "inner"),
+                "delete", v))
     if not out_parts:
         schema = T.StructType(
             list(snap_now.schema.fields)
             + [T.StructField("_change_type", T.StringType()),
                T.StructField("_commit_version", T.IntegerType())])
         return _local_df(spark, [], schema)
-    out = out_parts[0]
-    for d in out_parts[1:]:
-        out = out.unionByName(d)
-    return out
+    return tablescan.union_all(out_parts)
 
 
 def delta_restore(spark: SparkSession, table: str, *,

@@ -3,7 +3,7 @@ scale.
 
 Two consumers:
 
-- Delta ID-mode column mapping (``delta._scan_adds``): Spark 4
+- Delta ID-mode column mapping (``delta._id_signatures``): Spark 4
   consults ``spark.sql.parquet.fieldId.read.enabled`` from the
   SESSION conf at ACTION time (verified empirically: setting the conf
   at plan-build time and restoring it before ``.collect()`` breaks

@@ -8,7 +8,14 @@ snapshot whose *manifest list* and *manifests* are Avro container
 files — decoded with the self-contained codec in sources/avro_io.py
 (Avro files embed their writer schema, so foreign manifests decode
 without any schema input).  The resolved data files are then read by
-the stock vectorized parquet/orc scan.
+the stock vectorized parquet/orc scan through the format-neutral scan
+core the Delta reader shares (sources/tablescan.py: snapshot cache,
+hive check, basePath or grouped scan, row address, position-delete
+expansion and anti-join, exact ``where_range`` filter).  This module
+keeps what is Iceberg's own: metadata and manifest decode, partition
+transforms, v3 defaults with their footer-grouped fills and name
+aliases, ORC data files, equality deletes and the delete
+sequence-number rule.
 
 The read path is the point — ingesting existing lakehouse tables into
 the pipeline, INCLUDING v2 merge-on-read: position deletes resolve via
@@ -57,7 +64,8 @@ from pyspark.sql import types as T
 from .. import fsutil
 from ..localdf import local_df
 from .avro_io import read_container_file
-from .delta import _norm_uri
+from . import tablescan
+from .tablescan import norm_path, norm_uri
 
 
 class IcebergProtocolError(NotImplementedError):
@@ -476,33 +484,14 @@ def _manifest_partials(table: str, entries: list, content: int,
     return files, dels
 
 
-# session snapshot cache — the Iceberg twin of the Delta cache that
-# closed r12's lifecycle-cost weakness: a resolved (metadata text,
-# target snapshot) is immutable, so commit-heavy write→read→read
-# lifecycles decode each manifest set once per session instead of
-# once per step.  Keyed by the metadata TEXT hash (recreation-safe)
-# and SparkSession id; filtered resolutions bypass it.
-from collections import OrderedDict as _IceOrderedDict
-
-_ICE_SNAPSHOT_CACHE: "_IceOrderedDict[tuple, IcebergSnapshot]" = \
-    _IceOrderedDict()
-_ICE_SNAPSHOT_CACHE_MAX = 64
-
-
-def _ice_cache_put(cache_key, snap: IcebergSnapshot
-                   ) -> IcebergSnapshot:
-    if cache_key is not None:
-        _ICE_SNAPSHOT_CACHE[cache_key] = snap
-        _ICE_SNAPSHOT_CACHE.move_to_end(cache_key)
-        while len(_ICE_SNAPSHOT_CACHE) > _ICE_SNAPSHOT_CACHE_MAX:
-            _ICE_SNAPSHOT_CACHE.popitem(last=False)
-    return snap
-
-
-def _ice_cache_key(spark, table: str, text: str) -> tuple:
-    import hashlib
-    return (id(spark), _norm_path_str(table),
-            hashlib.sha1(text.encode()).hexdigest(), None, None)
+# session snapshot cache (sources/tablescan.py): a resolved (metadata
+# text, target snapshot) is immutable, so commit-heavy
+# write→read→read lifecycles decode each manifest set once per session
+# instead of once per step.  The metadata TEXT hash is the fingerprint
+# (recreation-safe); filtered resolutions bypass it.
+_ICE_SNAPSHOT_CACHE = tablescan.SnapshotCache()
+# the target of an unpinned read: (snapshot_id, as_of_timestamp_ms)
+_CURRENT = (None, None)
 
 
 def _ice_warm_post_commit(spark, table: str,
@@ -527,13 +516,13 @@ def _ice_warm_post_commit(spark, table: str,
             if old_text is None:
                 return
             old = _ICE_SNAPSHOT_CACHE.get(
-                _ice_cache_key(spark, table, old_text))
+                spark, table, _CURRENT, tablescan.fingerprint(old_text))
             if old is None:
                 return
             files = list(old.files) + files
             dels = list(old.delete_files) + dels
-        _ice_cache_put(
-            _ice_cache_key(spark, table, new_text),
+        _ICE_SNAPSHOT_CACHE.put(
+            spark, table, _CURRENT, tablescan.fingerprint(new_text),
             IcebergSnapshot(table,
                             int(meta["current-snapshot-id"]),
                             schema, spec_fields, files, meta,
@@ -562,24 +551,28 @@ def iceberg_snapshot(spark: SparkSession, table: str, *,
     column bounds inside the same decode."""
     meta_file = _current_metadata_file(table, spark)
     meta_text = fsutil.read_text(meta_file, spark)
-    cache_key = None
-    if partition_filter is None and range_tests is None:
-        # a published metadata JSON is immutable (put-if-absent
-        # commit rule), so the resolved snapshot — manifest decode
-        # included — is reusable for the session; the TEXT hash keys
-        # the entry, so a table recreated at the same path can never
-        # serve a stale snapshot.  Pruned resolutions (partition or
-        # range tests) are parameterized by their filters and bypass
-        # the cache — pruning stays pushed into the decode.
-        import hashlib
-        cache_key = (id(spark), _norm_path_str(table),
-                     hashlib.sha1(meta_text.encode()).hexdigest(),
-                     None if snapshot_id is None else int(snapshot_id),
-                     as_of_timestamp_ms)
-        hit = _ICE_SNAPSHOT_CACHE.get(cache_key)
+    # a published metadata JSON is immutable (put-if-absent commit
+    # rule), so the resolved snapshot — manifest decode included — is
+    # reusable for the session; the TEXT hash fingerprints the entry,
+    # so a table recreated at the same path can never serve a stale
+    # snapshot.  Pruned resolutions (partition or range tests) are
+    # parameterized by their filters and bypass the cache — pruning
+    # stays pushed into the decode.
+    cacheable = partition_filter is None and range_tests is None
+    target_key = (None if snapshot_id is None else int(snapshot_id),
+                  as_of_timestamp_ms)
+    fp = tablescan.fingerprint(meta_text)
+    if cacheable:
+        hit = _ICE_SNAPSHOT_CACHE.get(spark, table, target_key, fp)
         if hit is not None:
-            _ICE_SNAPSHOT_CACHE.move_to_end(cache_key)
             return hit
+
+    def _resolved(snap: IcebergSnapshot) -> IcebergSnapshot:
+        if not cacheable:
+            return snap
+        return _ICE_SNAPSHOT_CACHE.put(spark, table, target_key, fp,
+                                       snap)
+
     meta = json.loads(meta_text)
     fv = int(meta.get("format-version", 1))
     if fv > 3:
@@ -639,7 +632,7 @@ def iceberg_snapshot(spark: SparkSession, table: str, *,
     target = (int(snapshot_id) if snapshot_id is not None
               else meta.get("current-snapshot-id"))
     if target is None or int(target) == -1 or not snaps:
-        return _ice_cache_put(cache_key, IcebergSnapshot(
+        return _resolved(IcebergSnapshot(
             table, -1, schema, specs.get(0, []), [], meta))
     if int(target) not in snaps:
         raise ValueError(f"snapshot {target} not in table metadata "
@@ -716,7 +709,7 @@ def iceberg_snapshot(spark: SparkSession, table: str, *,
                   .collect()):
             rec = json.loads(r["rec"])
             (files if r["kind"] == "f" else delete_files).append(rec)
-    return _ice_cache_put(cache_key, IcebergSnapshot(
+    return _resolved(IcebergSnapshot(
         table, int(target), schema, spec_fields, files, meta,
         delete_files=delete_files))
 
@@ -893,7 +886,7 @@ def _footer_presence(spark, snap: IcebergSnapshot, files: list,
     from . import footers
     cache = snap.__dict__.setdefault("_footer_tree_cache", {})
     todo = [f for f in files
-            if _norm_path_str(f["path"]) not in cache]
+            if norm_path(f["path"]) not in cache]
     if todo:
         if any(f["format"] != "parquet" for f in todo):
             raise IcebergProtocolError(
@@ -902,10 +895,10 @@ def _footer_presence(spark, snap: IcebergSnapshot, files: list,
                 "not implemented")
         for p, tree in footers.footer_nodes(
                 spark, sorted({f["path"] for f in todo})).items():
-            cache[_norm_path_str(p)] = tree
-    return {_norm_path_str(f["path"]): frozenset(
+            cache[norm_path(p)] = tree
+    return {norm_path(f["path"]): frozenset(
                 c for c in dcols
-                if _tree_has(cache[_norm_path_str(f["path"])], c))
+                if _tree_has(cache[norm_path(f["path"])], c))
             for f in files}
 
 
@@ -971,11 +964,11 @@ def _scan_snapshot_files(spark: SparkSession,
                          with_meta: bool,
                          _fills: Optional[dict] = None,
                          _renames: Optional[dict] = None
-                         ) -> Optional[DataFrame]:
+                         ) -> DataFrame:
     """Table-schema scan over a SUBSET of a snapshot's data files
     (identity partition columns re-attached from manifest tuples when
     absent from the data).  ``with_meta`` appends the
-    (_ice_fp, _ice_ri) row-address columns for delete merging.
+    ``tablescan.ROW_FILE``/``ROW_POS`` row address for delete merging.
 
     v3 field defaults + schema evolution: when the current schema
     carries top-level ``initial-default`` values, OR the table has
@@ -1013,8 +1006,8 @@ def _scan_snapshot_files(spark: SparkSession,
             groups: dict = {}
             for f in files:
                 groups.setdefault(
-                    present[_norm_path_str(f["path"])], []).append(f)
-            out = None
+                    present[norm_path(f["path"])], []).append(f)
+            parts = []
             for key, fgroup in sorted(groups.items(),
                                       key=lambda kv: sorted(kv[0])):
                 fills, renames = {}, {}
@@ -1038,15 +1031,13 @@ def _scan_snapshot_files(spark: SparkSession,
                         renames[c] = old   # pre-rename file: alias
                     else:
                         fills[c] = defaults[c]
-                d = _scan_snapshot_files(spark, snap, fgroup,
-                                         with_meta=with_meta,
-                                         _fills=fills,
-                                         _renames=renames)
-                out = d if out is None else out.unionByName(d)
-            return out
+                parts.append(_scan_snapshot_files(
+                    spark, snap, fgroup, with_meta=with_meta,
+                    _fills=fills, _renames=renames))
+            return tablescan.union_all(parts)
         _fills = {}
     sub = _dc.replace(snap, files=list(files))
-    out = None
+    parts = []
     for fmt in ("parquet", "orc"):
         paths = [f["path"] for f in files if f["format"] == fmt]
         if not paths:
@@ -1055,11 +1046,8 @@ def _scan_snapshot_files(spark: SparkSession,
         # explicit file lists — converted-in-place files and later
         # appends live at different depths, which inference rejects
         # (identity partition columns re-attach from manifests below)
-        d = (spark.read.option("recursiveFileLookup", "true")
-             .format(fmt).load(paths))
-        for new_c, old_c in (_renames or {}).items():
-            if old_c in d.columns and new_c not in d.columns:
-                d = d.withColumnRenamed(old_c, new_c)
+        d = _renamed(spark.read.option("recursiveFileLookup", "true")
+                     .format(fmt).load(paths), _renames or {})
         missing = [c for c in want
                    if c not in d.columns and c not in _fills]
         if missing:
@@ -1072,25 +1060,14 @@ def _scan_snapshot_files(spark: SparkSession,
             d = _attach_identity_partitions(
                 spark, sub, fmt, missing, with_meta=with_meta,
                 renames=_renames)
-            d = _apply_fills(d, snap, _fills)
-        elif _fills:
-            d = _apply_fills(d, snap, _fills)
-            if with_meta:
-                d = d.select(
-                    "*",
-                    F.col("_metadata.file_path").alias("_ice_fp"),
-                    F.col("_metadata.row_index").alias("_ice_ri"))
         elif with_meta:
-            d = d.select(
-                "*",
-                F.col("_metadata.file_path").alias("_ice_fp"),
-                F.col("_metadata.row_index").alias("_ice_ri"))
-        d = d.select(*([F.col(c).cast(snap.schema[c].dataType)
-                        for c in want]
-                       + ([F.col("_ice_fp"), F.col("_ice_ri")]
-                          if with_meta else [])))
-        out = d if out is None else out.unionByName(d)
-    return out
+            d = tablescan.with_row_address(d)
+        d = _apply_fills(d, snap, _fills)
+        parts.append(d.select(
+            *[F.col(c).cast(snap.schema[c].dataType) for c in want],
+            *([tablescan.ROW_FILE, tablescan.ROW_POS]
+              if with_meta else [])))
+    return tablescan.union_all(parts)
 
 
 def _build_range_tests(spark: SparkSession, table: str,
@@ -1168,88 +1145,65 @@ def read_iceberg(spark: SparkSession, table: str, *,
                             range_tests=range_tests)
     if not snap.files:
         return local_df(spark, [], snap.schema)
-    want = [f.name for f in snap.schema.fields]
-    # merge-on-read: with live delete files, every data row carries
-    # (file, row_index, data sequence) so the delete joins can apply
+    return tablescan.table_rows(_scan_live(spark, snap), snap.schema,
+                                where_range)
+
+
+def _scan_live(spark, snap: IcebergSnapshot) -> DataFrame:
+    """The snapshot's files scanned with its deletes applied
+    (merge-on-read: with live delete files, every data row carries its
+    row address and data sequence so the delete joins can apply)."""
     with_meta = bool(snap.delete_files)
     out = _scan_snapshot_files(spark, snap, snap.files,
                                with_meta=with_meta)
-    if with_meta:
-        out = _apply_row_deletes(spark, snap, out)
-        out = out.select(*want)
-    if where_range:
-        for c, (lo, hi) in where_range.items():
-            if lo is not None:
-                out = out.filter(F.col(c) >= F.lit(lo))
-            if hi is not None:
-                out = out.filter(F.col(c) <= F.lit(hi))
-    return out
+    return _apply_row_deletes(spark, snap, out) if with_meta else out
+
+
+def _puffin_positions(desc: dict, cache: dict):
+    """Positions of one v3 PUFFIN deletion vector: the blob at
+    (offset, size) in the puffin file is a 4-byte BE length, the
+    magic-prefixed 64-bit roaring bitmap (the portable bitmap
+    ``sources/dv.py`` already parses for Delta) and a 4-byte BE
+    CRC-32."""
+    import struct
+    import zlib
+
+    from .dv import _read_file_bytes, rba_deserialize
+    data = cache.get(desc["path"])
+    if data is None:
+        data = cache[desc["path"]] = _read_file_bytes(desc["path"])
+    off = int(desc["offset"])
+    blen = struct.unpack_from(">i", data, off)[0]
+    body = data[off + 4:off + 4 + blen]
+    if len(body) != blen:
+        raise ValueError("truncated puffin deletion vector")
+    if (zlib.crc32(body) & 0xFFFFFFFF) \
+            != struct.unpack_from(">I", data, off + 4 + blen)[0]:
+        raise ValueError("puffin deletion vector CRC mismatch")
+    return rba_deserialize(body)
 
 
 def _pos_delete_rows(spark, pos_files: list) -> Optional[DataFrame]:
-    """(_dp, _dpos, _dseq) rows for position deletes of BOTH shapes:
-    v2 parquet delete files (file_path/pos columns, scanned as data)
-    and v3 PUFFIN deletion vectors — one roaring-bitmap blob per
-    referenced data file, addressed by (content_offset,
-    content_size_in_bytes) from the manifest and decoded INSIDE
-    executors (``mapInPandas`` over the descriptor rows; the blob is
-    4-byte BE length + the magic-prefixed 64-bit roaring bitmap +
-    4-byte BE CRC-32 — the same portable bitmap ``sources/dv.py``
-    already parses for Delta)."""
-    out = None
-    parq = [f for f in pos_files
-            if f.get("format", "parquet") == "parquet"]
-    for f in parq:
-        x = (spark.read.parquet(f["path"])
-             .select(_norm_uri(F.col("file_path")).alias("_dp"),
-                     F.col("pos").cast("long").alias("_dpos"),
-                     F.lit(int(f["seq"])).alias("_dseq")))
-        out = x if out is None else out.unionByName(x)
-    puff = [f for f in pos_files if f.get("format") == "puffin"]
+    """(DEL_FILE, DEL_POS, DEL_SEQ) rows for position deletes of BOTH
+    shapes: v2 parquet delete files (file_path/pos columns, scanned as
+    data) and v3 PUFFIN deletion vectors — one blob per referenced data
+    file, addressed by (content_offset, content_size_in_bytes) from the
+    manifest and decoded INSIDE executors
+    (``tablescan.position_deletes``)."""
+    parts = [spark.read.parquet(f["path"]).select(
+                 norm_uri(F.col("file_path")).alias(tablescan.DEL_FILE),
+                 F.col("pos").cast("long").alias(tablescan.DEL_POS),
+                 F.lit(int(f["seq"])).cast("long").alias(
+                     tablescan.DEL_SEQ))
+             for f in pos_files
+             if f.get("format", "parquet") == "parquet"]
+    puff = [(f["referenced"], f["seq"],
+             {"path": f["path"], "offset": f["offset"]})
+            for f in pos_files if f.get("format") == "puffin"]
     if puff:
-        desc = local_df(
-            spark,
-            [(f["path"], int(f["offset"]), int(f["size"]),
-              _norm_path_str(f["referenced"]), int(f["seq"]))
-             for f in puff],
-            "path string, offset long, size long, "
-            "ref string, dseq long")
-
-        def _expand(batches):
-            import struct as _struct
-            import zlib as _zlib
-
-            import pandas as pd
-
-            from .dv import _read_file_bytes, rba_deserialize
-            cache: dict = {}
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    data = cache.get(row.path)
-                    if data is None:
-                        data = _read_file_bytes(row.path)
-                        cache[row.path] = data
-                    off = int(row.offset)
-                    blen = _struct.unpack_from(">i", data, off)[0]
-                    body = data[off + 4:off + 4 + blen]
-                    if len(body) != blen:
-                        raise ValueError(
-                            "truncated puffin deletion vector")
-                    want_crc = _struct.unpack_from(
-                        ">I", data, off + 4 + blen)[0]
-                    if (_zlib.crc32(body) & 0xFFFFFFFF) != want_crc:
-                        raise ValueError(
-                            "puffin deletion vector CRC mismatch")
-                    positions = rba_deserialize(body)
-                    yield pd.DataFrame({
-                        "_dp": row.ref,
-                        "_dpos": positions.astype("int64"),
-                        "_dseq": int(row.dseq)})
-
-        x = desc.mapInPandas(_expand,
-                             "_dp string, _dpos long, _dseq long")
-        out = x if out is None else out.unionByName(x)
-    return out
+        parts.append(tablescan.position_deletes(spark, puff,
+                                                _puffin_positions))
+    return tablescan.union_all(parts) if parts else None
 
 
 def _apply_row_deletes(spark, snap: IcebergSnapshot, d: DataFrame):
@@ -1260,22 +1214,19 @@ def _apply_row_deletes(spark, snap: IcebergSnapshot, d: DataFrame):
     the delete survive.  Both are joins — position deletes an equi
     anti-join on (file, pos), equality deletes a broadcast-friendly
     key join against per-key max delete sequences."""
-    seq_rows = [(f["path"], int(f["seq"])) for f in snap.files]
-    seq_df = local_df(spark, seq_rows,
-                      "_ice_p string, _ice_seq long") \
-        .withColumn("_ice_p", _norm_uri(F.col("_ice_p")))
-    d = (d.withColumn("_ice_np", _norm_uri(F.col("_ice_fp")))
-         .join(F.broadcast(seq_df),
-               F.col("_ice_np") == F.col("_ice_p"), "left")
+    seq_df = local_df(spark, [(norm_path(f["path"]), int(f["seq"]))
+                              for f in snap.files],
+                      "_ice_p string, _ice_seq long")
+    d = (d.join(F.broadcast(seq_df),
+                F.col(tablescan.ROW_FILE) == F.col("_ice_p"), "left")
          .drop("_ice_p")
          .withColumn("_ice_seq", F.coalesce("_ice_seq", F.lit(0))))
 
     pos = [f for f in snap.delete_files if f["content"] == 1]
     if pos:
-        dels = _pos_delete_rows(spark, pos)
-        d = d.join(dels, (d["_ice_np"] == dels["_dp"])
-                   & (d["_ice_ri"] == dels["_dpos"])
-                   & (d["_ice_seq"] <= dels["_dseq"]), "left_anti")
+        d = tablescan.join_positions(
+            d, _pos_delete_rows(spark, pos),
+            cond=F.col("_ice_seq") <= F.col(tablescan.DEL_SEQ))
 
     eqs = [f for f in snap.delete_files if f["content"] == 2]
     if eqs:
@@ -1293,12 +1244,10 @@ def _apply_row_deletes(spark, snap: IcebergSnapshot, d: DataFrame):
             except KeyError as e:
                 raise IcebergProtocolError(
                     f"equality_ids reference unknown field id {e}")
-            keys = None
-            for f in fs:
-                x = (spark.read.parquet(f["path"])
-                     .select(*[F.col(n) for n in names])
-                     .withColumn("_dseq", F.lit(int(f["seq"]))))
-                keys = x if keys is None else keys.unionByName(x)
+            keys = tablescan.union_all([
+                spark.read.parquet(f["path"]).select(
+                    *names, F.lit(int(f["seq"])).alias("_dseq"))
+                for f in fs])
             agg = (keys.groupBy(*names)
                    .agg(F.max("_dseq").alias("_mds"))
                    .select(*[F.col(n).alias(f"_k_{n}") for n in names],
@@ -1314,58 +1263,27 @@ def _apply_row_deletes(spark, snap: IcebergSnapshot, d: DataFrame):
     return d
 
 
-def _hive_consistent_ice(snap: IcebergSnapshot, fmt: str,
-                         missing: list) -> bool:
-    from urllib.parse import unquote
-    root = fsutil._strip_file_scheme(snap.path).rstrip("/")
-    layout_sig = None
-    for f in snap.files:
-        if f["format"] != fmt:
-            continue
-        # Spark's basePath discovery needs ONE uniform layout: every
-        # file at the same depth with k=v segments in the same
-        # positions (converted-in-place files at <root>/p=x next to
-        # appended files at <root>/data/p=x are a conflict)
-        fp = fsutil._strip_file_scheme(f["path"])
-        if not fp.startswith(root + "/"):
-            return False
-        rel_dirs = fp[len(root) + 1:].split("/")[:-1]
-        sig = (len(rel_dirs),
-               tuple((i, seg.split("=", 1)[0])
-                     for i, seg in enumerate(rel_dirs)
-                     if "=" in seg))
-        if layout_sig is None:
-            layout_sig = sig
-        elif sig != layout_sig:
-            return False
-        segs = {}
-        for seg in f["path"].split("/")[:-1]:
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                segs[k] = unquote(v)
-        for c in missing:
-            sv = segs.get(c)
-            v = f["partition"].get(c)
-            if sv is None:
-                return False
-            if sv == "__HIVE_DEFAULT_PARTITION__":
-                if v is not None:
-                    return False
-            elif v is None or sv != str(v):
-                return False
-    return True
+def _renamed(d: DataFrame, renames: dict) -> DataFrame:
+    """Columns a pre-rename file carries under an old name
+    (``renames``: {current name: old name}) read under the current
+    one."""
+    for new_c, old_c in renames.items():
+        if old_c in d.columns and new_c not in d.columns:
+            d = d.withColumnRenamed(old_c, new_c)
+    return d
 
 
 def _attach_identity_partitions(spark, snap: IcebergSnapshot,
                                 fmt: str, missing: list[str], *,
                                 with_meta: bool = False,
                                 renames: Optional[dict] = None):
-    """Metadata-only partition columns: group files by partition tuple
-    and attach typed literals from the manifests (mirrors the Delta
-    reader; one scan per live partition tuple).  ``with_meta`` adds
-    the (_ice_fp, _ice_ri) row-address columns for delete merging.
+    """Metadata-only partition columns, attached from the manifests'
+    partition tuples: one basePath scan when the hive layout agrees
+    with them, else one scan per tuple with typed literals (the same
+    two scans the Delta reader takes, sources/tablescan.py).
+    ``with_meta`` adds the row address for delete merging.
     ``renames`` ({current name: old file-side name}) makes the
-    explicit-schema fast path read RENAMED columns under the name the
+    explicit-schema single scan read RENAMED columns under the name the
     files actually carry, then alias back — an explicit schema with
     the new name would silently null-fill them."""
     ident = {f["name"] for f in snap.partition_spec
@@ -1376,60 +1294,23 @@ def _attach_identity_partitions(spark, snap: IcebergSnapshot,
             f"columns {not_identity} absent from data files and not "
             "identity partition fields — cannot reconstruct")
     renames = renames or {}
-    fields = {f.name: f.dataType for f in snap.schema.fields}
-
-    def _rename_back(d):
-        for new_c, old_c in renames.items():
-            if old_c in d.columns and new_c not in d.columns:
-                d = d.withColumnRenamed(old_c, new_c)
-        return d
-
-    # single-scan fast path (mirrors sources/delta.py): when every
-    # file path carries hive segments agreeing with its manifest
-    # partition tuple, one basePath scan infers the partition columns
-    # typed per the table schema — no per-partition driver unions
-    if fmt == "parquet" and _hive_consistent_ice(snap, fmt, missing):
+    files = [(f["path"], f["partition"], "") for f in snap.files
+             if f["format"] == fmt]
+    if fmt == "parquet" \
+            and tablescan.hive_consistent(snap.path, files, missing):
         want = T.StructType(
             [T.StructField(renames.get(f.name, f.name), f.dataType,
                            f.nullable)
              for f in snap.schema.fields])
-        d = (spark.read.schema(want)
-             .option("basePath", snap.path)
-             .parquet(*[f["path"] for f in snap.files
-                        if f["format"] == fmt]))
-        d = _rename_back(d)
-        if with_meta:
-            d = d.select(
-                "*",
-                F.col("_metadata.file_path").alias("_ice_fp"),
-                F.col("_metadata.row_index").alias("_ice_ri"))
-        return d
-    groups: dict[tuple, list[str]] = {}
-    pvals: dict[tuple, dict] = {}
-    for f in snap.files:
-        if f["format"] != fmt:
-            continue
-        key = tuple(repr(f["partition"].get(c)) for c in missing)
-        groups.setdefault(key, []).append(f["path"])
-        pvals[key] = f["partition"]
-    parts = []
-    for key in sorted(groups):
-        d = (spark.read.option("recursiveFileLookup", "true")
-             .format(fmt).load(groups[key]))
-        d = _rename_back(d)
-        if with_meta:
-            d = d.select(
-                "*",
-                F.col("_metadata.file_path").alias("_ice_fp"),
-                F.col("_metadata.row_index").alias("_ice_ri"))
-        for c in missing:
-            v = pvals[key].get(c)
-            d = d.withColumn(c, F.lit(v).cast(fields[c]))
-        parts.append(d)
-    out = parts[0]
-    for d in parts[1:]:
-        out = out.unionByName(d)
-    return out
+        return _renamed(tablescan.single_scan(
+            spark, snap.path, [f[0] for f in files], want,
+            with_meta=with_meta), renames)
+    return tablescan.grouped_scan(
+        files, missing, {f.name: f.dataType for f in snap.schema},
+        lambda paths, _: _renamed(
+            spark.read.option("recursiveFileLookup", "true")
+            .format(fmt).load(paths), renames),
+        with_meta=with_meta)
 
 
 # ---------------------------------------------------------------------------
@@ -2669,7 +2550,7 @@ def _publish_dv_delete_snapshot(spark, table: str, meta: dict,
     if not per_file:
         return cur_sid  # nothing matched: no commit
 
-    old_dv = {_norm_path_str(f["referenced"]): f
+    old_dv = {norm_path(f["referenced"]): f
               for f in snap.delete_files
               if f.get("format") == "puffin"}
     superseded: set = set()
@@ -2677,7 +2558,7 @@ def _publish_dv_delete_snapshot(spark, table: str, meta: dict,
     for r in sorted(per_file, key=lambda r: r["file_path"]):
         p, bits = r["file_path"], bytes(r["bitmap"])
         card = int(r["card"])
-        prev = old_dv.get(_norm_path_str(p))
+        prev = old_dv.get(norm_path(p))
         if prev is not None:
             import numpy as np
             data = _read_file_bytes(prev["path"])
@@ -2687,7 +2568,7 @@ def _publish_dv_delete_snapshot(spark, table: str, meta: dict,
             merged = np.union1d(rba_deserialize(bits),
                                 rba_deserialize(body))
             bits, card = rba_serialize(merged), int(len(merged))
-            superseded.add((_norm_path_str(prev["path"]), off))
+            superseded.add((norm_path(prev["path"]), off))
         rows.append((p, bits, card))
 
     mdir = os.path.join(table, "metadata")
@@ -2747,7 +2628,7 @@ def _publish_dv_delete_snapshot(spark, table: str, meta: dict,
 
             def _hit(rec):
                 dfr = rec["data_file"]
-                return ((_norm_path_str(_normalize_path(
+                return ((norm_path(_normalize_path(
                             dfr["file_path"], table)),
                          int(dfr.get("content_offset") or -1))
                         in superseded)
@@ -2854,10 +2735,10 @@ def iceberg_delete_where(spark: SparkSession, table: str,
     if snap.delete_files:
         out = _apply_row_deletes(spark, snap, out)
     matches = (out.filter(F.expr(condition))
-               .select(_norm_uri(F.col("_ice_fp")).alias(
+               .select(F.col(tablescan.ROW_FILE).alias(
                            "file_path",
                            metadata={"parquet.field.id": 2147483546}),
-                       F.col("_ice_ri").cast("long").alias(
+                       F.col(tablescan.ROW_POS).cast("long").alias(
                            "pos",
                            metadata={"parquet.field.id": 2147483545})))
     if puffin:
@@ -2959,7 +2840,7 @@ def iceberg_rewrite_data_files(spark: SparkSession, table: str, *,
         data_manifests.append((ent, ws, recs))
 
     def _entry_path(r: dict) -> str:
-        return _norm_path_str(_normalize_path(
+        return norm_path(_normalize_path(
             r["data_file"]["file_path"], table))
 
     live: dict[str, dict] = {}
@@ -2975,21 +2856,18 @@ def iceberg_rewrite_data_files(spark: SparkSession, table: str, *,
                 "pv": dict(dfr.get("partition") or {})}
 
     # which live files do outstanding deletes touch?
-    seq_of = {_norm_path_str(f["path"]): int(f["seq"])
+    seq_of = {norm_path(f["path"]): int(f["seq"])
               for f in snap.files}
     pos_paths: set = set()
     pos_dels = [f for f in snap.delete_files if f["content"] == 1]
     parq_pos = [f for f in pos_dels
                 if f.get("format", "parquet") == "parquet"]
     if parq_pos:
-        refs = None
-        for f in parq_pos:
-            x = (spark.read.parquet(f["path"])
-                 .select(_norm_uri(F.col("file_path")).alias("_p")))
-            refs = x if refs is None else refs.unionByName(x)
-        pos_paths = {r["_p"] for r in refs.distinct().collect()}
+        refs = _pos_delete_rows(spark, parq_pos).select(
+            tablescan.DEL_FILE)
+        pos_paths = {r[0] for r in refs.distinct().collect()}
     # puffin DVs name their target in METADATA — no file read needed
-    pos_paths |= {_norm_path_str(f["referenced"]) for f in pos_dels
+    pos_paths |= {norm_path(f["referenced"]) for f in pos_dels
                   if f.get("format") == "puffin"}
     eq_dels = [f for f in snap.delete_files if f["content"] == 2]
 
@@ -3018,7 +2896,7 @@ def iceberg_rewrite_data_files(spark: SparkSession, table: str, *,
 
     # read victim rows, MOR deletes applied -> compacted rewrite
     victim_files = [f for f in snap.files
-                    if _norm_path_str(f["path"]) in victims]
+                    if norm_path(f["path"]) in victims]
     want = [f.name for f in snap.schema.fields]
     with_meta = bool(snap.delete_files)
     d = _scan_snapshot_files(spark, snap, victim_files,
@@ -3218,14 +3096,13 @@ def iceberg_changes(spark: SparkSession, table: str, *,
             all_files = [f for _, _, fs in pending_appends
                          for f in fs]
             seq_map = sorted(
-                (_norm_path_str(f["path"]), int(sq))
+                (norm_path(f["path"]), int(sq))
                 for sq, _, fs in pending_appends for f in fs)
             d = _scan_snapshot_files(spark, snap_last, all_files,
                                      with_meta=True)
             m = local_df(spark, seq_map, "_cf string, _cseq int")
-            d = (d.withColumn("_np", _norm_uri(F.col("_ice_fp")))
-                 .join(F.broadcast(m),
-                       F.col("_np") == F.col("_cf"), "left"))
+            d = d.join(F.broadcast(m),
+                       F.col(tablescan.ROW_FILE) == F.col("_cf"), "left")
             out_parts.append(d.select(
                 *[F.col(c) for c in want],
                 F.lit("insert").alias("_change_type"),
@@ -3285,12 +3162,12 @@ def iceberg_changes(spark: SparkSession, table: str, *,
         pos_new = [d for d in new_dels if d["content"] == 1]
         eq_new = [d for d in new_dels if d["content"] == 2]
         if pos_new and prev is not None:
-            dels = _pos_delete_rows(spark, pos_new) \
-                .select("_dp", "_dpos")
-            refp = {r["_dp"]
-                    for r in dels.select("_dp").distinct().collect()}
+            dels = _pos_delete_rows(spark, pos_new).select(
+                tablescan.DEL_FILE, tablescan.DEL_POS)
+            refp = {r[0] for r in dels.select(tablescan.DEL_FILE)
+                    .distinct().collect()}
             ref_files = [f for p, f in sorted(prev_files.items())
-                         if _norm_path_str(p) in refp]
+                         if norm_path(p) in refp]
             if ref_files:
                 base = _scan_snapshot_files(spark, prev, ref_files,
                                             with_meta=True)
@@ -3298,11 +3175,9 @@ def iceberg_changes(spark: SparkSession, table: str, *,
                     spark, _dc.replace(prev, files=ref_files,
                                        delete_files=prev_dels),
                     base)
-                j = base.join(
-                    dels,
-                    (base["_ice_np"] == dels["_dp"])
-                    & (base["_ice_ri"] == dels["_dpos"]), "inner")
-                out_parts.append(_tag(j, "delete", seq))
+                out_parts.append(_tag(
+                    tablescan.join_positions(base, dels, "inner"),
+                    "delete", seq))
         if eq_new and prev is not None:
             base = _scan_snapshot_files(spark, prev, prev.files,
                                         with_meta=True)
@@ -3313,11 +3188,9 @@ def iceberg_changes(spark: SparkSession, table: str, *,
                 groups[tuple(f["equality_ids"])].append(f)
             for ids, fs in sorted(groups.items()):
                 names = [by_id[i] for i in ids]
-                keys = None
-                for f in fs:
-                    x = spark.read.parquet(f["path"]) \
-                        .select(*[F.col(n) for n in names])
-                    keys = x if keys is None else keys.unionByName(x)
+                keys = tablescan.union_all([
+                    spark.read.parquet(f["path"]).select(*names)
+                    for f in fs])
                 keys = keys.distinct().select(
                     *[F.col(n).alias(f"_k_{n}") for n in names])
                 cond = None
@@ -3336,14 +3209,7 @@ def iceberg_changes(spark: SparkSession, table: str, *,
            T.StructField("_commit_seq", T.IntegerType())])
     if not out_parts:
         return local_df(spark, [], extra)
-    out = out_parts[0]
-    for d in out_parts[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def _norm_path_str(p: str) -> str:
-    return re.sub("^file:/+", "/", p)
+    return tablescan.union_all(out_parts)
 
 
 def _publish_metadata_change(spark: SparkSession, table: str,
